@@ -146,13 +146,8 @@ object IndexLifecycle {
     * one empty file per epoch at the index root (underscore-prefixed:
     * invisible to Spark's file listing) and survive compact/refit
     * (republish carries them over). */
-  def epochOnce(idxDir: String, epoch: Long)(append: => Unit): Unit = {
-    val m = s"$idxDir/_GRAFT_EPOCH_$epoch"
-    if (LakeFs.isFile(m)) return
-    append
-    LakeFs.mkdirs(idxDir) // first-ever append may create it
-    LakeFs.write(m, "")
-  }
+  def epochOnce(idxDir: String, epoch: Long)(append: => Unit): Unit =
+    markerOnce(idxDir, s"_GRAFT_EPOCH_$epoch")(append)
 
   /** [[epochOnce]] scoped to one named producer: epoch ids are
     * per-query counters, so when SEVERAL streams feed one root (the
@@ -165,10 +160,18 @@ object IndexLifecycle {
       append: => Unit): Unit = {
     require(streamId.matches("[A-Za-z0-9_-]+"),
       s"streamId must be [A-Za-z0-9_-]+: '$streamId'")
-    val m = s"$idxDir/_GRAFT_EPOCH_${streamId}_$epoch"
+    markerOnce(idxDir, s"_GRAFT_EPOCH_${streamId}_$epoch")(append)
+  }
+
+  /** The marker-gated body both epoch guards share: skip if
+    * `idxDir/marker` exists, else run `append` and write the marker
+    * last. */
+  private def markerOnce(idxDir: String, marker: String)(
+      append: => Unit): Unit = {
+    val m = s"$idxDir/$marker"
     if (LakeFs.isFile(m)) return
     append
-    LakeFs.mkdirs(idxDir)
+    LakeFs.mkdirs(idxDir) // first-ever append may create it
     LakeFs.write(m, "")
   }
 

@@ -758,10 +758,6 @@ object Snapshots {
     base.filter(col(c) >= lo && col(c) <= hi)
   }
 
-  /** DESCRIBE HISTORY: one row per version directory with the
-    * protocol markers decoded — the operational surface a table
-    * format ships for inspection and debugging. Driver-side listing
-    * only (O(versions) marker stats, no data reads). */
   /** The file inventory a read of this table would scan — one row
     * per data file of the current reader window (snapshot flavor:
     * the latest version; log flavor: the whole window), clone
@@ -784,6 +780,10 @@ object Snapshots {
     }.toDF("version", "file_path", "size_bytes")
   }
 
+  /** DESCRIBE HISTORY: one row per version directory with the
+    * protocol markers decoded — the operational surface a table
+    * format ships for inspection and debugging. Driver-side listing
+    * only (O(versions) marker stats, no data reads). */
   def history(s: SparkSession, root: String): DataFrame = {
     import s.implicits._
     val byV = tags(root).toSeq.groupBy(_._2)

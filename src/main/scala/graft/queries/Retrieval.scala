@@ -410,11 +410,11 @@ object Retrieval {
   }
 
   /** Multi-format file ingestion (bones.py:32-64): loads the
-    * reference's own demo_docs directory through the
+    * generated demo corpus (sources.DemoDocs) through the
     * extension-dispatched DocLoader. Rows-only (file-system input,
     * not a lake table); format handling spec'd in RetrievalSpec. */
   val docLoadFiles: Q = Q.rowsOnly("doc_load_files") { (s, _) =>
-    graft.sources.DocLoader.load(s, "/root/reference/demo_docs")
+    graft.sources.DocLoader.load(s, graft.sources.DemoDocs.materialize())
       .orderBy(col("source"))
   }
 

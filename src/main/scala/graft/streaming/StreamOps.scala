@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 /** Structured Streaming twins of the batch time-series operators.
@@ -193,21 +194,6 @@ object StreamOps {
   final case class StatsOut(user_id: Long, n: Long, s_cents: Long,
       q_c4: Long)
 
-  /** Streaming twin of the events_anomaly STATS pass: per-user
-    * running (n, Σx, Σx²) carried across batches in exact integer
-    * cents (value has 2 dp, so Σx is cents and Σx² is 10⁻⁴ units) —
-    * integer state cannot drift however many micro-batches replay
-    * the stream, and fold order is irrelevant. Scoring (the squared
-    * z-test) joins these stats to candidate events as a periodic
-    * batch step — the standard "maintain stats online, score on
-    * demand" split for anomaly detection over an unbounded stream.
-    * After a full replay, the last emission per user equals the
-    * batch aggregate bit-exactly (StreamingSpec).
-    *
-    * Bounds: state is three longs per user (O(1)); Σx² in 10⁻⁴ units
-    * stays under 2⁶³ up to ~10⁹ events per user at this value range —
-    * beyond that, shard the per-user state by day the way a real
-    * deployment windows its stats. */
   /** One valued event for the EWMA fold. */
   final case class EwmaMsg(user_id: Long, event_id: Long, tsMicros: Long,
       value: Double)
@@ -469,6 +455,21 @@ object StreamOps {
       }
   }
 
+  /** Streaming twin of the events_anomaly STATS pass: per-user
+    * running (n, Σx, Σx²) carried across batches in exact integer
+    * cents (value has 2 dp, so Σx is cents and Σx² is 10⁻⁴ units) —
+    * integer state cannot drift however many micro-batches replay
+    * the stream, and fold order is irrelevant. Scoring (the squared
+    * z-test) joins these stats to candidate events as a periodic
+    * batch step — the standard "maintain stats online, score on
+    * demand" split for anomaly detection over an unbounded stream.
+    * After a full replay, the last emission per user equals the
+    * batch aggregate bit-exactly (StreamingSpec).
+    *
+    * Bounds: state is three longs per user (O(1)); Σx² in 10⁻⁴ units
+    * stays under 2⁶³ up to ~10⁹ events per user at this value range —
+    * beyond that, shard the per-user state by day the way a real
+    * deployment windows its stats. */
   def statsState(s: SparkSession, msgs: Dataset[StatMsg]): Dataset[StatsOut] = {
     import s.implicits._
     msgs
@@ -510,6 +511,73 @@ object StreamOps {
     *
     * Bounds: state is O(events per user-hour) — the data-rate bound
     * every trailing-window stream carries; eviction keeps it tight. */
+  def rollingState(s: SparkSession, events: Dataset[RollMsg]): Dataset[RollOut] = {
+    import s.implicits._
+    val hour = 3600000000L
+    events
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState[RollState, RollOut](
+        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+        (user: Long, msgs: Iterator[RollMsg], state: GroupState[RollState]) =>
+          val st = state.getOption.getOrElse(RollState(Array.empty, Array.empty))
+          var ts = st.ts.toVector
+          var cents = st.cents.toVector
+          val out = scala.collection.mutable.ArrayBuffer.empty[RollOut]
+          val arr = msgs.toArray.sortBy(m => (m.tsMicros, m.event_id))
+          var i = 0
+          while (i < arr.length) {
+            var j = i
+            while (j < arr.length && arr(j).tsMicros == arr(i).tsMicros) j += 1
+            val t = arr(i).tsMicros
+            (i until j).foreach { x =>
+              ts :+= arr(x).tsMicros; cents :+= arr(x).valueCents
+            }
+            val cut = ts.indexWhere(_ >= t - hour) match {
+              case -1 => ts.length
+              case c  => c
+            }
+            ts = ts.drop(cut); cents = cents.drop(cut)
+            val n = ts.length.toLong
+            val sum = cents.sum
+            (i until j).foreach(x => out += RollOut(user, arr(x).event_id, n, sum))
+            i = j
+          }
+          state.update(RollState(ts.toArray, cents.toArray))
+          out.iterator
+      }
+  }
+
+  /** The one sink every ingest twin below rides: an append-mode
+    * foreachBatch query checkpointed at `ckpt`, handing `fn` each
+    * micro-batch as a plain DataFrame with its epoch id. foreachBatch
+    * re-runs a failed batch with the SAME epoch id, which is what
+    * epochOnce and emitEpoch key on; the checkpoint is what makes a
+    * restarted twin resume at its next epoch, so every twin keeps its
+    * own, stable location. */
+  private def epochSink(src: DataFrame, ckpt: String)(
+      fn: (DataFrame, Long) => Unit): StreamingQuery =
+    src.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
+        fn(batch.toDF(), epoch)
+      }
+      .start()
+
+  /** Epoch-keyed idempotent emit — the foreachBatch sink discipline:
+    * output is partitioned by the micro-batch epoch and written with
+    * DYNAMIC partition overwrite, so a replayed epoch (foreachBatch
+    * re-runs a failed batch with the same id) replaces its own
+    * partition and every other epoch's output is untouched. Each pair
+    * surfaces in exactly one epoch (the one its later side arrived
+    * in), so the union over partitions is duplicate-free. Also the
+    * substring doc store's writer. */
+  private def emitEpoch(pairs: DataFrame, epoch: Long, outDir: String): Unit =
+    pairs.withColumn("epoch", lit(epoch))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("epoch").parquet(outDir)
+
   /** Streaming twin of the dedup_incremental INGEST — the
     * queries.Dedup "100 TB/day" claim is a streaming claim, and this
     * is its shape: a stream of new (doc_id, text) docs drives a
@@ -540,13 +608,8 @@ object StreamOps {
     * matrix. */
   def shingleIngest(s: SparkSession, docs: DataFrame, indexDir: String,
       outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", outDir + "_ckpt")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        shingleIngestBatch(s, batch.toDF(), epoch, indexDir, outDir)
-      }
-      .start()
+    epochSink(docs, outDir + "_ckpt")(
+      shingleIngestBatch(s, _, _, indexDir, outDir))
 
   /** One shingle-ingest micro-batch — factored out so the retry spec
     * can replay an epoch directly. */
@@ -556,22 +619,41 @@ object StreamOps {
     graft.operators.IndexLifecycle.epochOnce(indexDir, epoch) {
       graft.operators.ShingleIndex.append(bsh, indexDir)
     }
-    val ids = broadcast(bsh.select(col("doc_id")).distinct())
-    emitEpoch(graft.queries.Dedup.shingleBatchPairs(s, indexDir,
-        _.join(ids, Seq("doc_id"), "left_semi"),
-        _.join(ids, Seq("doc_id"), "left_anti")),
-      epoch, outDir)
+    emitEpoch(shingleBatchPairsOf(s, bsh, indexDir), epoch, outDir)
     bsh.unpersist()
     ()
   }
 
-  /** Epoch-keyed idempotent pair emit — the foreachBatch sink
-    * discipline: output is partitioned by the micro-batch epoch and
-    * written with DYNAMIC partition overwrite, so a replayed epoch
-    * (foreachBatch re-runs a failed batch with the same id) replaces
-    * its own partition and every other epoch's output is untouched.
-    * Each pair surfaces in exactly one epoch (the one its later side
-    * arrived in), so the union over partitions is duplicate-free. */
+  /** The batch-involved near-dup pairs of the shingled micro-batch
+    * `bsh` against the maintained index — Dedup.shingleBatchPairs with
+    * batch membership as a broadcast semi/anti join on its id frame.
+    * Shared by the shingle, clean and cluster ingests. */
+  private def shingleBatchPairsOf(s: SparkSession, bsh: DataFrame,
+      indexDir: String): DataFrame = {
+    val ids = broadcast(bsh.select(col("doc_id")).distinct())
+    graft.queries.Dedup.shingleBatchPairs(s, indexDir,
+      _.join(ids, Seq("doc_id"), "left_semi"),
+      _.join(ids, Seq("doc_id"), "left_anti"))
+  }
+
+  /** Append the shingled micro-batch `bsh` to the index at `indexDir`
+    * under epochOnce — or, while no index exists yet, BUILD it from
+    * the first non-empty batch (freezing the stop list there, the
+    * dedup_incremental contract; refreshing it is
+    * ShingleIndex.compact). Returns whether the index exists now: a
+    * stream whose batches have all been empty has none to read. */
+  private def appendOrBuildShingles(s: SparkSession, bsh: DataFrame,
+      epoch: Long, indexDir: String): Boolean = {
+    import graft.operators.{IndexLifecycle, LakeFs, ShingleIndex}
+    val built = LakeFs.exists(s"$indexDir/shingles")
+    if (built || !bsh.isEmpty)
+      IndexLifecycle.epochOnce(indexDir, epoch) {
+        if (built) ShingleIndex.append(bsh, indexDir)
+        else ShingleIndex.build(s, bsh, indexDir)
+      }
+    LakeFs.exists(s"$indexDir/shingles")
+  }
+
   /** Streaming ingest into the mergeable grid-histogram index
     * (operators.HistIndex): each micro-batch's bucket counts append
     * as ONE committed version under IndexLifecycle.epochOnce (a
@@ -583,18 +665,13 @@ object StreamOps {
     * a version is at most |grid| rows whatever the batch size. */
   def histIngest(s: SparkSession, values: DataFrame, width: Long,
       root: String): org.apache.spark.sql.streaming.StreamingQuery =
-    values.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", root + "_ckpt")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        val counts = graft.operators.HistIndex
-          .bucketCounts(batch.toDF(), width)
-        if (!counts.isEmpty)
-          graft.operators.IndexLifecycle.epochOnce(root, epoch) {
-            graft.operators.Snapshots.publishAppend(counts, root)
-          }
-      }
-      .start()
+    epochSink(values, root + "_ckpt") { (batch, epoch) =>
+      val counts = graft.operators.HistIndex.bucketCounts(batch, width)
+      if (!counts.isEmpty)
+        graft.operators.IndexLifecycle.epochOnce(root, epoch) {
+          graft.operators.Snapshots.publishAppend(counts, root)
+        }
+    }
 
   /** Streaming QUANTILE monitor over the maintained grid-histogram
     * index — the READ-path twin [[histIngest]] lacked (r14 #8): each
@@ -617,23 +694,18 @@ object StreamOps {
   def histQuantileIngest(s: SparkSession, values: DataFrame, width: Long,
       root: String, outDir: String, ps: Seq[Int])
       : org.apache.spark.sql.streaming.StreamingQuery =
-    values.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", root + "_qckpt")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        val counts = graft.operators.HistIndex
-          .bucketCounts(batch.toDF(), width)
-        if (!counts.isEmpty) {
-          graft.operators.IndexLifecycle.epochOnceFor(root, "histq",
-            epoch) {
-            graft.operators.Snapshots.publishAppend(counts, root)
-          }
-          emitEpoch(
-            graft.operators.HistIndex.quantiles(s, root, width, ps),
-            epoch, outDir)
+    epochSink(values, root + "_qckpt") { (batch, epoch) =>
+      val counts = graft.operators.HistIndex.bucketCounts(batch, width)
+      if (!counts.isEmpty) {
+        graft.operators.IndexLifecycle.epochOnceFor(root, "histq",
+          epoch) {
+          graft.operators.Snapshots.publishAppend(counts, root)
         }
+        emitEpoch(
+          graft.operators.HistIndex.quantiles(s, root, width, ps),
+          epoch, outDir)
       }
-      .start()
+    }
 
   /** Streaming WINSORIZED-metric monitor — q_winsor_mean's robust
     * mean maintained over an unbounded stream at HistIndex grid
@@ -656,23 +728,18 @@ object StreamOps {
   def winsorIngest(s: SparkSession, rows: DataFrame, width: Long,
       root: String, outDir: String, pct: Int = 99)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", root + "_wckpt")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        val stats = graft.operators.HistIndex
-          .armBucketStats(batch.toDF(), width)
-        if (!stats.isEmpty) {
-          graft.operators.IndexLifecycle.epochOnceFor(root, "winsor",
-            epoch) {
-            graft.operators.Snapshots.publishAppend(stats, root)
-          }
-          emitEpoch(
-            graft.operators.HistIndex.winsorMeans(s, root, width, pct),
-            epoch, outDir)
+    epochSink(rows, root + "_wckpt") { (batch, epoch) =>
+      val stats = graft.operators.HistIndex.armBucketStats(batch, width)
+      if (!stats.isEmpty) {
+        graft.operators.IndexLifecycle.epochOnceFor(root, "winsor",
+          epoch) {
+          graft.operators.Snapshots.publishAppend(stats, root)
         }
+        emitEpoch(
+          graft.operators.HistIndex.winsorMeans(s, root, width, pct),
+          epoch, outDir)
       }
-      .start()
+    }
 
   /** Streaming A/B experiment monitor — the LIVE dashboard twin of
     * the q_srm + q_welch_ttest readout pair: per-arm power sums
@@ -694,26 +761,21 @@ object StreamOps {
   def abMonitorIngest(s: SparkSession, rows: DataFrame,
       root: String, outDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", root + "_abckpt")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        val b = batch.toDF()
-        if (!b.isEmpty) {
-          val part = b.groupBy(col("arm"))
-            .agg(count(lit(1)).as("n"), sum(col("y")).as("sy"),
-              sum(col("y").cast("decimal(19,0)")
-                * col("y").cast("decimal(19,0)"))
-                .cast("decimal(38,0)").as("syy"))
-          graft.operators.IndexLifecycle.epochOnceFor(root, "abmon",
-            epoch) {
-            graft.operators.Snapshots.publishAppend(part, root)
-          }
-          emitEpoch(abReadoutOf(
-            graft.operators.Snapshots.readLog(s, root)), epoch, outDir)
+    epochSink(rows, root + "_abckpt") { (b, epoch) =>
+      if (!b.isEmpty) {
+        val part = b.groupBy(col("arm"))
+          .agg(count(lit(1)).as("n"), sum(col("y")).as("sy"),
+            sum(col("y").cast("decimal(19,0)")
+              * col("y").cast("decimal(19,0)"))
+              .cast("decimal(38,0)").as("syy"))
+        graft.operators.IndexLifecycle.epochOnceFor(root, "abmon",
+          epoch) {
+          graft.operators.Snapshots.publishAppend(part, root)
         }
+        emitEpoch(abReadoutOf(
+          graft.operators.Snapshots.readLog(s, root)), epoch, outDir)
       }
-      .start()
+    }
 
   /** The monitor's read path: merged per-arm power sums → the
     * guardrail-first readout row. Shared by the streaming emit and
@@ -767,56 +829,50 @@ object StreamOps {
   def bootCiIngest(s: SparkSession, rows: DataFrame, salt: String,
       root: String, outDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", root + "_ckpt")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        import graft.functions.PoissonBoot
-        val b = batch.toDF()
-        if (!b.isEmpty) {
-          val fanned = b.select(col("k"), col("v"),
-            explode(sequence(lit(0L), lit(PoissonBoot.B - 1L))).as("b"))
-          val w = PoissonBoot.weight(
-            PoissonBoot.uniform(salt, col("k"), col("b")))
-          val part = fanned.select(col("b"), col("v"), w.as("w"))
-            .groupBy(col("b"))
-            .agg(sum(col("w") * col("v")).as("swx"), sum(col("w")).as("sw"),
-              sum(col("v")).as("sv"), count(lit(1)).as("n"))
-          graft.operators.IndexLifecycle.epochOnce(root, epoch) {
-            graft.operators.Snapshots.publishAppend(part, root)
-          }
-          // merged replicate sums (64 rows whatever the history) →
-          // the exact q_bootstrap_ci rank arithmetic
-          val merged = graft.operators.Snapshots.readLog(s, root)
-            .groupBy(col("b"))
-            .agg(sum(col("swx")).as("swx"), sum(col("sw")).as("sw"),
-              sum(col("sv")).as("sv"), sum(col("n")).as("n"))
-            .cache()
-          val m = merged.filter(col("sw") > 0).select(col("b"),
-            (round(col("swx").cast("double") / col("sw"), 6) + 0).as("mb"))
-          val r = m.select(col("mb"),
-            row_number().over(org.apache.spark.sql.expressions.Window
-              .orderBy(col("mb"), col("b"))).cast("long").as("rn"),
-            count(lit(1)).over(org.apache.spark.sql.expressions.Window
-              .partitionBy()).as("nb"))
-          val fullM = merged.agg(
-            (sum(col("n")) / lit(PoissonBoot.B.toLong)).cast("long").as("n"),
-            (round((sum(col("sv")) / lit(PoissonBoot.B.toLong))
-              .cast("double")
-              / (sum(col("n")) / lit(PoissonBoot.B.toLong)), 6) + 0)
-              .as("mean_v"))
-          val ci = r.crossJoin(broadcast(fullM))
-            .groupBy(col("n"), col("mean_v"))
-            .agg(max(col("nb")).as("b_reps"),
-              (max(when(col("rn") === 2, col("mb"))) + 0).as("ci_lo"),
-              (max(when(col("rn") === PoissonBoot.B - 1L, col("mb"))) + 0)
-                .as("ci_hi"))
-          emitEpoch(ci, epoch, outDir)
-          merged.unpersist()
-          ()
+    epochSink(rows, root + "_ckpt") { (b, epoch) =>
+      import graft.functions.PoissonBoot
+      if (!b.isEmpty) {
+        val fanned = b.select(col("k"), col("v"),
+          explode(sequence(lit(0L), lit(PoissonBoot.B - 1L))).as("b"))
+        val w = PoissonBoot.weight(
+          PoissonBoot.uniform(salt, col("k"), col("b")))
+        val part = fanned.select(col("b"), col("v"), w.as("w"))
+          .groupBy(col("b"))
+          .agg(sum(col("w") * col("v")).as("swx"), sum(col("w")).as("sw"),
+            sum(col("v")).as("sv"), count(lit(1)).as("n"))
+        graft.operators.IndexLifecycle.epochOnce(root, epoch) {
+          graft.operators.Snapshots.publishAppend(part, root)
         }
+        // merged replicate sums (64 rows whatever the history) →
+        // the exact q_bootstrap_ci rank arithmetic
+        val merged = graft.operators.Snapshots.readLog(s, root)
+          .groupBy(col("b"))
+          .agg(sum(col("swx")).as("swx"), sum(col("sw")).as("sw"),
+            sum(col("sv")).as("sv"), sum(col("n")).as("n"))
+          .cache()
+        val m = merged.filter(col("sw") > 0).select(col("b"),
+          (round(col("swx").cast("double") / col("sw"), 6) + 0).as("mb"))
+        val r = m.select(col("mb"),
+          row_number().over(org.apache.spark.sql.expressions.Window
+            .orderBy(col("mb"), col("b"))).cast("long").as("rn"),
+          count(lit(1)).over(org.apache.spark.sql.expressions.Window
+            .partitionBy()).as("nb"))
+        val fullM = merged.agg(
+          (sum(col("n")) / lit(PoissonBoot.B.toLong)).cast("long").as("n"),
+          (round((sum(col("sv")) / lit(PoissonBoot.B.toLong))
+            .cast("double")
+            / (sum(col("n")) / lit(PoissonBoot.B.toLong)), 6) + 0)
+            .as("mean_v"))
+        val ci = r.crossJoin(broadcast(fullM))
+          .groupBy(col("n"), col("mean_v"))
+          .agg(max(col("nb")).as("b_reps"),
+            (max(when(col("rn") === 2, col("mb"))) + 0).as("ci_lo"),
+            (max(when(col("rn") === PoissonBoot.B - 1L, col("mb"))) + 0)
+              .as("ci_hi"))
+        emitEpoch(ci, epoch, outDir)
+        merged.unpersist()
       }
-      .start()
+    }
 
   /** Fit the frozen baseline for [[ksDriftIngest]]: the reference
     * distribution's counts over a FIXED bucket grid (bucket =
@@ -851,48 +907,37 @@ object StreamOps {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     require(width > 0, s"ksDriftIngest: width must be > 0, got $width")
     val base = graft.operators.Snapshots.read(s, baselineRoot).cache()
-    values.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", outDir + "_ckpt")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        val bc = batch.toDF()
-          .select(expr(s"v div $width").as("bucket"))
-          .groupBy(col("bucket")).agg(count(lit(1)).as("cb"))
-        if (!bc.isEmpty) {
-          val g = base.join(bc, Seq("bucket"), "full_outer")
-            .select(col("bucket"),
-              coalesce(col("c0"), lit(0L)).as("c0"),
-              coalesce(col("cb"), lit(0L)).as("cb"))
-          // bounded band: the bucket grid is value-domain-sized
-          val w = org.apache.spark.sql.expressions.Window
-            .orderBy(col("bucket"))
-            .rowsBetween(org.apache.spark.sql.expressions
-              .Window.unboundedPreceding, 0)
-          val tot = g.agg(sum(col("c0")).as("n_base"),
-            sum(col("cb")).as("n_batch"))
-          val row = g
-            .select(col("bucket"), sum(col("c0")).over(w).as("a0"),
-              sum(col("cb")).over(w).as("ab"))
-            .crossJoin(broadcast(tot))
-            .agg(max(col("n_batch")).as("n_batch"),
-              max(col("n_base")).as("n_base"),
-              max(abs(col("ab") * col("n_base")
-                - col("a0") * col("n_batch"))).as("d_num"))
-            .select(col("n_batch"), col("n_base"), col("d_num"),
-              (round(col("d_num").cast("double")
-                / (col("n_batch").cast("double") * col("n_base")), 6) + 0)
-                .as("ks"))
-          emitEpoch(row, epoch, outDir)
-        }
+    epochSink(values, outDir + "_ckpt") { (batch, epoch) =>
+      val bc = batch.select(expr(s"v div $width").as("bucket"))
+        .groupBy(col("bucket")).agg(count(lit(1)).as("cb"))
+      if (!bc.isEmpty) {
+        val g = base.join(bc, Seq("bucket"), "full_outer")
+          .select(col("bucket"),
+            coalesce(col("c0"), lit(0L)).as("c0"),
+            coalesce(col("cb"), lit(0L)).as("cb"))
+        // bounded band: the bucket grid is value-domain-sized
+        val w = org.apache.spark.sql.expressions.Window
+          .orderBy(col("bucket"))
+          .rowsBetween(org.apache.spark.sql.expressions
+            .Window.unboundedPreceding, 0)
+        val tot = g.agg(sum(col("c0")).as("n_base"),
+          sum(col("cb")).as("n_batch"))
+        val row = g
+          .select(col("bucket"), sum(col("c0")).over(w).as("a0"),
+            sum(col("cb")).over(w).as("ab"))
+          .crossJoin(broadcast(tot))
+          .agg(max(col("n_batch")).as("n_batch"),
+            max(col("n_base")).as("n_base"),
+            max(abs(col("ab") * col("n_base")
+              - col("a0") * col("n_batch"))).as("d_num"))
+          .select(col("n_batch"), col("n_base"), col("d_num"),
+            (round(col("d_num").cast("double")
+              / (col("n_batch").cast("double") * col("n_base")), 6) + 0)
+              .as("ks"))
+        emitEpoch(row, epoch, outDir)
       }
-      .start()
+    }
   }
-
-  private def emitEpoch(pairs: DataFrame, epoch: Long, outDir: String): Unit =
-    pairs.withColumn("epoch", lit(epoch))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("epoch").parquet(outDir)
 
   /** Streaming twin of the dedup_substring_incremental ingest — the
     * substring family's shape of shingleIngest, plus the piece that
@@ -922,25 +967,15 @@ object StreamOps {
   def substringIngest(s: SparkSession, docs: DataFrame, indexDir: String,
       docStoreDir: String,
       outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", outDir + "_ckpt")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        substringIngestBatch(s, batch.toDF(), epoch, indexDir,
-          docStoreDir, outDir)
-      }
-      .start()
+    epochSink(docs, outDir + "_ckpt")(
+      substringIngestBatch(s, _, _, indexDir, docStoreDir, outDir))
 
   /** One substring-ingest micro-batch — factored out so the retry
     * spec can replay an epoch directly. */
   private[graft] def substringIngestBatch(s: SparkSession, batch: DataFrame,
       epoch: Long, indexDir: String, docStoreDir: String,
       outDir: String): Unit = {
-    batch.select(col("doc_id"), col("text"))
-      .withColumn("epoch", lit(epoch))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("epoch").parquet(docStoreDir)
+    emitEpoch(batch.select(col("doc_id"), col("text")), epoch, docStoreDir)
     val ids = broadcast(batch.select(col("doc_id")).distinct())
     // tokenized doc store covers every candidate doc: index docs
     // for the verify's far side, the just-appended batch for the
@@ -978,13 +1013,8 @@ object StreamOps {
   def vectorIngest(s: SparkSession, vecs: DataFrame, indexDir: String,
       outDir: String,
       thresh: Double): org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", outDir + "_ckpt")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        vectorIngestBatch(s, batch.toDF(), epoch, indexDir, outDir, thresh)
-      }
-      .start()
+    epochSink(vecs, outDir + "_ckpt")(
+      vectorIngestBatch(s, _, _, indexDir, outDir, thresh))
 
   /** One vector-ingest micro-batch — factored out so the retry spec
     * can replay an epoch directly. */
@@ -1017,13 +1047,7 @@ object StreamOps {
     * ingest-twin family). */
   def nbScoreIngest(s: SparkSession, docs: DataFrame, modelIdx: String,
       outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", outDir + "_ckpt")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        nbScoreBatch(s, batch.toDF(), epoch, modelIdx, outDir)
-      }
-      .start()
+    epochSink(docs, outDir + "_ckpt")(nbScoreBatch(s, _, _, modelIdx, outDir))
 
   /** One NB-scoring micro-batch — factored out so the retry spec can
     * replay an epoch directly. */
@@ -1041,14 +1065,9 @@ object StreamOps {
     * epoch-partitioned dynamic-overwrite emit. */
   def gopherIngest(s: SparkSession, docs: DataFrame,
       outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", outDir + "_ckpt")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        emitEpoch(graft.queries.Quality.gopherFrom(batch.toDF()),
-          epoch, outDir)
-      }
-      .start()
+    epochSink(docs, outDir + "_ckpt") { (batch, epoch) =>
+      emitEpoch(graft.queries.Quality.gopherFrom(batch), epoch, outDir)
+    }
 
   /** Streaming tokenization against the FROZEN tokenizer model — the
     * nbScoreIngest discipline applied to the tokenizer family: the
@@ -1063,15 +1082,10 @@ object StreamOps {
   def tokenizeIngest(s: SparkSession, docs: DataFrame, modelIdx: String,
       outDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
     val vocab = graft.operators.TokenizerIndex.loadVocabulary(s, modelIdx)
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", outDir + "_ckpt")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        emitEpoch(
-          graft.queries.Text.wordpieceStatsFrom(s, batch.toDF(), vocab),
-          epoch, outDir)
-      }
-      .start()
+    epochSink(docs, outDir + "_ckpt") { (batch, epoch) =>
+      emitEpoch(graft.queries.Text.wordpieceStatsFrom(s, batch, vocab),
+        epoch, outDir)
+    }
   }
 
   /** Streaming ingest into a versioned lake table — each micro-batch
@@ -1086,13 +1100,7 @@ object StreamOps {
     * never an O(table) rewrite. */
   def snapshotIngest(s: SparkSession, rows: DataFrame,
       root: String): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", root + "_ckpt")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        snapshotIngestBatch(batch.toDF(), epoch, root)
-      }
-      .start()
+    epochSink(rows, root + "_ckpt")(snapshotIngestBatch(_, _, root))
 
   /** LAKE-TO-LAKE streaming pipeline — the streaming materialized
     * view: tail an upstream snapshot log through the graftsnap source
@@ -1122,28 +1130,23 @@ object StreamOps {
       pipeId: Option[String] = None)(transform: DataFrame => DataFrame):
       org.apache.spark.sql.streaming.StreamingQuery = {
     val pid = pipeId.getOrElse(srcRoot.replaceAll("[^A-Za-z0-9_-]", "-"))
-    s.readStream.format("graftsnap").load(srcRoot)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"${dstRoot}_ckpt_$pid")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        graft.operators.IndexLifecycle.epochOnceFor(dstRoot, pid, epoch) {
-          // cache: the emptiness probe and the publish share ONE
-          // evaluation of the transform (an enrichment join must not
-          // run twice per batch)
-          val out = transform(batch.toDF()).cache()
-          try {
-            // an all-filtered batch publishes NOTHING (an empty
-            // version dir would poison the log's schema inference);
-            // the epoch marker still records the batch as done
-            if (!out.isEmpty)
-              graft.operators.Snapshots.publishAppend(out, dstRoot)
-            ()
-          } finally out.unpersist()
-        }
-        ()
+    epochSink(s.readStream.format("graftsnap").load(srcRoot),
+        s"${dstRoot}_ckpt_$pid") { (batch, epoch) =>
+      graft.operators.IndexLifecycle.epochOnceFor(dstRoot, pid, epoch) {
+        // cache: the emptiness probe and the publish share ONE
+        // evaluation of the transform (an enrichment join must not
+        // run twice per batch)
+        val out = transform(batch).cache()
+        try {
+          // an all-filtered batch publishes NOTHING (an empty
+          // version dir would poison the log's schema inference);
+          // the epoch marker still records the batch as done
+          if (!out.isEmpty)
+            graft.operators.Snapshots.publishAppend(out, dstRoot)
+          ()
+        } finally out.unpersist()
       }
-      .start()
+    }
   }
 
   /** One snapshot-ingest micro-batch — factored out so the retry spec
@@ -1173,18 +1176,13 @@ object StreamOps {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     require(mode == "quarantine" || mode == "drop",
       s"expectIngest mode must be quarantine|drop: '$mode'")
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"${root}_ckpt_$streamId")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        graft.operators.IndexLifecycle.epochOnceFor(root, streamId, epoch) {
-          graft.operators.Snapshots
-            .publishExpect(batch.toDF(), root, expectations, mode)
-          ()
-        }
+    epochSink(rows, s"${root}_ckpt_$streamId") { (batch, epoch) =>
+      graft.operators.IndexLifecycle.epochOnceFor(root, streamId, epoch) {
+        graft.operators.Snapshots
+          .publishExpect(batch, root, expectations, mode)
         ()
       }
-      .start()
+    }
   }
 
   /** MULTI-WRITER streaming ingest: any number of independent
@@ -1202,13 +1200,8 @@ object StreamOps {
   def snapshotIngestConcurrent(s: SparkSession, rows: DataFrame,
       root: String, streamId: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"${root}_ckpt_$streamId")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        snapshotIngestConcurrentBatch(batch.toDF(), epoch, root, streamId)
-      }
-      .start()
+    epochSink(rows, s"${root}_ckpt_$streamId")(
+      snapshotIngestConcurrentBatch(_, _, root, streamId))
 
   /** One multi-writer micro-batch — factored out for the retry spec. */
   private[graft] def snapshotIngestConcurrentBatch(batch: DataFrame,
@@ -1238,13 +1231,7 @@ object StreamOps {
     * rather than the raw append union. */
   def cdcIngest(s: SparkSession, rows: DataFrame, root: String,
       key: String): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", root + "_ckpt")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        cdcIngestBatch(batch.toDF(), epoch, root, key)
-      }
-      .start()
+    epochSink(rows, root + "_ckpt")(cdcIngestBatch(_, _, root, key))
 
   /** One CDC micro-batch — factored out so the retry spec can replay
     * an epoch directly. Empty halves publish nothing (no version
@@ -1258,42 +1245,6 @@ object StreamOps {
       val dels = batch.filter(col("_op") === "d").select(col(key))
       if (!dels.isEmpty) graft.operators.Snapshots.publishDeletes(dels, root)
     }
-  }
-
-  def rollingState(s: SparkSession, events: Dataset[RollMsg]): Dataset[RollOut] = {
-    import s.implicits._
-    val hour = 3600000000L
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[RollState, RollOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (user: Long, msgs: Iterator[RollMsg], state: GroupState[RollState]) =>
-          val st = state.getOption.getOrElse(RollState(Array.empty, Array.empty))
-          var ts = st.ts.toVector
-          var cents = st.cents.toVector
-          val out = scala.collection.mutable.ArrayBuffer.empty[RollOut]
-          val arr = msgs.toArray.sortBy(m => (m.tsMicros, m.event_id))
-          var i = 0
-          while (i < arr.length) {
-            var j = i
-            while (j < arr.length && arr(j).tsMicros == arr(i).tsMicros) j += 1
-            val t = arr(i).tsMicros
-            (i until j).foreach { x =>
-              ts :+= arr(x).tsMicros; cents :+= arr(x).valueCents
-            }
-            val cut = ts.indexWhere(_ >= t - hour) match {
-              case -1 => ts.length
-              case c  => c
-            }
-            ts = ts.drop(cut); cents = cents.drop(cut)
-            val n = ts.length.toLong
-            val sum = cents.sum
-            (i until j).foreach(x => out += RollOut(user, arr(x).event_id, n, sum))
-            i = j
-          }
-          state.update(RollState(ts.toArray, cents.toArray))
-          out.iterator
-      }
   }
 
   /** Streaming twin of corpus_clean — the COMPLETE cleaning pipeline
@@ -1340,14 +1291,8 @@ object StreamOps {
   def cleanIngest(s: SparkSession, docs: DataFrame, exactIdx: String,
       shingleIdx: String, nbModelIdx: String,
       outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", outDir + "_ckpt")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        cleanIngestBatch(s, batch.toDF(), epoch, exactIdx, shingleIdx,
-          nbModelIdx, outDir)
-      }
-      .start()
+    epochSink(docs, outDir + "_ckpt")(cleanIngestBatch(s, _, _, exactIdx,
+      shingleIdx, nbModelIdx, outDir))
 
   /** One cleaning micro-batch — factored out so the retry spec can
     * replay an epoch directly. */
@@ -1355,7 +1300,7 @@ object StreamOps {
       epoch: Long, exactIdx: String, shingleIdx: String, nbModelIdx: String,
       outDir: String): Unit = {
     import graft.queries.{Dedup, Pipeline, Text}
-    import graft.operators.{IndexLifecycle, LakeFs, ShingleIndex}
+    import graft.operators.{IndexLifecycle, LakeFs}
     val b = batch.cache()
     // stateless gates — the registered queries' own dataflow
     val lang = Text.langidFrom(b)
@@ -1413,22 +1358,13 @@ object StreamOps {
       .select(col("doc_id"))
     val bsh = Dedup.hashedShinglesOf(
       b.join(gatedIds, Seq("doc_id"), "left_semi")).cache()
-    val bootstrapped = LakeFs.exists(s"$shingleIdx/shingles")
-    if (bootstrapped || !bsh.isEmpty)
-      IndexLifecycle.epochOnce(shingleIdx, epoch) {
-        if (bootstrapped) ShingleIndex.append(bsh, shingleIdx)
-        else ShingleIndex.build(s, bsh, shingleIdx)
-      }
     val pairs =
-      if (!LakeFs.exists(s"$shingleIdx/shingles")) {
+      if (appendOrBuildShingles(s, bsh, epoch, shingleIdx))
+        shingleBatchPairsOf(s, bsh, shingleIdx)
+      else {
         // nothing gated yet anywhere — no index, no candidates
         import s.implicits._
         Seq.empty[(Long, Long, Double)].toDF("doc_a", "doc_b", "jaccard")
-      } else {
-        val ids = broadcast(bsh.select(col("doc_id")).distinct())
-        Dedup.shingleBatchPairs(s, shingleIdx,
-          _.join(ids, Seq("doc_id"), "left_semi"),
-          _.join(ids, Seq("doc_id"), "left_anti"))
       }
     // near-dup drops, first-wins like the exact gate: a batch doc
     // drops when it pairs with ANY earlier-indexed doc (whichever
@@ -1495,32 +1431,20 @@ object StreamOps {
     * ShingleIndex.compact repairs re-appended duplicates. */
   def clusterIngest(s: SparkSession, docs: DataFrame, indexDir: String,
       clusterDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", clusterDir + "_ckpt")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        clusterIngestBatch(s, batch.toDF(), epoch, indexDir, clusterDir)
-      }
-      .start()
+    epochSink(docs, clusterDir + "_ckpt")(
+      clusterIngestBatch(s, _, _, indexDir, clusterDir))
 
   /** One cluster-maintenance micro-batch — factored out so the retry
     * spec can replay an epoch directly. */
   private[graft] def clusterIngestBatch(s: SparkSession, batch: DataFrame,
       epoch: Long, indexDir: String, clusterDir: String): Unit = {
-    import graft.operators.{IndexLifecycle, LakeFs, ShingleIndex}
+    import graft.operators.{IndexLifecycle, LakeFs}
     import s.implicits._
     val bsh = graft.queries.Dedup.hashedShinglesOf(batch).cache()
-    val bootstrapped = LakeFs.exists(s"$indexDir/shingles")
-    if (bootstrapped || !bsh.isEmpty)
-      IndexLifecycle.epochOnce(indexDir, epoch) {
-        if (bootstrapped) ShingleIndex.append(bsh, indexDir)
-        else ShingleIndex.build(s, bsh, indexDir)
-      }
-    if (!LakeFs.exists(s"$indexDir/shingles")) { bsh.unpersist(); return }
-    val ids = broadcast(bsh.select(col("doc_id")).distinct())
-    val pairs = graft.queries.Dedup.shingleBatchPairs(s, indexDir,
-        _.join(ids, Seq("doc_id"), "left_semi"),
-        _.join(ids, Seq("doc_id"), "left_anti"))
+    if (!appendOrBuildShingles(s, bsh, epoch, indexDir)) {
+      bsh.unpersist(); return
+    }
+    val pairs = shingleBatchPairsOf(s, bsh, indexDir)
       .select(col("doc_a").as("da"), col("doc_b").as("db")).cache()
     val asg =
       if (LakeFs.exists(s"$clusterDir/assignments"))
@@ -1601,13 +1525,8 @@ object StreamOps {
     val ev = evalDocs.select(col("doc_id"), col("text")).cache()
     val evalIds = ev.select(col("doc_id")).collect()
       .map(_.getLong(0)).toSeq
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", outDir + "_ckpt")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        decontaminateBatch(s, batch.toDF(), epoch, ev, evalIds, outDir)
-      }
-      .start()
+    epochSink(docs, outDir + "_ckpt")(
+      decontaminateBatch(s, _, _, ev, evalIds, outDir))
   }
 
   /** One decontamination micro-batch — factored out so the retry
@@ -1650,14 +1569,8 @@ object StreamOps {
       fingerprint: (SparkSession, DataFrame) => DataFrame,
       hashCol: String, indexDir: String,
       outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", outDir + "_ckpt")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        fingerprintIngestBatch(s, batch.toDF(), epoch, fingerprint,
-          hashCol, indexDir, outDir)
-      }
-      .start()
+    epochSink(docs, outDir + "_ckpt")(fingerprintIngestBatch(s, _, _,
+      fingerprint, hashCol, indexDir, outDir))
 
   /** One fingerprint-ingest micro-batch — factored out so the retry
     * spec can replay an epoch directly. */
@@ -1739,13 +1652,8 @@ object StreamOps {
     * self-join. */
   def linkIngest(s: SparkSession, names: DataFrame, indexDir: String,
       outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    names.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", outDir + "_ckpt")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        linkIngestBatch(s, batch.toDF(), epoch, indexDir, outDir)
-      }
-      .start()
+    epochSink(names, outDir + "_ckpt")(
+      linkIngestBatch(s, _, _, indexDir, outDir))
 
   /** One linkage-ingest micro-batch — factored out so the retry spec
     * can replay an epoch directly. */
@@ -1804,13 +1712,8 @@ object StreamOps {
     * so every crash point lands on the same totals. */
   def triangleIngest(s: SparkSession, edges: DataFrame,
       indexDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    edges.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", indexDir + "_ckpt")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        triangleIngestBatch(s, batch.toDF(), epoch, indexDir)
-      }
-      .start()
+    epochSink(edges, indexDir + "_ckpt")(
+      triangleIngestBatch(s, _, _, indexDir))
 
   /** One triangle-ingest micro-batch — factored out so the retry
     * spec can replay an epoch directly. */
@@ -1855,13 +1758,7 @@ object StreamOps {
     * epoch-partitioned dynamic overwrite emit. */
   def spellIngest(s: SparkSession, docs: DataFrame, modelIdx: String,
       outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", outDir + "_ckpt")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        spellBatch(s, batch.toDF(), epoch, modelIdx, outDir)
-      }
-      .start()
+    epochSink(docs, outDir + "_ckpt")(spellBatch(s, _, _, modelIdx, outDir))
 
   /** One spell-correction micro-batch — factored out so the retry
     * spec can replay an epoch directly. */

@@ -8,7 +8,8 @@ class DataSourceSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("reads a document directory by short name") {
-    val df = spark.read.format("graftdocs").load("/root/reference/demo_docs")
+    val df = spark.read.format("graftdocs")
+      .load(graft.sources.DemoDocs.materialize())
     val rows = df.collect()
     assert(rows.nonEmpty)
     val demo = rows.find(_.getAs[String]("source").endsWith("demo.txt")).get
@@ -17,8 +18,8 @@ class DataSourceSpec extends AnyFunSuite {
   }
 
   test("column pruning reaches the scan") {
-    val df = spark.read.format("graftdocs").load("/root/reference/demo_docs")
-      .select("n_chars")
+    val df = spark.read.format("graftdocs")
+      .load(graft.sources.DemoDocs.materialize()).select("n_chars")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("columns=n_chars"), plan)
     assert(df.collect().map(_.getLong(0)).sum > 0)

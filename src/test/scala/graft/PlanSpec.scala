@@ -805,7 +805,7 @@ class PlanSpec extends AnyFunSuite {
     // path outside this list) fails the sweep by construction.
     val allowedRoots = Seq(
       "/root/testdata/",        // the parquet inputs
-      "/root/reference/",       // doc_load_files' declared demo corpus
+      "/tmp/graft_demo/",       // doc_load_files' generated demo corpus
       "/tmp/graft_mirror/",     // sources.Tables row-group mirror
       "/tmp/graft_sinks/",      // sink lifecycle lake roots
       "/tmp/graft_sqlcat_lake", // SQL-catalog lifecycle lake

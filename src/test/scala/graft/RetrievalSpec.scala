@@ -64,7 +64,7 @@ class RetrievalSpec extends AnyFunSuite {
     val demo = rows.find(_.getAs[String]("source").endsWith("demo.txt"))
     assert(demo.isDefined)
     assert(demo.get.getAs[String]("format") == "txt")
-    assert(demo.get.getAs[Long]("n_chars") > 1000) // demo.txt is ~3.4 KB
+    assert(demo.get.getAs[Long]("n_chars") > 1000) // demo.txt is ~3 KB
     assert(demo.get.getAs[String]("text").nonEmpty)
   }
 

@@ -1097,4 +1097,37 @@ class StreamingSpec extends AnyFunSuite {
     assert(got.contains(999999L) && !got(999999L)._3,
       "the planted bullet doc must fail bullet_ok through the stream")
   }
+
+  test("foreachBatch twin restart: a restarted gopherIngest resumes on its own checkpoint at the next epoch") {
+    import spark.implicits._
+    val srcDir = Files.createTempDirectory("graft-restart-src").toString
+    val outDir = "/tmp/graft_gopher_restart_out"
+    Seq(outDir, outDir + "_ckpt").foreach(graft.operators.LakeFs.rmTree)
+    val docs = Tables.documents(spark, sf)
+      .select(col("doc_id"), col("text"))
+      .orderBy(col("doc_id")).limit(20)
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    val (first, second) = docs.splitAt(12)
+    def land(part: Seq[(Long, String)]): Unit =
+      part.toDF("doc_id", "text").coalesce(1)
+        .write.mode("append").parquet(srcDir)
+    def run(): Unit = {
+      val src = spark.readStream.schema(docs.toDF("doc_id", "text").schema)
+        .parquet(srcDir)
+      val q = StreamOps.gopherIngest(spark, src, outDir)
+      try q.processAllAvailable() finally q.stop()
+    }
+    land(first); run()
+    land(second); run()
+    val epochs = graft.operators.LakeFs.list(outDir)
+      .map(_.getPath.getName).filter(_.startsWith("epoch=")).toSet
+    assert(epochs == Set("epoch=0", "epoch=1"),
+      s"the restart must reuse the checkpoint, not replay: $epochs")
+    def idsAt(e: Int) = spark.read.parquet(outDir)
+      .filter(col("epoch") === e).select(col("doc_id"))
+      .collect().map(_.getLong(0)).toSet
+    assert(idsAt(0) == first.map(_._1).toSet)
+    assert(idsAt(1) == second.map(_._1).toSet,
+      "epoch 1 must hold only the docs added after the restart")
+  }
 }
