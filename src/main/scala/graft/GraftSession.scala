@@ -68,24 +68,22 @@ object GraftSession {
     * the profile for arbitrary local data. */
   def local(cpus: Int): SparkSession = build(s"local[$cpus]", cpus)
 
-  /** The Bench/Verify/TimeQuery profile: `local` plus scan splits
+  /** The Bench/Verify/Profile session: `local` plus scan splits
     * sized to the testdata mirror's 256 KB row groups (see the
     * scaladoc) and a 1 MB WRITE-side `parquet.block.size` so sink
     * outputs and index layouts written during these runs stay
     * splittable when read back at testdata scale. */
   def localBench(cpus: Int): SparkSession = {
     val s = local(cpus)
-    // Split size is env-tunable for A/B. r17 measured a finer
-    // 64 KB/64 KB split+row-group profile against this 512 KB/256 KB
-    // one (the documents/embeddings scan stage is only 2-3 tasks
-    // here): the dedup/corpus family was FLAT — its scan stage is
-    // ~0.5 s of a 4 s query post-HashedGrams — while every
-    // sub-second row paid task-scheduling overhead (text_jsd 1.21 →
-    // 1.47 s, vec_quantize_int8 0.50 → 0.69 s), a net loss over 250
-    // queries. The coarse profile stays; at sf1+ the same tables are
-    // 10x bigger and split 10x wider with no knob change.
-    s.conf.set("spark.sql.files.maxPartitionBytes",
-      sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", (512 * 1024).toString))
+    // r17 measured a finer 64 KB/64 KB split+row-group profile
+    // against this 512 KB/256 KB one (the documents/embeddings scan
+    // stage is only 2-3 tasks here): the dedup/corpus family was
+    // FLAT — its scan stage is ~0.5 s of a 4 s query post-HashedGrams
+    // — while every sub-second row paid task-scheduling overhead
+    // (text_jsd 1.21 → 1.47 s, vec_quantize_int8 0.50 → 0.69 s), a
+    // net loss over 250 queries. The coarse profile stays; at sf1+ the
+    // same tables are 10x bigger and split 10x wider.
+    s.conf.set("spark.sql.files.maxPartitionBytes", 512L * 1024)
     s.sparkContext.hadoopConfiguration
       .setInt("parquet.block.size", 1024 * 1024)
     s

@@ -35,7 +35,7 @@ object Verify {
       // Query builders cache intermediates (shingle sets, signatures,
       // embedded corpora) and by contract leave cleanup to the caller
       // — a builder can't unpersist a cache its caller hasn't acted on
-      // yet. Bench/TimeQuery do the same between queries.
+      // yet. Bench and Profile do the same between queries.
       spark.catalog.clearCache()
     }
     // Escaping lives in OracleJson (shared with the no-Spark dump main

@@ -566,13 +566,13 @@ object Binary {
   object VideoCodec {
 
     // Per-thread codec handles (guide §4.5 — initialize heavyweight
-    // state once per task, not per row): the probe decomposition
-    // (tools/MmProbe) showed the tiny planted clips' cost dominated
-    // by per-call ImageIO service lookups and writer/reader
-    // construction, not pixels. Executor task threads are reused, so
-    // a ThreadLocal amortizes the handle across every clip the
-    // thread ever touches; a handle that throws is dropped (remove)
-    // so a poisoned instance can't leak into the next row.
+    // state once per task, not per row): the r17 noop-sink
+    // decomposition (OPTIMIZATION_r17.md §5) showed the tiny planted
+    // clips' cost dominated by per-call ImageIO service lookups and
+    // writer/reader construction, not pixels. Executor task threads
+    // are reused, so a ThreadLocal amortizes the handle across every
+    // clip the thread ever touches; a handle that throws is dropped
+    // (remove) so a poisoned instance can't leak into the next row.
     private val GifGrays = Array.tabulate(256)(_.toByte)
     private val GifCm = new java.awt.image.IndexColorModel(
       8, 256, GifGrays, GifGrays, GifGrays)

@@ -12,7 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * sets, sketch signatures, embedded corpora). A builder cannot
   * unpersist them itself — the caller hasn't run an action yet — so
   * CALLERS own cleanup: run the action, then
-  * `spark.catalog.clearCache()`. Bench, Verify, TimeQuery, and the
+  * `spark.catalog.clearCache()`. Bench, Verify, Profile, and the
   * specs all do this between queries; a long-lived interactive
   * session that skips it accumulates cached partitions. */
 final case class Q(

@@ -514,14 +514,11 @@ object SnapshotStreamReaderFactory {
     * trips at lake scale): every type the graftsnap subset allows has
     * a vectorized updater, so the only disqualifier is an empty
     * projection — count-only scans keep the row reader's
-    * zero-page-read fast path. `graft.columnar=false` (system
-    * property) or `.option("columnar", "false")` force the row path
-    * (the parity/bench A-B knob). */
+    * zero-page-read fast path. `.option("columnar", "false")` forces
+    * the row path, the parity reference the specs compare against. */
   private[sources] def columnarOk(required: StructType,
       option: Option[String]): Boolean =
-    required.nonEmpty &&
-      !option.contains("false") &&
-      System.getProperty("graft.columnar", "true") != "false"
+    required.nonEmpty && !option.contains("false")
 }
 
 class SnapshotStreamReaderFactory(required: StructType,

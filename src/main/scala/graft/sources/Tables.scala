@@ -30,28 +30,25 @@ object Tables {
     * preserved: single-task write, no shuffle — bytes identical,
     * layout finer), and every later read scans the mirror in
     * parallel. The mirror key embeds the source (size, mtime), so a
-    * regenerated testdata table self-invalidates; GRAFT_NO_MIRROR=1
-    * opts out (the A/B knob the bench comparison uses). DuckDB
-    * oracles keep reading the ORIGINAL files — same rows either way. */
+    * regenerated testdata table self-invalidates. DuckDB oracles
+    * keep reading the ORIGINAL files — same rows either way. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(resolve(spark, dir, name))
 
   private def resolve(spark: SparkSession, dir: String,
       name: String): String = {
     val srcPath = s"$dir/$name.parquet"
-    if (sys.env.contains("GRAFT_NO_MIRROR")) return srcPath
     val src = new java.io.File(srcPath)
     if (!src.isFile || src.length < MirrorThreshold) return srcPath
     val sane = dir.replaceAll("/+$", "").replaceAll("[^a-zA-Z0-9]", "_")
-    // Row-group size is env-tunable for A/B: splits can only land on
-    // row-group boundaries, so the GROUP size — not maxPartitionBytes
-    // — is the scan-parallelism floor (256 KB groups cap the 594 KB
-    // documents table at 2-3 scan tasks). r17 A/B'd a 64 KB profile:
-    // flat on the heavy families, a per-task-overhead loss on the
-    // sub-second rows — 256 KB stays (see GraftSession.localBench).
-    // The block size is part of the mirror key so a knob change
-    // self-invalidates.
-    val block = sys.env.getOrElse("GRAFT_MIRROR_BLOCK", "262144").toInt
+    // Splits can only land on row-group boundaries, so the GROUP size
+    // — not maxPartitionBytes — is the scan-parallelism floor (256 KB
+    // groups cap the 594 KB documents table at 2-3 scan tasks). r17
+    // A/B'd a 64 KB profile: flat on the heavy families, a
+    // per-task-overhead loss on the sub-second rows — 256 KB stays
+    // (see GraftSession.localBench). The block size is part of the
+    // mirror key so a change to it self-invalidates.
+    val block = 262144
     val dst = new java.io.File(
       s"/tmp/graft_mirror/$sane/$name-${src.length}-${src.lastModified}-b$block")
     if (!dst.isDirectory) synchronized {
