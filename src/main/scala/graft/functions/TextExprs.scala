@@ -292,19 +292,20 @@ object PolyWindowHashes {
   * order dedup matches array_distinct. Emits n−w+1 hashes before
   * dedup; empty when the input is shorter than n.
   *
-  * Precondition (shared with every consumer of hashedShinglesOf):
-  * the token array must be non-null-elemented — AsciiTokens
-  * (containsNull=false) is the only producer. */
+  * Input type: ARRAY<STRING> declared containsNull = false (what
+  * AsciiTokens emits) — grams over nullable elements are undefined,
+  * so a nullable array fails analysis naming hashed_grams instead of
+  * failing a task mid-stage. */
 case class HashedGrams(child: Expression, n: Int)
     extends UnaryExpression {
   require(n >= 1, s"gram width $n must be >= 1")
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == ArrayType(StringType, false) ||
-        child.dataType == ArrayType(StringType, true))
+    if (child.dataType == ArrayType(StringType, containsNull = false))
       TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"hashed_grams expects ARRAY<STRING>, got ${child.dataType.sql}")
+      "hashed_grams expects ARRAY<STRING> without null elements " +
+        s"(tokenize with graft_tokens), got ${child.dataType}")
 
   override def dataType: DataType =
     ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
@@ -332,14 +333,7 @@ object HashedGrams {
     if (m <= 0) return Array.emptyLongArray
     val toks = new Array[UTF8String](cnt)
     var i = 0
-    while (i < cnt) {
-      val t = ts.getUTF8String(i)
-      if (t == null) throw new IllegalArgumentException(
-        s"hashed_grams: null token at index $i — grams over nullable " +
-          "token arrays are undefined; tokenize with graft_tokens first")
-      toks(i) = t
-      i += 1
-    }
+    while (i < cnt) { toks(i) = ts.getUTF8String(i); i += 1 }
     var buf = new Array[Byte](64)
     val seen = new java.util.HashSet[java.lang.Long](m * 2)
     val out = new Array[Long](m)

@@ -1,5 +1,9 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
+
 /** Build-once lifecycle for maintained lake indexes (ShingleIndex,
   * SubstringIndex, IvfIndex, PqIndex, IvfPq, the PCA sidecar).
   *
@@ -174,6 +178,13 @@ object IndexLifecycle {
     LakeFs.mkdirs(idxDir) // first-ever append may create it
     LakeFs.write(m, "")
   }
+
+  /** The writer side of a declared index layout: `df`'s columns in
+    * `schema`'s order and types, so what a reader declares with
+    * `spark.read.schema(schema)` is what was written (a drifting
+    * writer would otherwise read back as silent nulls). */
+  def laidOut(df: DataFrame, schema: StructType): DataFrame =
+    df.select(schema.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
 
   /** Run `build` into a private dir and publish it at `idxDir` —
     * unless a complete index built under the SAME `key` is already

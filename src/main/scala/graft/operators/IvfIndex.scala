@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
 
 import graft.functions.VectorExprs.dot
 
@@ -51,6 +52,22 @@ import graft.functions.VectorExprs.dot
   */
 object IvfIndex {
 
+  /** The centroids layout as written (IvfPq writes the same one) —
+    * readers declare it instead of inferring it: an inferring parquet
+    * read starts a footer-reading job per load, and every probe loads
+    * both tables. */
+  val CentroidsSchema: StructType = StructType(Seq(
+    StructField("cid", IntegerType), StructField("cv", ArrayType(DoubleType))))
+
+  /** The vectors layout as written; `cid` is the partition column. */
+  val VectorsSchema: StructType = StructType(Seq(
+    StructField("vec_id", LongType), StructField("v", ArrayType(DoubleType)),
+    StructField("n2", DoubleType), StructField("cid", IntegerType)))
+
+  /** The (vec_id, v, n2, cid) vectors table of the index at `indexDir`. */
+  def vectors(spark: SparkSession, indexDir: String): DataFrame =
+    spark.read.schema(VectorsSchema).parquet(s"$indexDir/vectors")
+
   private def dist2(v: Column, cv: Column): Column =
     aggregate(zip_with(v, cv, (x, y) => (x - y) * (x - y)),
       lit(0.0), (acc, x) => acc + x)
@@ -92,16 +109,20 @@ object IvfIndex {
         "fewer training vectors than requested clusters can only " +
         "produce duplicate centroids; shrink k or grow the corpus")
     val centers = lloyd(sample, k, seed, iters = 10)
-    // repartition on cid first: otherwise every task writes a file
-    // into every cid directory (tasks x k tiny files)
-    assignTo(centers, emb).repartition(col("cid"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("cid").parquet(s"$indexDir/vectors")
+    writeVectors(assignTo(centers, emb), SaveMode.Overwrite, indexDir)
     val centRows = centers.zipWithIndex.map { case (cv, i) => (i, cv.toSeq) }
     import spark.implicits._
-    centRows.toSeq.toDF("cid", "cv")
+    IndexLifecycle.laidOut(centRows.toSeq.toDF("cid", "cv"), CentroidsSchema)
       .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/centroids")
   }
+
+  /** Write assigned (vec_id, v, n2, cid) rows in the VectorsSchema
+    * layout, repartitioned on cid first: otherwise every task writes a
+    * file into every cid directory (tasks x k tiny files). */
+  private def writeVectors(assigned: DataFrame, mode: SaveMode,
+      indexDir: String): Unit =
+    IndexLifecycle.laidOut(assigned, VectorsSchema).repartition(col("cid"))
+      .write.mode(mode).partitionBy("cid").parquet(s"$indexDir/vectors")
 
   /** Incremental append: assign a NEW batch of vectors to the
     * EXISTING quantizer and add them to the partitioned layout. The
@@ -111,9 +132,8 @@ object IvfIndex {
     * offline only when drift degrades probe recall. */
   def append(spark: SparkSession, newEmb: DataFrame,
       indexDir: String): Unit =
-    assignTo(loadCentroids(spark, indexDir), newEmb)
-      .repartition(col("cid")).write.mode(SaveMode.Append)
-      .partitionBy("cid").parquet(s"$indexDir/vectors")
+    writeVectors(assignTo(loadCentroids(spark, indexDir), newEmb),
+      SaveMode.Append, indexDir)
 
   /** Offline requantization — the refit `append` defers: re-fit the
     * coarse quantizer over the FULL appended state, re-assign every
@@ -129,14 +149,13 @@ object IvfIndex {
   def refit(spark: SparkSession, indexDir: String, k: Int,
       seed: Long = 42L): Unit =
     IndexLifecycle.republish(indexDir) { tmp =>
-      build(spark,
-        spark.read.parquet(s"$indexDir/vectors")
-          .select(col("vec_id"), col("v"), col("n2")), tmp, k, seed)
+      build(spark, vectors(spark, indexDir)
+        .select(col("vec_id"), col("v"), col("n2")), tmp, k, seed)
     }
 
   private[operators] def loadCentroids(spark: SparkSession,
       indexDir: String): Array[Array[Double]] =
-    spark.read.parquet(s"$indexDir/centroids")
+    spark.read.schema(CentroidsSchema).parquet(s"$indexDir/centroids")
       .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
       .sortBy(_._1).map(_._2)
 
@@ -291,11 +310,11 @@ object IvfIndex {
     val centers = loadCentroids(spark, indexDir)
     val probes = probeSelection(centers, queries, nprobe,
       useJoin = centers.length > LiteralCentroidMax)
-    val vectors = spark.read.parquet(s"$indexDir/vectors")
+    val vs = vectors(spark, indexDir)
       .select(col("vec_id").as("neighbor_id"), col("v").as("vc"),
         col("n2").as("nc"), col("cid"))
     graft.functions.TopK.ranked(
-      broadcast(probes).join(vectors, Seq("cid"))
+      broadcast(probes).join(vs, Seq("cid"))
         .filter(col("neighbor_id") =!= col("query_id"))
         .withColumn("cos",
           dot(col("vq"), col("vc")) / sqrt(col("nq") * col("nc"))),

@@ -42,9 +42,10 @@ object IvfPq {
     val centers = IvfIndex.lloyd(sample, kCells, seed = 42L, iters = 10)
     val books = PqIndex.fit(sample, m, kCodes)
     import spark.implicits._
-    centers.zipWithIndex.map { case (cv, i) => (i, cv.toSeq) }.toSeq
-      .toDF("cid", "cv").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/centroids")
+    IndexLifecycle.laidOut(centers.zipWithIndex
+        .map { case (cv, i) => (i, cv.toSeq) }.toSeq.toDF("cid", "cv"),
+        IvfIndex.CentroidsSchema)
+      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$indexDir/centroids")
     PqIndex.persistBooks(spark, books, s"$indexDir/codebooks")
     writeCodes(centers, books, emb, SaveMode.Overwrite, indexDir)
     (centers, books)

@@ -264,7 +264,7 @@ object Vectors {
     * so a bare >= threshold would KEEP them. */
   private[graft] def embeddingBatchPairs(s: SparkSession, idx: String,
       splitNew: DataFrame => DataFrame, thresh: Double): DataFrame = {
-    val vs = s.read.parquet(s"$idx/vectors")
+    val vs = graft.operators.IvfIndex.vectors(s, idx)
     val bat = splitNew(vs).select(col("cid"), col("vec_id").as("da"),
       col("v").as("va"), col("n2").as("na"))
     val rest = vs.select(col("cid"), col("vec_id").as("db"),

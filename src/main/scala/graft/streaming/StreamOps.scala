@@ -619,15 +619,19 @@ object StreamOps {
     graft.operators.IndexLifecycle.epochOnce(indexDir, epoch) {
       graft.operators.ShingleIndex.append(bsh, indexDir)
     }
-    emitEpoch(shingleBatchPairsOf(s, bsh, indexDir), epoch, outDir)
-    bsh.unpersist()
+    val pairs = shingleBatchPairsOf(s, bsh, indexDir)
+    emitEpoch(pairs, epoch, outDir)
+    Seq(bsh, pairs).foreach(_.unpersist())
     ()
   }
 
   /** The batch-involved near-dup pairs of the shingled micro-batch
     * `bsh` against the maintained index — Dedup.shingleBatchPairs with
     * batch membership as a broadcast semi/anti join on its id frame.
-    * Shared by the shingle, clean and cluster ingests. */
+    * Shared by the shingle, clean and cluster ingests. The result is
+    * a materialized cache (Dedup's releasedAfter): the caller
+    * unpersists it after its emit, or every epoch of a long-running
+    * twin pins one more cached frame. */
   private def shingleBatchPairsOf(s: SparkSession, bsh: DataFrame,
       indexDir: String): DataFrame = {
     val ids = broadcast(bsh.select(col("doc_id")).distinct())
@@ -1391,7 +1395,7 @@ object StreamOps {
             && coalesce(col("near_dup_drop"), lit(false)) === false)
             .as("keep")),
       epoch, outDir)
-    Seq(withIdx, flags, bsh, b).foreach(_.unpersist())
+    Seq(withIdx, flags, bsh, b, pairs).foreach(_.unpersist())
     ()
   }
 
@@ -1444,8 +1448,8 @@ object StreamOps {
     if (!appendOrBuildShingles(s, bsh, epoch, indexDir)) {
       bsh.unpersist(); return
     }
-    val pairs = shingleBatchPairsOf(s, bsh, indexDir)
-      .select(col("doc_a").as("da"), col("doc_b").as("db")).cache()
+    val batchPairs = shingleBatchPairsOf(s, bsh, indexDir)
+    val pairs = batchPairs.select(col("doc_a").as("da"), col("doc_b").as("db"))
     val asg =
       if (LakeFs.exists(s"$clusterDir/assignments"))
         s.read.parquet(s"$clusterDir/assignments")
@@ -1504,7 +1508,7 @@ object StreamOps {
         newAsg.toSeq.toDF("doc_id", "lbl").coalesce(1)
           .write.mode("append").parquet(s"$clusterDir/assignments")
     }
-    Seq(bsh, pairs, endLbl).foreach(_.unpersist())
+    Seq(bsh, batchPairs, endLbl).foreach(_.unpersist())
     ()
   }
 

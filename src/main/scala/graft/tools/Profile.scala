@@ -15,8 +15,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * which runs the query's eager jobs), action seconds (`count()`),
   * their sum, the Spark jobs started and the five slowest actions.
   * Per query it prints the final AQE plan shape of the timed action
-  * and whether the normalized slowest-action plan stayed IDENTICAL
-  * across passes — a wall-time flap over identical trees is JVM
+  * (with `emptyScans`, its scans pruned to no column) and whether
+  * the normalized slowest-action plan stayed IDENTICAL across passes — a wall-time flap over identical trees is JVM
   * state, not plan instability (the r11/r14 shingle and wedge-join
   * flaps). Plans of actions slower than 1 s go to
   * /tmp/graft_profile/<query>/pass<i>-<k>.txt, the timed action's
@@ -46,14 +46,23 @@ object Profile {
   /** Operator counts of an executed plan's final adaptive plan, the
     * only one that shows runtime exchange and stage reuse; the
     * top-level initial plan printed after it is not counted. */
-  private[graft] def shape(plan: String): Seq[(String, Int)] = {
-    val fin = plan.split("\n\\+- == Initial Plan ==", 2)(0)
+  private[graft] def shape(plan: String): Seq[(String, Int)] =
     Seq("scans" -> "Scan parquet", "exch" -> "Exchange",
       "reusedExch" -> "ReusedExchange", "shuffleStages" -> "ShuffleQueryStage",
       "bcastStages" -> "BroadcastQueryStage",
       "tableCaches" -> "TableCacheQueryStage")
-      .map { case (k, pat) => k -> pat.r.findAllIn(fin).length }
-  }
+      .map { case (k, pat) => k -> pat.r.findAllIn(finalPlan(plan)).length }
+
+  /** Scans of the final plan that read no column (`ReadSchema:
+    * struct<>`): the timed `count()` let column pruning drop every
+    * column of that table, so whatever the query computed from it
+    * (dedup_exact's window, say) never ran and the timing covers a
+    * row count. */
+  private[graft] def emptyScans(plan: String): Int =
+    "ReadSchema: struct<>".r.findAllIn(finalPlan(plan)).length
+
+  private def finalPlan(plan: String): String =
+    plan.split("\n\\+- == Initial Plan ==", 2)(0)
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Profile <query>...")
@@ -106,8 +115,10 @@ object Profile {
           actions.lastOption.filter(_ => t.ok).map(_._2))
       }
       passes.last._2.foreach { qe =>
+        val plan = qe.executedPlan.toString
         println(s"[profile] $name plan: " +
-          shape(qe.executedPlan.toString).map { case (k, n) => s"$k=$n" }.mkString(" "))
+          shape(plan).map { case (k, n) => s"$k=$n" }.mkString(" ") +
+          s" emptyScans=${emptyScans(plan)}")
         Files.writeString(Paths.get(s"$outDir/explain.txt"),
           qe.explainString(FormattedMode))
       }

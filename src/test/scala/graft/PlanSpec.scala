@@ -812,6 +812,7 @@ class PlanSpec extends AnyFunSuite {
       "/tmp/graft_warehouse",   // managed-table demos (bucketing)
       // declared frozen-model/index sidecars (build-once serving
       // state with lifecycle operators; oracles replay the model)
+      "/tmp/graft_bm25/",
       "/tmp/graft_clusters/", "/tmp/graft_ivf/", "/tmp/graft_ivfpq/",
       "/tmp/graft_nbq/", "/tmp/graft_pca/", "/tmp/graft_pq/",
       "/tmp/graft_shidx/", "/tmp/graft_spell/", "/tmp/graft_subidx/",
@@ -869,5 +870,28 @@ class PlanSpec extends AnyFunSuite {
     val pm = plan(Core.qOutlierMad.run(spark, sf))
     assert(pm.contains("BroadcastHashJoin"), pm.take(2000))
     spark.catalog.clearCache()
+  }
+
+  test("retrieval_bm25 probes the postings index: no corpus-wide aggregate over documents") {
+    // the term statistics are built once (Bm25Index); the only
+    // aggregate allowed over the documents scan is the doc_id < 5
+    // question-term distinct
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    spark.catalog.clearCache()
+    val plan = Retrieval.bm25.run(spark, sf).queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    def scans(p: org.apache.spark.sql.execution.SparkPlan, table: String) =
+      helper.collect(p) {
+        case f: FileSourceScanExec
+            if f.relation.location.rootPaths.exists(_.toString.contains(table)) => f
+      }
+    assert(scans(plan, "/tmp/graft_bm25/").nonEmpty, plan.toString.take(3000))
+    val aggs = helper.collect(plan) { case a: BaseAggregateExec => a }
+    assert(aggs.nonEmpty, plan.toString.take(3000))
+    for (a <- aggs; f <- scans(a, "documents"))
+      assert(f.metadata.getOrElse("PushedFilters", "").contains("LessThan(doc_id,5)"),
+        s"aggregate over an unfiltered documents scan:\n${a.toString.take(3000)}")
   }
 }

@@ -38,4 +38,18 @@ class ProfileSpec extends AnyFunSuite {
     val shape = Profile.shape(executedPlan("q5_multijoin")).toMap
     assert(shape("bcastStages") >= 1, shape)
   }
+
+  test("emptyScans flags a timed count() that pruned the query's work away") {
+    // Bench.timed's count() is groupBy().count() over the query: on
+    // dedup_exact column pruning drops every documents column (and
+    // with them the window); q5_multijoin's joins keep their keys
+    def countPlan(name: String): String = {
+      val c = SparkEntry.queries(name)(spark, TestSpark.sf).groupBy().count()
+      c.collect()
+      try c.queryExecution.executedPlan.toString
+      finally spark.catalog.clearCache()
+    }
+    assert(Profile.emptyScans(countPlan("dedup_exact")) >= 1)
+    assert(Profile.emptyScans(countPlan("q5_multijoin")) == 0)
+  }
 }

@@ -1,8 +1,13 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.{Retrieval, Text}
+import graft.functions.TextExprs
+import graft.operators.{Bm25Index, IndexLifecycle, IvfIndex, LakeFs}
+import graft.queries.{Retrieval, Text, Vectors}
 
 class RetrievalSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -197,5 +202,94 @@ class RetrievalSpec extends AnyFunSuite {
     assert(chunked.select("doc_id").distinct().count() == docs)
     // chunk bound: size 200 + overlap 30
     assert(chunked.filter("length(chunk) > 230").count() == 0)
+  }
+
+  /** The per-call BM25 the postings index replaced, kept as the
+    * reference: tf, dl, df and stats from four independent tokenize
+    * subtrees of `dir`'s documents, scored for every query in `qt`. */
+  private def bm25Reference(dir: String, qt: DataFrame): DataFrame = {
+    val tok = graft.sources.Tables.documents(spark, dir)
+      .select(col("doc_id"), explode(TextExprs.tokens(col("text"))).as("t"))
+    val tf = tok.groupBy(col("doc_id"), col("t"))
+      .agg(count(lit(1)).cast("double").as("tf"))
+    val dl = tok.groupBy(col("doc_id"))
+      .agg(count(lit(1)).cast("double").as("dl"))
+    val df = tok.groupBy(col("t"))
+      .agg(countDistinct(col("doc_id")).cast("double").as("df"))
+    val stats = tok.agg(
+      countDistinct(col("doc_id")).cast("double").as("n"),
+      (count(lit(1)).cast("double") / countDistinct(col("doc_id"))).as("avgdl"))
+    val idf = log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1)
+    val termScore = idf * col("tf") * 2.2 /
+      (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl")))
+    broadcast(qt).join(tf, "t")
+      .join(df, "t")
+      .join(dl, "doc_id")
+      .crossJoin(broadcast(stats))
+      .filter(col("doc_id") =!= col("query_id"))
+      .groupBy(col("query_id"), col("doc_id"))
+      .agg(sum(termScore).as("score"))
+      .withColumn("rn", row_number().over(Window
+        .partitionBy(col("query_id"))
+        .orderBy(round(col("score"), 4).desc, col("doc_id"))))
+  }
+
+  private def rankRows(ranked: DataFrame): Set[(Long, Int, Long, Double)] =
+    ranked.select(col("query_id"), col("rn"), col("doc_id"),
+        round(col("score"), 4))
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
+        r.getDouble(3))).toSet
+
+  /** The raw question terms of sf's doc_id < 5 documents. */
+  private def rawQt: DataFrame = Retrieval.questionTerms(spark, sf)
+
+  test("bm25 served from the postings index == the per-call term statistics, raw and condensed") {
+    val condQt = Retrieval.condensedQueries(spark, sf)._2
+    for ((label, qt) <- Seq("raw" -> rawQt, "condensed" -> condQt)) {
+      val want = rankRows(bm25Reference(sf, qt))
+      assert(want.map(_._1) == (0L until 5L).toSet, label)
+      val got = rankRows(Retrieval.bm25RankedFor(spark, sf, qt))
+      assert(got == want, s"$label: only index ${(got -- want).take(5)}, " +
+        s"only reference ${(want -- got).take(5)}")
+    }
+  }
+
+  test("bm25 postings follow a rewritten documents.parquet: new key, rebuilt index") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-bm25").toString
+    val idx = Vectors.sidecarDir("bm25", dir)
+    def key = IndexLifecycle.sourceKey(s"$dir/documents.parquet", "bm25-v1")
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    try {
+      docs.write.parquet(s"$dir/documents.parquet")
+      val key1 = key
+      val before = rankRows(Retrieval.bm25RankedFor(spark, dir, rawQt))
+      assert(before == rankRows(bm25Reference(dir, rawQt)))
+      // the new corpus drops every query's top hit
+      val top1 = before.filter(_._2 == 1).map(_._3).toSeq
+      docs.filter(!col("doc_id").isin(top1: _*))
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      assert(key != key1, "rewriting the source must change the index key")
+      val after = rankRows(Retrieval.bm25RankedFor(spark, dir, rawQt))
+      assert(after == rankRows(bm25Reference(dir, rawQt)))
+      assert(after != before)
+      assert(after.forall(r => !top1.contains(r._3)))
+      assert(LakeFs.readString(s"$idx/_GRAFT_INDEX_COMPLETE").map(_.trim)
+        .contains(key), "the published index must carry the new key")
+    } finally {
+      LakeFs.rmTree(idx)
+      LakeFs.rmTree(dir)
+    }
+  }
+
+  test("engine-owned index layouts read back as the schema their writer declares") {
+    // a reader that declares its schema never sees a drifted writer's
+    // columns as anything but nulls — so pin writer == declaration
+    Retrieval.bm25Postings(spark, sf)
+    val ivf = Vectors.ivfIndexOf(spark, sf)
+    for ((path, declared) <- Seq(
+        s"${Vectors.sidecarDir("bm25", sf)}/postings" -> Bm25Index.PostingsSchema,
+        s"$ivf/centroids" -> IvfIndex.CentroidsSchema,
+        s"$ivf/vectors" -> IvfIndex.VectorsSchema))
+      assert(spark.read.parquet(path).schema == declared, path)
   }
 }

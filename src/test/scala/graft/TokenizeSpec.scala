@@ -79,6 +79,18 @@ class TokenizeSpec extends AnyFunSuite {
     assert(rows(5).isNullAt(0))
   }
 
+  test("hashed_grams rejects token arrays that may hold nulls at analysis time") {
+    val nullable = spark.range(1)
+      .select(array(lit("a"), lit(null).cast("string"), lit("b")).as("ts"))
+    assert(nullable.schema("ts").dataType ==
+      org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.StringType, containsNull = true))
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      nullable.select(TextExprs.hashedGramsN(col("ts"), 2))
+    }
+    assert(e.getMessage.contains("hashed_grams"), e.getMessage)
+  }
+
   test("graft_tokens is callable from SQL via the extension") {
     val r = spark.sql("SELECT graft_tokens('Hello World 42!') AS t")
       .collect().head.getSeq[String](0)
