@@ -1,11 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow,
+  UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType,
+  StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native tokenizer for the text hot path.
@@ -328,19 +331,34 @@ object HashedGrams {
   /** shared by interpreted eval and generated code */
   def hash(ts: org.apache.spark.sql.catalyst.util.ArrayData,
       n: Int): Array[Long] = {
+    val m = ts.numElements() - n + 1
+    if (m <= 0) return Array.emptyLongArray
+    val seen = new java.util.HashSet[java.lang.Long](m * 2)
+    val out = new Array[Long](m)
+    var k = 0
+    eachGram(ts, n) { (buf, len) =>
+      // the exact kernel the xxhash64 built-in applies to STRING input
+      val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
+        buf, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, len, 42L)
+      if (seen.add(h)) { out(k) = h; k += 1 }
+    }
+    if (k == m) out else java.util.Arrays.copyOf(out, k)
+  }
+
+  /** Calls `f(buf, len)` with the bytes of each space-joined n-gram
+    * "t[i] t[i+1] ... t[i+n-1]" (concat_ws(" ", ...)) in order; the
+    * buffer is reused between calls. */
+  private[functions] def eachGram(ts: ArrayData,
+      n: Int)(f: (Array[Byte], Int) => Unit): Unit = {
     val cnt = ts.numElements()
     val m = cnt - n + 1
-    if (m <= 0) return Array.emptyLongArray
+    if (m <= 0) return
     val toks = new Array[UTF8String](cnt)
     var i = 0
     while (i < cnt) { toks(i) = ts.getUTF8String(i); i += 1 }
     var buf = new Array[Byte](64)
-    val seen = new java.util.HashSet[java.lang.Long](m * 2)
-    val out = new Array[Long](m)
-    var k = 0
     i = 0
     while (i < m) {
-      // bytes of "t[i] t[i+1] ... t[i+n-1]" — concat_ws(" ", ...)
       var len = n - 1
       var j = 0
       while (j < n) { len += toks(i + j).numBytes(); j += 1 }
@@ -354,14 +372,115 @@ object HashedGrams {
         pos += t.numBytes()
         j += 1
       }
-      // the exact kernel the xxhash64 built-in applies to STRING input
-      val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-        buf, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, len, 42L)
-      if (seen.add(h)) { out(k) = h; k += 1 }
+      f(buf, len)
       i += 1
     }
-    if (k == m) out else java.util.Arrays.copyOf(out, k)
   }
+}
+
+/** How often the most frequent space-joined word n-gram of a token
+  * array occurs, in ONE compiled pass — per doc, bit-identical to
+  * `max(c)` over `explode(gramsN(ts, n))` grouped by (doc, gram) and
+  * counted, which text_repetition computed with two shuffles per n
+  * before. The per-doc gram total, that form's `sum(c)`, is plain
+  * `size(ts) - n + 1`. 0 when the input is shorter than n; same input
+  * contract as HashedGrams. */
+case class MaxGramCount(child: Expression, n: Int) extends UnaryExpression {
+  require(n >= 1, s"gram width $n must be >= 1")
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == ArrayType(StringType, containsNull = false))
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      "max_gram_count expects ARRAY<STRING> without null elements " +
+        s"(tokenize with graft_tokens), got ${child.dataType}")
+
+  override def dataType: DataType = LongType
+  override def prettyName: String = "max_gram_count"
+
+  override def nullSafeEval(input: Any): Any = MaxGramCount.of(
+    input.asInstanceOf[ArrayData], n)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.MaxGramCount.of($c, $n);")
+
+  override protected def withNewChildInternal(
+      newChild: Expression): MaxGramCount = copy(child = newChild)
+}
+
+object MaxGramCount {
+  /** shared by interpreted eval and generated code */
+  def of(ts: ArrayData, n: Int): Long = {
+    val counts = new java.util.HashMap[UTF8String, Array[Long]]()
+    var best = 0L
+    HashedGrams.eachGram(ts, n) { (buf, len) =>
+      val g = UTF8String.fromBytes(buf, 0, len)
+      var c = counts.get(g)
+      if (c == null) { c = Array(0L); counts.put(g.copy(), c) }
+      c(0) += 1
+      if (c(0) > best) best = c(0)
+    }
+    best
+  }
+}
+
+/** (matched, score) of a token array against a token -> weight table:
+  * the count of tokens the table holds and the sum of their weights,
+  * counting repeats — per doc, bit-identical to
+  * `explode → left join(broadcast table) → groupBy(count, sum)` with
+  * the unmatched sum read as 0, in-row (no shuffle). The table is the
+  * ≤512-row NB model, so it rides inside the expression; the sum
+  * overflows loudly, as the ANSI `sum` it replaces does. */
+case class TokenWeights(child: Expression, weights: Map[String, Long])
+    extends UnaryExpression {
+
+  @transient private lazy val table: java.util.HashMap[UTF8String, java.lang.Long] = {
+    val t = new java.util.HashMap[UTF8String, java.lang.Long](weights.size * 2)
+    weights.foreach { case (k, w) => t.put(UTF8String.fromString(k), w) }
+    t
+  }
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    child.dataType match {
+      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(
+        s"token_weights expects ARRAY<STRING>, got $other")
+    }
+
+  override def dataType: DataType = StructType(Seq(
+    StructField("matched", LongType, nullable = false),
+    StructField("score", LongType, nullable = false)))
+  override def prettyName: String = "token_weights"
+  // the table, not its hundreds of entries, in plan strings
+  override def stringArgs: Iterator[Any] =
+    Iterator(child, s"${weights.size} weights")
+
+  override def nullSafeEval(input: Any): Any =
+    score(input.asInstanceOf[ArrayData])
+
+  /** shared by interpreted eval and generated code */
+  def score(ts: ArrayData): InternalRow = {
+    var matched = 0L
+    var sum = 0L
+    var i = 0
+    while (i < ts.numElements()) {
+      if (!ts.isNullAt(i)) {
+        val w = table.get(ts.getUTF8String(i))
+        if (w != null) { matched += 1; sum = Math.addExact(sum, w.longValue) }
+      }
+      i += 1
+    }
+    new GenericInternalRow(Array[Any](matched, sum))
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("tokenWeights", this)
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.score($c);")
+  }
+
+  override protected def withNewChildInternal(
+      newChild: Expression): TokenWeights = copy(child = newChild)
 }
 
 object TextExprs {
@@ -403,4 +522,15 @@ object TextExprs {
     * (see HashedGrams). */
   def hashedGramsN(ts: org.apache.spark.sql.Column, n: Int): Column =
     GraftBridge.column(HashedGrams(GraftBridge.expression(ts), n))
+
+  /** Occurrences of the most frequent word n-gram of a token array
+    * (see MaxGramCount). */
+  def maxGramCount(ts: org.apache.spark.sql.Column, n: Int): Column =
+    GraftBridge.column(MaxGramCount(GraftBridge.expression(ts), n))
+
+  /** struct(matched, score) of a token array against a token -> weight
+    * table (see TokenWeights). */
+  def tokenWeights(ts: org.apache.spark.sql.Column,
+      weights: Map[String, Long]): Column =
+    GraftBridge.column(TokenWeights(GraftBridge.expression(ts), weights))
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Maintained lake state for shingle-based near-dedup (the
   * queries.Dedup incremental path) — the third index to get the
@@ -29,43 +30,65 @@ import org.apache.spark.sql.functions._
   */
 object ShingleIndex {
 
-  private def withBucket(df: DataFrame): DataFrame =
-    df.withColumn("s_b", pmod(col("s"), lit(16)).cast("int"))
+  /** The shingles layout as written; `s_b` is the partition column.
+    * Readers declare the layouts instead of inferring them: an
+    * inferring parquet read is a footer job per load, and the
+    * streaming ingests load all three tables every micro-batch. */
+  val ShinglesSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType), StructField("s", LongType),
+    StructField("s_b", IntegerType)))
+
+  /** The sizes layout as written. */
+  val SizesSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType), StructField("n", LongType)))
+
+  /** The stop-list layout as written. */
+  val StopSchema: StructType = StructType(Seq(StructField("s", LongType)))
+
+  private def sizesOf(shingles: DataFrame): DataFrame =
+    IndexLifecycle.laidOut(
+      shingles.groupBy(col("doc_id")).agg(count(lit(1)).as("n")), SizesSchema)
+
+  private def stopOf(shingles: DataFrame, nd: Long): DataFrame =
+    IndexLifecycle.laidOut(shingles.groupBy(col("s")).agg(count(lit(1)).as("df"))
+      .filter(col("df") * 2 > lit(nd)), StopSchema)
+
+  /** (doc_id, s, s_b) rows repartitioned on the bucket — one file per
+    * bucket directory per write. */
+  private def bucketed(shingles: DataFrame): DataFrame =
+    IndexLifecycle.laidOut(
+      shingles.withColumn("s_b", pmod(col("s"), lit(16))), ShinglesSchema)
+      .repartition(col("s_b"))
 
   /** Batch-build from the index corpus's distinct (doc_id, s) rows. */
   def build(spark: SparkSession, shingles: DataFrame,
       indexDir: String): Unit = {
-    shingles.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/sizes")
+    sizesOf(shingles).write.mode(SaveMode.Overwrite).parquet(s"$indexDir/sizes")
     // doc count read back from the just-written sizes table: cheaper
     // than re-running the shingle pipeline for one scalar
-    val nd = spark.read.parquet(s"$indexDir/sizes").count()
-    shingles.groupBy(col("s")).agg(count(lit(1)).as("df"))
-      .filter(col("df") * 2 > lit(nd)).select(col("s"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/stop")
-    withBucket(shingles).repartition(col("s_b"))
-      .write.mode(SaveMode.Overwrite).partitionBy("s_b")
+    val nd = sizes(spark, indexDir).count()
+    stopOf(shingles, nd).write.mode(SaveMode.Overwrite).parquet(s"$indexDir/stop")
+    bucketed(shingles).write.mode(SaveMode.Overwrite).partitionBy("s_b")
       .parquet(s"$indexDir/shingles")
   }
 
   /** Incremental append: the batch's shingles and sizes, nothing
     * else touched. */
   def append(batchShingles: DataFrame, indexDir: String): Unit = {
-    batchShingles.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      .write.mode(SaveMode.Append).parquet(s"$indexDir/sizes")
-    withBucket(batchShingles).repartition(col("s_b"))
-      .write.mode(SaveMode.Append).partitionBy("s_b")
+    sizesOf(batchShingles).write.mode(SaveMode.Append).parquet(s"$indexDir/sizes")
+    bucketed(batchShingles).write.mode(SaveMode.Append).partitionBy("s_b")
       .parquet(s"$indexDir/shingles")
   }
 
   def shingles(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(s"$indexDir/shingles").select(col("doc_id"), col("s"))
+    spark.read.schema(ShinglesSchema).parquet(s"$indexDir/shingles")
+      .select(col("doc_id"), col("s"))
 
   def sizes(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(s"$indexDir/sizes")
+    spark.read.schema(SizesSchema).parquet(s"$indexDir/sizes")
 
   def stop(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(s"$indexDir/stop")
+    spark.read.schema(StopSchema).parquet(s"$indexDir/stop")
 
   /** Offline compaction — the stop-list refresh the scaladoc above
     * defers to ("an offline compaction decision, exactly like IVF
@@ -91,13 +114,9 @@ object ShingleIndex {
     val sh = shingles(spark, indexDir).distinct().cache()
     val nd = sizes(spark, indexDir).select(col("doc_id")).distinct().count()
     IndexLifecycle.republish(indexDir) { tmp =>
-      sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
-        .filter(col("df") * 2 > lit(nd)).select(col("s"))
-        .coalesce(1).write.parquet(tmp + "/stop")
-      withBucket(sh).repartition(col("s_b"))
-        .write.partitionBy("s_b").parquet(tmp + "/shingles")
-      sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-        .coalesce(1).write.parquet(tmp + "/sizes")
+      stopOf(sh, nd).coalesce(1).write.parquet(tmp + "/stop")
+      bucketed(sh).write.partitionBy("s_b").parquet(tmp + "/shingles")
+      sizesOf(sh).coalesce(1).write.parquet(tmp + "/sizes")
     }
     sh.unpersist()
   }

@@ -583,7 +583,8 @@ object Dedup {
       sourceKey(dir, "g3-xx64-minlabel")) { tmp =>
       val isNew = col("doc_id") % 5 === 4
       val oldPairs = shingleBatchPairs(s, idx,
-          _.filter(!isNew), _.filter(lit(false)))
+          graft.operators.ShingleIndex.shingles(s, idx).filter(!isNew),
+          lit(false))
         .select(col("doc_a").as("da"), col("doc_b").as("db"))
       minLabelClusters(oldPairs).coalesce(1)
         .write.parquet(s"$tmp/assignments")
@@ -795,11 +796,14 @@ object Dedup {
     shingleIncrementalOf(s, Tables.documents(s, dir),
       Vectors.sidecarDir("shidx", dir),
       fresh = false, key = sourceKey(dir, "g3-xx64"))
+      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   /** The lake lifecycle + query of dedup_incremental, parameterized
     * for the spec's planted corpora. fresh=true always rebuilds
-    * (spec mode); fresh=false builds-if-absent under `key`. */
+    * (spec mode); fresh=false builds-if-absent under `key`. The
+    * new-side shingles are the index's own isNew rows, which exist
+    * whether or not this call built the index. */
   private[graft] def shingleIncrementalOf(s: SparkSession,
       docs: DataFrame, idx: String, fresh: Boolean = true,
       key: String = ""): DataFrame = {
@@ -813,34 +817,39 @@ object Dedup {
     }
     if (fresh) doBuild(idx)
     else graft.operators.IndexLifecycle.buildOnce(idx, key)(doBuild)
-    shingleBatchPairs(s, idx, _.filter(isNew), _.filter(!isNew))
+    shingleBatchPairs(s, idx,
+      graft.operators.ShingleIndex.shingles(s, idx).filter(isNew), !isNew)
   }
 
   /** The READ side of the shingle ingest — batch-involved near-dup
-    * pairs from index state alone. `splitNew`/`splitOld` partition
-    * any frame carrying doc_id into the batch and index sides: the
-    * batch query passes doc_id-predicate filters (cheapest), the
-    * streaming twin passes broadcast semi/anti joins against the
-    * micro-batch's id frame (trigger-bounded, so always
-    * broadcastable). Shared so both ingest shapes are ONE dataflow. */
+    * pairs (doc_a < doc_b, jaccard), unordered, as a materialized
+    * cache the caller unpersists. `newSh` is the (doc_id, s) shingle
+    * frame of the batch, as the caller already holds it (the
+    * streaming twins' shingled micro-batch, the batch query's isNew
+    * index rows); `isOld` selects the index rows it is probed
+    * against. The probe is batch-driven: the batch's rare shingles
+    * are the BROADCAST side of the join against a plain scan of the
+    * index's old rows, so the index is neither cached nor shuffled,
+    * and the exact verify reads the index's sizes and hot rows only.
+    * Shared by dedup_incremental, dedup_clusters_incremental and the
+    * shingle, clean and cluster ingest twins, so the ingest shapes
+    * are ONE dataflow. */
   private[graft] def shingleBatchPairs(s: SparkSession, idx: String,
-      splitNew: DataFrame => DataFrame,
-      splitOld: DataFrame => DataFrame): DataFrame = {
-    // from here on, shingle state comes only from the index
-    val sh = graft.operators.ShingleIndex.shingles(s, idx).cache()
-    val sz = graft.operators.ShingleIndex.sizes(s, idx).cache()
+      newSh: DataFrame, isOld: Column): DataFrame = {
+    // from here on, old-side state comes only from the index
+    val sh = graft.operators.ShingleIndex.shingles(s, idx)
+    val sz = graft.operators.ShingleIndex.sizes(s, idx)
     val hotK = broadcast(graft.operators.ShingleIndex.stop(s, idx))
-    val rare = sh.join(hotK, Seq("s"), "left_anti")
-    val rareNew = splitNew(rare)
+    val rareNew = newSh.join(hotK, Seq("s"), "left_anti")
+      .select(col("doc_id"), col("s"))
     // Rare-shingle intersection counts fall straight out of the
     // candidate joins (the cappedInter trick) — no all-pairs self-join
-    // followed by a distinct, and no re-join of the corpus to count.
-    // The BATCH side is the build/stream-driving side of both joins:
+    // followed by a distinct, and no re-join of the corpus to count:
     // new-vs-index (disjoint sides, each shared rare shingle appears
     // exactly once per pair) and within-batch (da < db self-join).
-    val crNO = rareNew.select(col("doc_id").as("na"), col("s"))
-      .join(splitOld(rare).select(col("doc_id").as("ob"), col("s")),
-        Seq("s"))
+    val crNO = sh.filter(isOld).join(hotK, Seq("s"), "left_anti")
+      .select(col("doc_id").as("ob"), col("s"))
+      .join(broadcast(rareNew.select(col("doc_id").as("na"), col("s"))), Seq("s"))
       .select(least(col("na"), col("ob")).as("da"),
         greatest(col("na"), col("ob")).as("db"))
       .groupBy(col("da"), col("db")).agg(count(lit(1)).as("cr"))
@@ -849,10 +858,7 @@ object Dedup {
       .filter(col("da") < col("db"))
       .groupBy(col("da"), col("db")).agg(count(lit(1)).as("cr"))
     val cr = crNO.unionByName(crNN).cache() // contract of addHotCorrection
-    releasedAfter(
-      jaccardFrom(addHotCorrection(cr, sh, hotK), sz)
-        .orderBy(col("doc_a"), col("doc_b")),
-      sh, sz, cr)
+    releasedAfter(jaccardFrom(addHotCorrection(cr, sh, hotK), sz), cr)
   }
 
   /** Substring-level exact dedup (Lee et al., "Deduplicating Training

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.sources.Tables
 
@@ -125,11 +126,12 @@ object Pipeline {
     * runs ONLY on docs that survived every cheaper gate — at 100 TB
     * you never shingle-join the raw crawl. The NB stage is the
     * model-based filter CCNet/GPT-3 run next to their heuristics: it
-    * scores off the PERSISTED nbModelOf state (one broadcast join +
-    * one corpus pass — see nbScored), so the flagship pipeline
-    * exercises the maintained-model serving path end to end. Each
-    * gate IS the registered operator's own dataflow (langid / quality
-    * / repetition / nbScored / exact / ngramPairsOf), and the oracle
+    * scores off the PERSISTED nbModelOf state (in-row, in the same
+    * pass — see nbScored), so the flagship pipeline exercises the
+    * maintained-model serving path end to end. Each gate IS the
+    * registered operator's own expression tree (langid / quality /
+    * repetition through one Text.docFeatures projection, nbScorer,
+    * exact, ngramPairsOf — see cleanGates), and the oracle
     * embeds those operators' own oracle SQL (the NB stage via the
     * shared nbModelCtes + nbScoreCtes, replayed from the corpus so a
     * stale sidecar model hash-diverges), so this query is the
@@ -193,19 +195,11 @@ object Pipeline {
   private[queries] def corpusCleanFrom(s: SparkSession, dir: String,
       shFull: Option[org.apache.spark.sql.DataFrame])
       : org.apache.spark.sql.DataFrame = {
-    val lang = Text.langid.run(s, dir)
-      .select(col("doc_id"), (col("predicted_lang") === "en").as("lang_ok"))
-    val qual = Text.quality.run(s, dir)
-      .select(col("doc_id"), (col("quality_score") >= 0.35).as("quality_ok"))
-    val rep = Text.repetition.run(s, dir)
-      .select(col("doc_id"), col("keep").as("repetition_ok"))
+    val gates = cleanGates(s, nbModelOf(s, dir), Tables.documents(s, dir))
     val ex = Dedup.exact.run(s, dir)
       .select(col("doc_id"), (!col("is_dup")).as("not_exact_dup"))
-    val nbq = nbScored(s, dir)
-      .select(col("doc_id"), (col("score_micro") > 0L).as("nb_ok"))
     // flags feed both the gate filter and the final projection
-    val flags = lang.join(qual, "doc_id").join(rep, "doc_id")
-      .join(ex, "doc_id").join(nbq, "doc_id").cache()
+    val flags = gates.join(ex, "doc_id").cache()
     val gatedIds = flags.filter(col("lang_ok") && col("quality_ok")
       && col("repetition_ok") && col("nb_ok") && col("not_exact_dup"))
       .select(col("doc_id"))
@@ -225,6 +219,23 @@ object Pipeline {
           && col("nb_ok") && col("not_exact_dup")
           && coalesce(col("near_dup_drop"), lit(false)) === false).as("keep"))
       .orderBy(col("doc_id"))
+  }
+
+  /** The stateless gates and the learned NB gate of corpus_clean over
+    * a (doc_id, text) frame, as (doc_id, lang_ok, quality_ok,
+    * repetition_ok, nb_ok): ONE projection over Text.docFeatures, the
+    * NB score summed in-row from the same token array against the
+    * persisted model at `nbIdx` (nbScorer). Shared by corpus_clean,
+    * quality_ensemble and the streaming cleaning twin
+    * (StreamOps.cleanIngest), so batch and stream cannot drift. */
+  private[graft] def cleanGates(s: SparkSession, nbIdx: String,
+      docs: DataFrame): DataFrame = {
+    val nb = nbScorer(s, nbIdx)
+    Text.docFeatures(docs).select(col("doc_id"),
+      (col("predicted_lang") === "en").as("lang_ok"),
+      (col("quality_score") >= 0.35).as("quality_ok"),
+      col("rep_keep").as("repetition_ok"),
+      (nb(col("ts")).getField("score_micro") > 0L).as("nb_ok"))
   }
 
   /** Weighted dataset mixing — the "hit the target source mix
@@ -419,16 +430,17 @@ object Pipeline {
     * key's fmt fragment pins vocab cap + label threshold + the
     * micro-nat quantization, so a knob change rebuilds. */
   private[graft] def nbModelOf(s: SparkSession, dir: String): String = {
+    import graft.operators.IndexLifecycle.laidOut
     val idx = Vectors.sidecarDir("nbq", dir)
     graft.operators.IndexLifecycle.buildOnce(idx,
       graft.operators.IndexLifecycle.sourceKey(
         s"$dir/documents.parquet", "nbq-v512-t4500-micro6")) { tmp =>
       val labeled = nbLabeled(s, dir).cache()
-      nbModel(labeled).coalesce(1)
+      laidOut(nbModel(labeled), NbModelSchema).coalesce(1)
         .write.parquet(s"$tmp/model")
-      labeled.agg(
-        sum(col("label")).as("dhi"),
-        (count(lit(1)) - sum(col("label"))).as("dlo"))
+      laidOut(labeled.agg(
+          sum(col("label")).as("dhi"),
+          (count(lit(1)) - sum(col("label"))).as("dlo")), NbPriorsSchema)
         .coalesce(1).write.parquet(s"$tmp/priors")
       labeled.unpersist()
       ()
@@ -457,44 +469,64 @@ object Pipeline {
       |    CAST(SUM(d.c) AS BIGINT) AS matched
       |  FROM dtc d JOIN model m USING (token) GROUP BY d.doc_id)""".stripMargin
 
+  /** The nbModelOf `model` layout as written — readers declare it:
+    * an inferring parquet read is a footer job per load, and the
+    * streaming gate loads the model every micro-batch. */
+  val NbModelSchema: StructType = StructType(Seq(
+    StructField("token", StringType), StructField("n_hi", LongType),
+    StructField("n_lo", LongType), StructField("llr_micro", LongType)))
+
+  /** The nbModelOf 1-row `priors` layout (class doc counts). */
+  val NbPriorsSchema: StructType = StructType(Seq(
+    StructField("dhi", LongType), StructField("dlo", LongType)))
+
   /** Per-doc scores off the PERSISTED nbModelOf state — the serving
     * path shared by quality_nb_apply and corpus_clean's learned gate:
-    * ONE corpus pass and one exchange. Per-occurrence llr rows join
-    * the broadcast model and aggregate straight to (doc_id, label) —
-    * Σ count(doc,t)·llr(t) ≡ Σ per-occurrence llr for exact integer
-    * micro-nats, so the oracle's (doc, token) pre-count stage needs
-    * no Spark twin (a pre-agg on (doc_id, label, token) would force
-    * a SECOND shuffle for the narrower final key). explode_outer
-    * keeps zero-token docs (null token never joins the model, so
-    * they score prior-only instead of vanishing). Output: (doc_id,
-    * label, matched_tokens, score_micro). */
+    * ONE corpus pass and no exchange. The ≤512-row model and the one
+    * prior row are read once per call (nbScorer) and each doc's token
+    * array is scored in-row — Σ count(doc,t)·llr(t) ≡ Σ per-occurrence
+    * llr for exact integer micro-nats, so the oracle's (doc, token)
+    * pre-count stage needs no Spark twin. Zero-token docs score
+    * prior-only. Output: (doc_id, label, matched_tokens,
+    * score_micro). */
   private[graft] def nbScored(s: SparkSession, dir: String): DataFrame =
     nbScoredFrom(s, nbModelOf(s, dir), Tables.documents(s, dir))
 
   /** The serving dataflow against an explicit model sidecar and doc
-    * frame — shared verbatim by the batch scorer, corpus_clean's
-    * gate, and the streaming per-micro-batch scorer. */
+    * frame — shared verbatim by the batch scorer and the streaming
+    * per-micro-batch scorer. */
   private[graft] def nbScoredFrom(s: SparkSession, idx: String,
       docs: DataFrame): DataFrame = {
-    val model = s.read.parquet(s"$idx/model")
-      .select(col("token"), col("llr_micro"))
-    // the prior is ONE persisted row — read it to a literal (no
-    // 1-row cross join in every consumer's plan; corpus_clean's plan
-    // audit stays strictly nested-loop-free)
-    val priorMicro = s.read.parquet(s"$idx/priors")
+    val nb = nbScorer(s, idx)
+    nbLabeledFrom(docs)
+      .select(col("doc_id"), col("label"), nb(col("tk")).as("nb"))
+      .select(col("doc_id"), col("label"),
+        col("nb.matched_tokens"), col("nb.score_micro"))
+  }
+
+  /** The persisted model at `idx` as an in-row scorer: token array =>
+    * struct(matched_tokens, score_micro), score = prior + Σ llr_micro
+    * over the array's model tokens (TokenWeights — the compiled twin
+    * of explode → broadcast join → groupBy). The model and the prior
+    * are collected here, once, into plan literals. */
+  private[graft] def nbScorer(s: SparkSession,
+      idx: String): Column => Column = {
+    val weights = s.read.schema(NbModelSchema).parquet(s"$idx/model")
+      .select(col("token"), col("llr_micro")).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    // the prior is ONE persisted row — a literal, not a 1-row cross
+    // join in every consumer's plan (corpus_clean's plan audit stays
+    // strictly nested-loop-free)
+    val priorMicro = s.read.schema(NbPriorsSchema).parquet(s"$idx/priors")
       .select(floor(log((col("dhi") + 1L).cast("double") / (col("dlo") + 1L))
         * 1000000.0 + 0.5).cast("long"))
       .head().getLong(0)
-    nbLabeledFrom(docs)
-      .select(col("doc_id"), col("label"), explode_outer(col("tk")).as("token"))
-      .join(broadcast(model), Seq("token"), "left")
-      .groupBy(col("doc_id"), col("label"))
-      .agg(sum(col("llr_micro")).as("tok_score"),
-        count(col("llr_micro")).as("matched"))
-      .select(col("doc_id"), col("label"),
-        coalesce(col("matched"), lit(0L)).as("matched_tokens"),
-        (lit(priorMicro) + coalesce(col("tok_score"), lit(0L)))
+    tk => {
+      val w = graft.functions.TextExprs.tokenWeights(tk, weights)
+      struct(coalesce(w.getField("matched"), lit(0L)).as("matched_tokens"),
+        (lit(priorMicro) + coalesce(w.getField("score"), lit(0L)))
           .as("score_micro"))
+    }
   }
 
   /** APPLY: score every doc with the fitted model — per-doc integer
@@ -923,20 +955,15 @@ object Pipeline {
       |    + CASE WHEN entropy_ok THEN 1 ELSE 0 END
       |    + CASE WHEN ppl_ok THEN 1 ELSE 0 END) >= 4 AS ensemble_keep
       |FROM v ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    val qual = Text.quality.run(s, dir)
-      .select(col("doc_id"), (col("quality_score") >= 0.35).as("quality_ok"))
-    val rep = Text.repetition.run(s, dir)
-      .select(col("doc_id"), col("keep").as("repetition_ok"))
-    val nbq = nbScored(s, dir)
-      .select(col("doc_id"), (col("score_micro") > 0L).as("nb_ok"))
+    val gates = cleanGates(s, nbModelOf(s, dir), Tables.documents(s, dir))
+      .select(col("doc_id"), col("quality_ok"), col("repetition_ok"),
+        col("nb_ok"))
     val ent = Text.entropy.run(s, dir)
       .select(col("doc_id"), (col("entropy") >= 2.78).as("entropy_ok"))
     val ppx = Text.perplexity.run(s, dir)
       .select(col("doc_id"), (col("ppl") <= 30.7).as("ppl_ok"))
     def i(c: Column): Column = when(c, 1).otherwise(0)
-    val v = Tables.documents(s, dir).select(col("doc_id"))
-      .join(qual, "doc_id").join(rep, "doc_id").join(nbq, "doc_id")
-      .join(ent, "doc_id").join(ppx, "doc_id")
+    val v = gates.join(ent, "doc_id").join(ppx, "doc_id")
     val nPass = (i(col("quality_ok")) + i(col("repetition_ok"))
       + i(col("nb_ok")) + i(col("entropy_ok")) + i(col("ppl_ok")))
     v.select(col("doc_id"), col("quality_ok"), col("repetition_ok"),

@@ -396,7 +396,6 @@ object Retrieval {
   private[graft] def condensedQueries(
       s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val docs = Tables.documents(s, dir)
-    val tok = docs.select(col("doc_id"), explode(toks(col("text"))).as("t"))
     val questions = docs.filter(col("doc_id") < 5)
       .select(col("doc_id").as("query_id"),
         concat_ws(" ", slice(toks(col("text")), 1, 10)).as("question"))
@@ -410,7 +409,10 @@ object Retrieval {
       .select(col("query_id"), explode(toks(col("h_question"))).as("t"))
       .distinct()
       .join(qTerms, Seq("query_id", "t"), "left_anti") // new terms only
-    val dfr = tok.select(col("doc_id"), col("t")).distinct()
+    // corpus df off the postings index (one row per (t, doc_id)),
+    // for the history terms only
+    val dfr = bm25Postings(s, dir)
+      .join(broadcast(histTerms.select(col("t")).distinct()), Seq("t"), "left_semi")
       .groupBy(col("t")).agg(count(lit(1)).as("df"))
     val picked = histTerms.join(dfr, "t")
       .withColumn("rk", row_number().over(Window

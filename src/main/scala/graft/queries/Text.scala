@@ -21,32 +21,77 @@ object Text {
   private val qualityStops =
     Seq("the", "a", "and", "of", "to", "in", "is", "it")
 
-  /** The text_quality dataflow over an arbitrary doc frame — shared
-    * by the registered query and the streaming cleaning gate
-    * (StreamOps.cleanIngest) so the two cannot drift. */
-  private[graft] def qualityFrom(docs: DataFrame): DataFrame = {
-    // floor(x*1e4 + 0.5)/1e4 instead of round(): these ratios hit
-    // EXACT 4-dp half-boundaries (e.g. 0.3*13/16 terms -> 0.31375)
-    // where Spark's decimal HALF_UP and DuckDB's float rint
-    // disagree; an identical floor expression on the identical
-    // double cannot diverge.
-    def r4(c: Column): Column = floor(c * 10000 + 0.5) / 10000
-    val base = docs.select(
-      col("doc_id"),
-      length(col("text")).as("n_chars_m"),
-      size(toks(col("text"))).as("n_words"),
-      length(regexp_replace(lower(col("text")), "[^a-z0-9]", "")).as("n_alnum"),
-      countIn(toks(col("text")), qualityStops).as("n_stop"))
-    base.select(
-      col("doc_id"), col("n_chars_m"), col("n_words"),
+  /** floor(x*1e4 + 0.5)/1e4 instead of round(): these ratios hit
+    * EXACT 4-dp half-boundaries (e.g. 0.3*13/16 terms -> 0.31375)
+    * where Spark's decimal HALF_UP and DuckDB's float rint disagree;
+    * an identical floor expression on the identical double cannot
+    * diverge. */
+  private def r4(c: Column): Column = floor(c * 10000 + 0.5) / 10000
+
+  /** Every stateless cleaning gate of a (doc_id, text) frame in ONE
+    * projection over ONE `tokens(text)` attribute — no exchange, no
+    * sort: the language-profile counts and `predicted_lang`
+    * (text_langid), the quality counts, ratios and score
+    * (text_quality), and the repetition fractions with their verdict
+    * `rep_keep` (text_repetition's `keep`), plus the token array `ts`
+    * itself for the learned gate. Each expression is the registered
+    * query's own tree on the same doubles; the per-doc n-gram counts
+    * come from the compiled MaxGramCount instead of two explode →
+    * groupBy → groupBy chains. The registered gate queries select
+    * their columns from here, and corpus_clean and the streaming
+    * cleaning twin (StreamOps.cleanIngest) read it through
+    * Pipeline.cleanGates, so batch and stream cannot drift. Catalyst
+    * prunes what a consumer does not select. */
+  private[graft] def docFeatures(docs: DataFrame): DataFrame = {
+    // ts stays one materialized attribute: CollapseProject does not
+    // inline a non-cheap expression that is referenced more than once
+    val t = docs.select(col("doc_id"), col("text"), toks(col("text")).as("ts"))
+    val c = t.select(
+      col("doc_id") +: col("ts") +: langProfiles.map { case (l, ws) =>
+        countIn(col("ts"), ws).as(s"c_$l")
+      } :+
+      length(col("text")).as("n_chars_m") :+
+      size(col("ts")).as("n_words") :+
+      length(regexp_replace(lower(col("text")), "[^a-z0-9]", "")).as("n_alnum") :+
+      countIn(col("ts"), qualityStops).as("n_stop") :+
+      size(array_distinct(col("ts"))).as("n_distinct") :+
+      graft.functions.TextExprs.maxGramCount(col("ts"), 2).as("m2") :+
+      graft.functions.TextExprs.maxGramCount(col("ts"), 3).as("m3"): _*)
+    // docs too short for 2/3-grams cannot be repetitious, but MUST
+    // still receive a verdict: their fraction is 0.0 (the old LEFT
+    // join's coalesce over an empty gram group)
+    def topFrac(m: String, n: Int): Column = {
+      val total = col("n_words") - (n - 1)
+      when(total > 0, r4(col(m).cast("double") / total.cast("double")))
+        .otherwise(lit(0.0))
+    }
+    val f = c.select(col("*"),
+      when(col("c_de") >= col("c_en") && col("c_de") >= col("c_es")
+        && col("c_de") >= col("c_fr"), "de")
+        .when(col("c_en") >= col("c_es") && col("c_en") >= col("c_fr"), "en")
+        .when(col("c_es") >= col("c_fr"), "es")
+        .otherwise("fr").as("predicted_lang"),
       r4(col("n_alnum") / col("n_words")).as("mean_word_len"),
       r4(col("n_alnum") / col("n_chars_m")).as("alpha_ratio"),
       r4(col("n_stop") / col("n_words")).as("stop_ratio"),
       r4(lit(0.3) * (col("n_stop") / col("n_words"))
         + lit(0.4) * least(lit(1.0), col("n_words") / lit(100.0))
-        + lit(0.3) * (col("n_alnum") / col("n_chars_m"))).as("quality_score"))
-      .orderBy(col("doc_id"))
+        + lit(0.3) * (col("n_alnum") / col("n_chars_m"))).as("quality_score"),
+      r4((col("n_words") - col("n_distinct")).cast("double") / col("n_words"))
+        .as("dup_token_frac"),
+      topFrac("m2", 2).as("top2gram_frac"),
+      topFrac("m3", 3).as("top3gram_frac"))
+    f.select(col("*"), (col("dup_token_frac") <= 0.9
+      && col("top2gram_frac") <= 0.2 && col("top3gram_frac") <= 0.18)
+      .as("rep_keep"))
   }
+
+  /** The text_quality columns of [[docFeatures]] — shared by the
+    * registered query and the other quality consumers. */
+  private[graft] def qualityFrom(docs: DataFrame): DataFrame =
+    docFeatures(docs).select(col("doc_id"), col("n_chars_m"), col("n_words"),
+      col("mean_word_len"), col("alpha_ratio"), col("stop_ratio"),
+      col("quality_score"))
 
   val tokens: Q = Q(
     "text_tokens",
@@ -85,7 +130,7 @@ object Text {
         |  FLOOR((0.3 * (n_stop / n_words) + 0.4 * LEAST(1.0, n_words / 100.0)
         |    + 0.3 * (n_alnum / n_chars_m)) * 10000 + 0.5) / 10000 AS quality_score
         |FROM t ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      qualityFrom(Tables.documents(s, dir))
+      qualityFrom(Tables.documents(s, dir)).orderBy(col("doc_id"))
     }
   }
 
@@ -99,21 +144,10 @@ object Text {
     "es" -> Seq("el", "la", "de", "los", "y", "es"),
     "fr" -> Seq("le", "la", "les", "de", "et", "est"))
 
-  /** The text_langid dataflow over an arbitrary doc frame — shared
-    * by the registered query and StreamOps.cleanIngest. */
-  private[graft] def langidFrom(docs: DataFrame): DataFrame = {
-    val t = docs.select(
-      col("doc_id") +: langProfiles.map { case (l, ws) =>
-        countIn(toks(col("text")), ws).as(s"c_$l")
-      }: _*)
-    t.select(col("doc_id"), col("c_de"), col("c_en"), col("c_es"), col("c_fr"),
-      when(col("c_de") >= col("c_en") && col("c_de") >= col("c_es")
-        && col("c_de") >= col("c_fr"), "de")
-        .when(col("c_en") >= col("c_es") && col("c_en") >= col("c_fr"), "en")
-        .when(col("c_es") >= col("c_fr"), "es")
-        .otherwise("fr").as("predicted_lang"))
-      .orderBy(col("doc_id"))
-  }
+  /** The text_langid columns of [[docFeatures]]. */
+  private[graft] def langidFrom(docs: DataFrame): DataFrame =
+    docFeatures(docs).select(col("doc_id"), col("c_de"), col("c_en"),
+      col("c_es"), col("c_fr"), col("predicted_lang"))
 
   val langid: Q = {
     val scoreSql = langProfiles.map { case (l, ws) =>
@@ -131,7 +165,7 @@ object Text {
         |       WHEN c_es >= c_fr THEN 'es'
         |       ELSE 'fr' END AS predicted_lang
         |FROM t ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      langidFrom(Tables.documents(s, dir))
+      langidFrom(Tables.documents(s, dir)).orderBy(col("doc_id"))
     }
   }
 
@@ -402,9 +436,9 @@ object Text {
     * fraction, and a keep flag over fixed thresholds. All ratios are
     * single divisions of exact integer counts, so both engines
     * compute identical doubles; the gate compares the ROUNDED values
-    * so the boolean cannot straddle an engine difference. Aggregation
-    * is two groupBys per n (map-side partial on (doc, gram), then per
-    * doc) — no arrays leave the executors, no windows. */
+    * so the boolean cannot straddle an engine difference. The per-doc
+    * gram counts are the compiled MaxGramCount over the shared token
+    * array ([[docFeatures]]) — one projection, no shuffle, no window. */
   val repetition: Q = Q(
     "text_repetition",
     """WITH tokv AS (
@@ -439,44 +473,13 @@ object Text {
       |  dup_token_frac <= 0.9 AND top2gram_frac <= 0.2
       |    AND top3gram_frac <= 0.18 AS keep
       |FROM m ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    repetitionFrom(Tables.documents(s, dir))
+    repetitionFrom(Tables.documents(s, dir)).orderBy(col("doc_id"))
   }
 
-  /** The text_repetition dataflow over an arbitrary doc frame —
-    * shared by the registered query and StreamOps.cleanIngest. */
-  private[graft] def repetitionFrom(docs: DataFrame): DataFrame = {
-    def r4(c: Column): Column = floor(c * 10000 + 0.5) / 10000
-    // one scan + one tokenize pass, shared by tstats and both gram
-    // aggregations (the "self-consumed mid-pipelines are cached" rule)
-    val t = docs
-      .select(col("doc_id"), toks(col("text")).as("ts")).cache()
-    def gramStats(n: Int, alias: String): org.apache.spark.sql.DataFrame = {
-      t.select(col("doc_id"),
-          explode(graft.functions.TextExprs.gramsN(col("ts"), n)).as("g"))
-        .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
-        .groupBy(col("doc_id"))
-        .agg(max(col("c")).cast("double").as(s"m$alias"),
-          sum(col("c")).cast("double").as(s"t$alias"))
-    }
-    val tstats = t.select(col("doc_id"), size(col("ts")).as("n_tokens"),
-      size(array_distinct(col("ts"))).as("n_distinct"))
-    // LEFT joins + 0.0 defaults: docs too short for 2/3-grams cannot
-    // be repetitious, but MUST still receive a keep/drop verdict — a
-    // quality gate that silently drops the degenerate docs is wrong
-    val m = tstats
-      .join(gramStats(2, "2"), Seq("doc_id"), "left")
-      .join(gramStats(3, "3"), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        r4((col("n_tokens") - col("n_distinct")).cast("double") / col("n_tokens"))
-          .as("dup_token_frac"),
-        coalesce(r4(col("m2") / col("t2")), lit(0.0)).as("top2gram_frac"),
-        coalesce(r4(col("m3") / col("t3")), lit(0.0)).as("top3gram_frac"))
-    m.select(col("doc_id"), col("dup_token_frac"), col("top2gram_frac"),
-        col("top3gram_frac"),
-        (col("dup_token_frac") <= 0.9 && col("top2gram_frac") <= 0.2
-          && col("top3gram_frac") <= 0.18).as("keep"))
-      .orderBy(col("doc_id"))
-  }
+  /** The text_repetition columns of [[docFeatures]]. */
+  private[graft] def repetitionFrom(docs: DataFrame): DataFrame =
+    docFeatures(docs).select(col("doc_id"), col("dup_token_frac"),
+      col("top2gram_frac"), col("top3gram_frac"), col("rep_keep").as("keep"))
 
   /** Token-budget sharding — the corpus → training-shard packing
     * pass: every doc assigned (whole, never split) to the shard where

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode, StreamingQuery}
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType,
+  StringType, StructField, StructType}
 
 /** Structured Streaming twins of the batch time-series operators.
   *
@@ -585,11 +586,12 @@ object StreamOps {
     * lake write) in which each micro-batch (1) APPENDS its shingles
     * and sizes to the maintained ShingleIndex — O(batch) writes, the
     * batch lifecycle's own append — and (2) emits the batch-involved
-    * near-dup pairs (batch-vs-index and within-batch) computed from
-    * index state alone, through EXACTLY the read dataflow of the
-    * batch query (Dedup.shingleBatchPairs; batch membership is a
-    * broadcast semi/anti join on the micro-batch's trigger-bounded id
-    * frame instead of the batch query's doc_id predicate).
+    * near-dup pairs (batch-vs-index and within-batch), through
+    * EXACTLY the read dataflow of the batch query
+    * (Dedup.shingleBatchPairs: the micro-batch's shingles are the
+    * broadcast probe side, and its trigger-bounded id literal splits
+    * off the index's old rows instead of the batch query's doc_id
+    * predicate).
     *
     * Append order makes cross-micro-batch pairs exact: a pair whose
     * sides arrive in different micro-batches surfaces when the LATER
@@ -619,26 +621,31 @@ object StreamOps {
     graft.operators.IndexLifecycle.epochOnce(indexDir, epoch) {
       graft.operators.ShingleIndex.append(bsh, indexDir)
     }
-    val pairs = shingleBatchPairsOf(s, bsh, indexDir)
+    val pairs = shingleBatchPairsOf(s, bsh, batchIds(s, bsh), indexDir)
     emitEpoch(pairs, epoch, outDir)
     Seq(bsh, pairs).foreach(_.unpersist())
     ()
   }
 
-  /** The batch-involved near-dup pairs of the shingled micro-batch
-    * `bsh` against the maintained index — Dedup.shingleBatchPairs with
-    * batch membership as a broadcast semi/anti join on its id frame.
-    * Shared by the shingle, clean and cluster ingests. The result is
-    * a materialized cache (Dedup's releasedAfter): the caller
-    * unpersists it after its emit, or every epoch of a long-running
-    * twin pins one more cached frame. */
-  private def shingleBatchPairsOf(s: SparkSession, bsh: DataFrame,
-      indexDir: String): DataFrame = {
-    val ids = broadcast(bsh.select(col("doc_id")).distinct())
-    graft.queries.Dedup.shingleBatchPairs(s, indexDir,
-      _.join(ids, Seq("doc_id"), "left_semi"),
-      _.join(ids, Seq("doc_id"), "left_anti"))
+  /** The doc ids of a shingled micro-batch — trigger-bounded, so
+    * collected into a plan literal. */
+  private def batchIds(s: SparkSession, bsh: DataFrame): Seq[Long] = {
+    import s.implicits._
+    bsh.select(col("doc_id")).distinct().as[Long].collect().toSeq
   }
+
+  /** The batch-involved near-dup pairs of the shingled micro-batch
+    * `bsh` (doc ids `ids`) against the maintained index — the shared
+    * probe Dedup.shingleBatchPairs, `bsh` its broadcast side and the
+    * index rows outside `ids` its old side. Shared by the shingle,
+    * clean and cluster ingests. The result is a materialized cache
+    * (Dedup's releasedAfter): the caller unpersists it after its
+    * emit, or every epoch of a long-running twin pins one more cached
+    * frame. */
+  private def shingleBatchPairsOf(s: SparkSession, bsh: DataFrame,
+      ids: Seq[Long], indexDir: String): DataFrame =
+    graft.queries.Dedup.shingleBatchPairs(s, indexDir, bsh,
+      !col("doc_id").isInCollection(ids))
 
   /** Append the shingled micro-batch `bsh` to the index at `indexDir`
     * under epochOnce — or, while no index exists yet, BUILD it from
@@ -1042,13 +1049,13 @@ object StreamOps {
     * (doc_id, text) documents is scored against the PERSISTED
     * nbModelOf state (fit stays a nightly batch job; the stream never
     * refits) through EXACTLY the batch scorer's dataflow
-    * (Pipeline.nbScoredFrom — ≤512-row model + 1-row prior broadcast
-    * into one pass over the batch). Output (doc_id, label,
-    * matched_tokens, score_micro) is epoch-partitioned dynamic
-    * overwrite (emitEpoch), so a replayed micro-batch replaces its
-    * own partition — exactly-once without an index append (scoring is
-    * stateless given the frozen model, the simplest member of the
-    * ingest-twin family). */
+    * (Pipeline.nbScoredFrom — the ≤512-row model and the prior read
+    * once, each doc scored in-row in one pass over the batch).
+    * Output (doc_id, label, matched_tokens, score_micro) is
+    * epoch-partitioned dynamic overwrite (emitEpoch), so a replayed
+    * micro-batch replaces its own partition — exactly-once without an
+    * index append (scoring is stateless given the frozen model, the
+    * simplest member of the ingest-twin family). */
   def nbScoreIngest(s: SparkSession, docs: DataFrame, modelIdx: String,
       outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
     epochSink(docs, outDir + "_ckpt")(nbScoreBatch(s, _, _, modelIdx, outDir))
@@ -1254,18 +1261,22 @@ object StreamOps {
   /** Streaming twin of corpus_clean — the COMPLETE cleaning pipeline
     * a 100 TB/day ingest runs per micro-batch, composed from the
     * family's maintained lake state: (1) the stateless gates (langid
-    * / quality / repetition via Text.*From — the registered queries'
-    * own dataflow, shared verbatim) plus the learned NB gate scored
+    * / quality / repetition) plus the learned NB gate scored in-row
     * against the PERSISTED nbModelOf state (the fit stays a nightly
-    * batch job, exactly like nbScoreIngest); (2) exact dedup against
-    * a maintained keeper index — md5 of the normalized text (128-bit,
-    * collision-negligible at any corpus size; the index row is a
-    * 32-char digest + keeper id instead of the text itself, and the
-    * BATCH drives the index join — per-ingest cost O(batch), the
+    * batch job, exactly like nbScoreIngest) — Pipeline.cleanGates,
+    * the ONE Text.docFeatures projection corpus_clean itself reads,
+    * so "shared verbatim" is the shared projection; (2) exact dedup
+    * against a maintained keeper index — md5 of the normalized text
+    * (128-bit, collision-negligible at any corpus size; the index row
+    * is a 32-char digest + keeper id instead of the text itself, and
+    * the BATCH drives the index join — per-ingest cost O(batch), the
     * corpus-sized index is never a build side); (3) near-dedup of the
-    * gated survivors through the maintained ShingleIndex and
-    * Dedup.shingleBatchPairs (the dedup_incremental read dataflow,
-    * shared verbatim with shingleIngest — O(batch × collisions));
+    * gated survivors through the maintained ShingleIndex and the
+    * shared probe Dedup.shingleBatchPairs (the dedup_incremental read
+    * dataflow, shared verbatim with shingleIngest: the gated batch's
+    * shingles broadcast against a scan of the index's old rows —
+    * O(batch × collisions)), the drop set read off its materialized
+    * pairs;
     * (4) an epoch-partitioned emit of every batch doc's flag row in
     * the batch corpus_clean query's exact schema, so a downstream
     * consumer cannot tell which path produced a row.
@@ -1298,31 +1309,28 @@ object StreamOps {
     epochSink(docs, outDir + "_ckpt")(cleanIngestBatch(s, _, _, exactIdx,
       shingleIdx, nbModelIdx, outDir))
 
+  /** The exact-dedup keeper index layout `(h, keeper)` as written —
+    * readers declare it (an inferring read is a footer job per
+    * micro-batch). */
+  private[graft] val ExactIndexSchema: StructType = StructType(Seq(
+    StructField("h", StringType), StructField("keeper", LongType)))
+
   /** One cleaning micro-batch — factored out so the retry spec can
     * replay an epoch directly. */
   private[graft] def cleanIngestBatch(s: SparkSession, batch: DataFrame,
       epoch: Long, exactIdx: String, shingleIdx: String, nbModelIdx: String,
       outDir: String): Unit = {
-    import graft.queries.{Dedup, Pipeline, Text}
+    import graft.queries.{Dedup, Pipeline}
     import graft.operators.{IndexLifecycle, LakeFs}
+    import s.implicits._
     val b = batch.cache()
-    // stateless gates — the registered queries' own dataflow
-    val lang = Text.langidFrom(b)
-      .select(col("doc_id"), (col("predicted_lang") === "en").as("lang_ok"))
-    val qual = Text.qualityFrom(b)
-      .select(col("doc_id"), (col("quality_score") >= 0.35).as("quality_ok"))
-    val rep = Text.repetitionFrom(b)
-      .select(col("doc_id"), col("keep").as("repetition_ok"))
-    val nbq = Pipeline.nbScoredFrom(s, nbModelIdx, b)
-      .select(col("doc_id"), (col("score_micro") > 0L).as("nb_ok"))
+    // stateless and learned gates — corpus_clean's own projection
+    val gates = Pipeline.cleanGates(s, nbModelIdx, b)
     // exact dedup against the maintained keeper index
     val hashDir = s"$exactIdx/hashes"
     val seen =
-      if (LakeFs.exists(hashDir)) s.read.parquet(hashDir)
-      else {
-        import s.implicits._
-        Seq.empty[(String, Long)].toDF("h", "keeper")
-      }
+      if (LakeFs.exists(hashDir)) s.read.schema(ExactIndexSchema).parquet(hashDir)
+      else s.createDataFrame(s.sparkContext.emptyRDD[Row], ExactIndexSchema)
     val hashed = b.select(col("doc_id"),
       md5(lower(trim(col("text")))).as("h"))
     val batchKeeper = hashed.groupBy(col("h"))
@@ -1340,8 +1348,9 @@ object StreamOps {
       .agg(min(col("idx_keeper")).as("idx_keeper"))
       .cache()
     IndexLifecycle.epochOnce(exactIdx, epoch) {
-      withIdx.filter(col("idx_keeper").isNull)
-        .select(col("h"), col("batch_keeper").as("keeper")).distinct()
+      IndexLifecycle.laidOut(withIdx.filter(col("idx_keeper").isNull)
+          .select(col("h"), col("batch_keeper").as("keeper")).distinct(),
+          ExactIndexSchema)
         .write.mode("append").parquet(hashDir)
     }
     // FIRST-WINS keeper semantics (arrival order): a doc is an exact
@@ -1355,45 +1364,38 @@ object StreamOps {
     val ex = withIdx.select(col("doc_id"),
       (col("doc_id") === coalesce(col("idx_keeper"), col("batch_keeper")))
         .as("not_exact_dup"))
-    val flags = lang.join(qual, Seq("doc_id")).join(rep, Seq("doc_id"))
-      .join(nbq, Seq("doc_id")).join(ex, Seq("doc_id")).cache()
-    val gatedIds = flags.filter(col("lang_ok") && col("quality_ok")
-      && col("repetition_ok") && col("nb_ok") && col("not_exact_dup"))
-      .select(col("doc_id"))
+    val flags = gates.join(ex, Seq("doc_id")).cache()
+    // the gated ids are trigger-bounded: a plan literal that both
+    // selects the docs to shingle and splits the index into the
+    // probe's old side
+    val gated = flags.filter(col("lang_ok") && col("quality_ok")
+        && col("repetition_ok") && col("nb_ok") && col("not_exact_dup"))
+      .select(col("doc_id")).as[Long].collect().toSeq
     val bsh = Dedup.hashedShinglesOf(
-      b.join(gatedIds, Seq("doc_id"), "left_semi")).cache()
+      b.filter(col("doc_id").isInCollection(gated))).cache()
     val pairs =
       if (appendOrBuildShingles(s, bsh, epoch, shingleIdx))
-        shingleBatchPairsOf(s, bsh, shingleIdx)
+        shingleBatchPairsOf(s, bsh, gated, shingleIdx)
       else {
         // nothing gated yet anywhere — no index, no candidates
-        import s.implicits._
         Seq.empty[(Long, Long, Double)].toDF("doc_a", "doc_b", "jaccard")
       }
-    // near-dup drops, first-wins like the exact gate: a batch doc
-    // drops when it pairs with ANY earlier-indexed doc (whichever
-    // side of the ordered pair it landed on — an out-of-order arrival
-    // can be doc_a) or as doc_b of an in-batch pair
-    val batchIds = bsh.select(col("doc_id")).distinct()
-    val nd = pairs
-      .join(batchIds.withColumnRenamed("doc_id", "doc_a"),
-        Seq("doc_a"), "left_semi")
-      .join(batchIds.withColumnRenamed("doc_id", "doc_b"),
-        Seq("doc_b"), "left_anti")
-      .select(col("doc_a").as("doc_id"))
-      .unionByName(pairs.select(col("doc_b").as("doc_id"))
-        .join(batchIds, Seq("doc_id"), "left_semi"))
-      .distinct()
-      .withColumn("near_dup_drop", lit(true))
+    // near-dup drops, first-wins like the exact gate, read off the
+    // materialized pairs: a batch doc drops as doc_b of any pair, or
+    // as doc_a of a pair with an earlier-indexed doc (an out-of-order
+    // arrival can be the smaller id)
+    val inBatch = gated.toSet
+    val nd = pairs.select(col("doc_a"), col("doc_b")).as[(Long, Long)]
+      .collect().flatMap { case (a, d) =>
+        if (inBatch(d)) Some(d) else if (inBatch(a)) Some(a) else None
+      }.distinct.toSeq
+    val ndDrop = col("doc_id").isInCollection(nd)
     emitEpoch(
-      flags.join(nd, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("lang_ok"), col("quality_ok"),
-          col("repetition_ok"), col("nb_ok"), col("not_exact_dup"),
-          coalesce(col("near_dup_drop"), lit(false)).as("near_dup_drop"),
-          (col("lang_ok") && col("quality_ok") && col("repetition_ok")
-            && col("nb_ok") && col("not_exact_dup")
-            && coalesce(col("near_dup_drop"), lit(false)) === false)
-            .as("keep")),
+      flags.select(col("doc_id"), col("lang_ok"), col("quality_ok"),
+        col("repetition_ok"), col("nb_ok"), col("not_exact_dup"),
+        ndDrop.as("near_dup_drop"),
+        (col("lang_ok") && col("quality_ok") && col("repetition_ok")
+          && col("nb_ok") && col("not_exact_dup") && !ndDrop).as("keep")),
       epoch, outDir)
     Seq(withIdx, flags, bsh, b, pairs).foreach(_.unpersist())
     ()
@@ -1448,7 +1450,7 @@ object StreamOps {
     if (!appendOrBuildShingles(s, bsh, epoch, indexDir)) {
       bsh.unpersist(); return
     }
-    val batchPairs = shingleBatchPairsOf(s, bsh, indexDir)
+    val batchPairs = shingleBatchPairsOf(s, bsh, batchIds(s, bsh), indexDir)
     val pairs = batchPairs.select(col("doc_a").as("da"), col("doc_b").as("db"))
     val asg =
       if (LakeFs.exists(s"$clusterDir/assignments"))

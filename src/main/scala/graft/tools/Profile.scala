@@ -1,7 +1,11 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode,
+  QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper,
+  BroadcastQueryStageExec, ShuffleQueryStageExec, TableCacheQueryStageExec}
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Same-JVM profile of registered queries on Bench's session, warm-up
@@ -44,14 +48,24 @@ object Profile {
       .replaceAll("Statistics\\([^)]*\\)", "Statistics(x)")
 
   /** Operator counts of an executed plan's final adaptive plan, the
-    * only one that shows runtime exchange and stage reuse; the
-    * top-level initial plan printed after it is not counted. */
-  private[graft] def shape(plan: String): Seq[(String, Int)] =
-    Seq("scans" -> "Scan parquet", "exch" -> "Exchange",
-      "reusedExch" -> "ReusedExchange", "shuffleStages" -> "ShuffleQueryStage",
-      "bcastStages" -> "BroadcastQueryStage",
-      "tableCaches" -> "TableCacheQueryStage")
-      .map { case (k, pat) => k -> pat.r.findAllIn(finalPlan(plan)).length }
+    * only one that shows runtime exchange and stage reuse, by a walk
+    * of the SparkPlan tree. The walk enters query stages but stops at
+    * each InMemoryTableScan: a cached relation's plan ran when the
+    * cache was filled, and the plan STRING prints it inline once per
+    * reference (dedup_simhash's count() read scans=560 exch=907 that
+    * way). `exch` counts reused exchanges too. */
+  private[graft] def shape(plan: SparkPlan): Seq[(String, Int)] = {
+    val nodes = new AdaptiveSparkPlanHelper {}.collectWithSubqueries(plan) {
+      case p => p
+    }
+    def n(f: PartialFunction[SparkPlan, Unit]): Int = nodes.count(f.isDefinedAt)
+    Seq("scans" -> n { case _: FileSourceScanExec => },
+      "exch" -> n { case _: Exchange | _: ReusedExchangeExec => },
+      "reusedExch" -> n { case _: ReusedExchangeExec => },
+      "shuffleStages" -> n { case _: ShuffleQueryStageExec => },
+      "bcastStages" -> n { case _: BroadcastQueryStageExec => },
+      "tableCaches" -> n { case _: TableCacheQueryStageExec => })
+  }
 
   /** Scans of the final plan that read no column (`ReadSchema:
     * struct<>`): the timed `count()` let column pruning drop every
@@ -117,7 +131,7 @@ object Profile {
       passes.last._2.foreach { qe =>
         val plan = qe.executedPlan.toString
         println(s"[profile] $name plan: " +
-          shape(plan).map { case (k, n) => s"$k=$n" }.mkString(" ") +
+          shape(qe.executedPlan).map { case (k, n) => s"$k=$n" }.mkString(" ") +
           s" emptyScans=${emptyScans(plan)}")
         Files.writeString(Paths.get(s"$outDir/explain.txt"),
           qe.explainString(FormattedMode))

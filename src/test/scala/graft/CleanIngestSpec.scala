@@ -192,4 +192,51 @@ class CleanIngestSpec extends AnyFunSuite {
     assert(e2(16L)._2 == true && e2(16L)._3 == false,
       s"later-arriving near-dup must drop even as the smaller id: ${e2(16L)}")
   }
+
+  test("three distinct cleaning epochs pin no cached frame") {
+    // distinct epochs build distinct frames, so a cache that is never
+    // released shows up as one new persistent RDD per epoch (a replay
+    // of the same epoch would reuse the entry and hide it)
+    val root = "/tmp/graft_clean_distinct_epochs"
+    LakeFs.rmTree(root)
+    val mdl = Pipeline.nbModelOf(spark, sf)
+    val docs = graft.sources.Tables.documents(spark, sf)
+      .select(col("doc_id"), col("text"))
+    // compared as id sets: the context holds persistent RDDs weakly,
+    // so an unrelated earlier entry may vanish on a GC mid-test
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    for (e <- 0L until 3L)
+      StreamOps.cleanIngestBatch(spark, docs.filter(col("doc_id") % 3 === e), e,
+        s"$root/exact", s"$root/shingle", mdl, s"$root/out")
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(pinned.isEmpty, s"three epochs left ${pinned.size} cached frames behind")
+    LakeFs.rmTree(root)
+  }
+
+  test("ingest-side index layouts read back as the schema their writer declares") {
+    // a declaring reader sees a drifted writer's columns as nulls, so
+    // pin what each writer lays out == what its reader declares
+    import graft.operators.ShingleIndex
+    val root = "/tmp/graft_clean_layouts"
+    LakeFs.rmTree(root)
+    val mdl = Pipeline.nbModelOf(spark, sf)
+    val docs = graft.sources.Tables.documents(spark, sf)
+      .select(col("doc_id"), col("text"))
+    // epoch 0 builds the shingle index, epoch 1 appends to it
+    for (e <- 0L until 2L)
+      StreamOps.cleanIngestBatch(spark, docs.filter(col("doc_id") % 2 === e), e,
+        s"$root/exact", s"$root/shingle", mdl, s"$root/out")
+    def check(stage: String): Unit = for ((path, declared) <- Seq(
+        s"$root/shingle/shingles" -> ShingleIndex.ShinglesSchema,
+        s"$root/shingle/sizes" -> ShingleIndex.SizesSchema,
+        s"$root/shingle/stop" -> ShingleIndex.StopSchema,
+        s"$root/exact/hashes" -> StreamOps.ExactIndexSchema,
+        s"$mdl/model" -> Pipeline.NbModelSchema,
+        s"$mdl/priors" -> Pipeline.NbPriorsSchema))
+      assert(spark.read.parquet(path).schema == declared, s"$stage: $path")
+    check("appended")
+    ShingleIndex.compact(spark, s"$root/shingle")
+    check("compacted")
+    LakeFs.rmTree(root)
+  }
 }

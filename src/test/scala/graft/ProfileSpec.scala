@@ -1,5 +1,11 @@
 package graft
 
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  BroadcastQueryStageExec, QueryStageExec, ShuffleQueryStageExec,
+  TableCacheQueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tools.Profile
@@ -28,15 +34,46 @@ class ProfileSpec extends AnyFunSuite {
       "Project [doc_id#x] plan_id=x ShuffleQueryStage x lambda x_n")
   }
 
+  private def executedSparkPlan(name: String): SparkPlan = {
+    val df = SparkEntry.queries(name)(spark, TestSpark.sf)
+    df.collect()
+    try df.queryExecution.executedPlan
+    finally spark.catalog.clearCache()
+  }
+
+  /** Every node the final plan runs: into adaptive plans, query
+    * stages and subqueries, never into a cached relation's plan. */
+  private def walk(p: SparkPlan): Seq[SparkPlan] = p +: ((p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case q: QueryStageExec => Seq(q.plan)
+    case _: InMemoryTableScanExec => Nil
+    case o => o.children
+  }) ++ p.subqueries).flatMap(walk)
+
   test("the plan-shape counter reads the final plan and sees q5_multijoin's broadcasts") {
-    val twoSections = "AdaptiveSparkPlan isFinalPlan=true\n" +
-      "+- == Final Plan ==\n   BroadcastQueryStage 0\n   +- Scan parquet t\n" +
-      "+- == Initial Plan ==\n   Scan parquet t\n"
-    assert(Profile.shape(twoSections).toMap ==
-      Map("scans" -> 1, "exch" -> 0, "reusedExch" -> 0, "shuffleStages" -> 0,
-        "bcastStages" -> 1, "tableCaches" -> 0))
-    val shape = Profile.shape(executedPlan("q5_multijoin")).toMap
+    val shape = Profile.shape(executedSparkPlan("q5_multijoin")).toMap
+    assert(shape.keySet == Set("scans", "exch", "reusedExch", "shuffleStages",
+      "bcastStages", "tableCaches"))
     assert(shape("bcastStages") >= 1, shape)
+    assert(shape("scans") >= 1, shape)
+  }
+
+  test("a cached query's shape counts the operators its plan runs, each cache once") {
+    val plan = executedSparkPlan("dedup_simhash")
+    val nodes = walk(plan)
+    def n(f: SparkPlan => Boolean): Int = nodes.count(f)
+    val shape = Profile.shape(plan).toMap
+    assert(shape == Map(
+      "scans" -> n(_.isInstanceOf[FileSourceScanExec]),
+      "exch" -> n(p => p.isInstanceOf[Exchange] || p.isInstanceOf[ReusedExchangeExec]),
+      "reusedExch" -> n(_.isInstanceOf[ReusedExchangeExec]),
+      "shuffleStages" -> n(_.isInstanceOf[ShuffleQueryStageExec]),
+      "bcastStages" -> n(_.isInstanceOf[BroadcastQueryStageExec]),
+      "tableCaches" -> n(_.isInstanceOf[TableCacheQueryStageExec])), shape)
+    // the plan string repeats each cached relation's plan per
+    // reference, which is what the walk must not count
+    assert(shape("tableCaches") >= 1, shape)
+    assert("Scan parquet".r.findAllIn(plan.toString).length > shape("scans"), shape)
   }
 
   test("emptyScans flags a timed count() that pruned the query's work away") {

@@ -91,6 +91,61 @@ class TokenizeSpec extends AnyFunSuite {
     assert(e.getMessage.contains("hashed_grams"), e.getMessage)
   }
 
+  test("max_gram_count is bit-equal to the explode/groupBy gram counts it replaces") {
+    // text_repetition's former per-doc form: explode the n-grams,
+    // count per (doc, gram), then max and sum per doc; docs with no
+    // gram have no group (the repetition gate reads them as 0)
+    import spark.implicits._
+    val planted = Seq(1000001L -> "", 1000002L -> "one", 1000003L -> "one two",
+      1000004L -> "a b c a b c a b c", 1000005L -> "x x x x y").toDF("doc_id", "text")
+    val docs = graft.sources.Tables.documents(spark, sf)
+      .select(col("doc_id"), col("text")).unionByName(planted)
+      .select(col("doc_id"), TextExprs.tokens(col("text")).as("ts"))
+    for (n <- Seq(2, 3)) {
+      val slow = docs
+        .select(col("doc_id"), explode(TextExprs.gramsN(col("ts"), n)).as("g"))
+        .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
+        .groupBy(col("doc_id"))
+        .agg(max(col("c")).as("m"), sum(col("c")).as("t"))
+      val fast = docs.select(col("doc_id"),
+          TextExprs.maxGramCount(col("ts"), n).as("m"),
+          (size(col("ts")) - (n - 1)).cast("long").as("t"))
+        .filter(col("t") > 0)
+      assert(fast.count() == slow.count(), s"n=$n")
+      assert(fast.exceptAll(slow).count() == 0 && slow.exceptAll(fast).count() == 0,
+        s"n=$n")
+      assert(docs.filter(size(col("ts")) < n)
+        .select(TextExprs.maxGramCount(col("ts"), n)).collect()
+        .forall(_.getLong(0) == 0L), s"n=$n: short docs count 0")
+    }
+    val m = docs.filter(col("doc_id") >= 1000001L).orderBy(col("doc_id"))
+      .select(TextExprs.maxGramCount(col("ts"), 2), TextExprs.maxGramCount(col("ts"), 3))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(m == Seq((0L, 0L), (0L, 0L), (1L, 0L), (3L, 3L), (3L, 2L)))
+  }
+
+  test("token_weights is bit-equal to the explode/broadcast-join/groupBy NB scoring it replaces") {
+    import spark.implicits._
+    val weights = Map("the" -> -120L, "and" -> 7L, "data" -> 3000001L, "zz" -> 5L)
+    val docs = graft.sources.Tables.documents(spark, sf)
+      .select(col("doc_id"), col("text"))
+      .unionByName(Seq(2000001L -> "", 2000002L -> "The the AND zz data data")
+        .toDF("doc_id", "text"))
+      .select(col("doc_id"), TextExprs.tokens(col("text")).as("tk"))
+    val model = broadcast(weights.toSeq.toDF("token", "w"))
+    val slow = docs.select(col("doc_id"), explode_outer(col("tk")).as("token"))
+      .join(model, Seq("token"), "left")
+      .groupBy(col("doc_id"))
+      .agg(count(col("w")).as("matched"), coalesce(sum(col("w")), lit(0L)).as("score"))
+    val fast = docs.select(col("doc_id"),
+        TextExprs.tokenWeights(col("tk"), weights).as("w"))
+      .select(col("doc_id"), col("w.matched"), col("w.score"))
+    assert(fast.count() == slow.count())
+    assert(fast.exceptAll(slow).count() == 0 && slow.exceptAll(fast).count() == 0)
+    val planted = fast.filter(col("doc_id") === 2000002L).collect().head
+    assert(planted.getLong(1) == 6L && planted.getLong(2) == -240L + 7L + 5L + 6000002L)
+  }
+
   test("graft_tokens is callable from SQL via the extension") {
     val r = spark.sql("SELECT graft_tokens('Hello World 42!') AS t")
       .collect().head.getSeq[String](0)
