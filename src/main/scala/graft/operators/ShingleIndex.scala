@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Maintained lake state for shingle-based near-dedup (the
   * queries.Dedup incremental path) — the third index to get the
@@ -11,8 +11,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * per-doc shingle counts, and the build-time hot-shingle stop list.
   *
   * Layout under `indexDir`:
-  *   shingles/ (doc_id, s), partitioned by s_b = pmod(s, 16) — one
-  *             row per distinct (doc, shingle); the candidate join's
+  *   shingles/ (doc_id, s), unpartitioned — one row per distinct
+  *             (doc, shingle); the candidate join's
   *             equi-key side AND the exact-verify source (shingle-set
   *             Jaccard is fully computable from the index — unlike
   *             the substring index, no corpus re-read at verify)
@@ -30,13 +30,12 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   */
 object ShingleIndex {
 
-  /** The shingles layout as written; `s_b` is the partition column.
-    * Readers declare the layouts instead of inferring them: an
-    * inferring parquet read is a footer job per load, and the
-    * streaming ingests load all three tables every micro-batch. */
+  /** The shingles layout as written. Readers declare the layouts
+    * instead of inferring them: an inferring parquet read is a footer
+    * job per load, and the streaming ingests load all three tables
+    * every micro-batch. */
   val ShinglesSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType), StructField("s", LongType),
-    StructField("s_b", IntegerType)))
+    StructField("doc_id", LongType), StructField("s", LongType)))
 
   /** The sizes layout as written. */
   val SizesSchema: StructType = StructType(Seq(
@@ -53,12 +52,8 @@ object ShingleIndex {
     IndexLifecycle.laidOut(shingles.groupBy(col("s")).agg(count(lit(1)).as("df"))
       .filter(col("df") * 2 > lit(nd)), StopSchema)
 
-  /** (doc_id, s, s_b) rows repartitioned on the bucket — one file per
-    * bucket directory per write. */
-  private def bucketed(shingles: DataFrame): DataFrame =
-    IndexLifecycle.laidOut(
-      shingles.withColumn("s_b", pmod(col("s"), lit(16))), ShinglesSchema)
-      .repartition(col("s_b"))
+  private def shinglesOf(shingles: DataFrame): DataFrame =
+    IndexLifecycle.laidOut(shingles, ShinglesSchema)
 
   /** Batch-build from the index corpus's distinct (doc_id, s) rows. */
   def build(spark: SparkSession, shingles: DataFrame,
@@ -68,7 +63,7 @@ object ShingleIndex {
     // than re-running the shingle pipeline for one scalar
     val nd = sizes(spark, indexDir).count()
     stopOf(shingles, nd).write.mode(SaveMode.Overwrite).parquet(s"$indexDir/stop")
-    bucketed(shingles).write.mode(SaveMode.Overwrite).partitionBy("s_b")
+    shinglesOf(shingles).write.mode(SaveMode.Overwrite)
       .parquet(s"$indexDir/shingles")
   }
 
@@ -76,13 +71,12 @@ object ShingleIndex {
     * else touched. */
   def append(batchShingles: DataFrame, indexDir: String): Unit = {
     sizesOf(batchShingles).write.mode(SaveMode.Append).parquet(s"$indexDir/sizes")
-    bucketed(batchShingles).write.mode(SaveMode.Append).partitionBy("s_b")
+    shinglesOf(batchShingles).write.mode(SaveMode.Append)
       .parquet(s"$indexDir/shingles")
   }
 
   def shingles(spark: SparkSession, indexDir: String): DataFrame =
     spark.read.schema(ShinglesSchema).parquet(s"$indexDir/shingles")
-      .select(col("doc_id"), col("s"))
 
   def sizes(spark: SparkSession, indexDir: String): DataFrame =
     spark.read.schema(SizesSchema).parquet(s"$indexDir/sizes")
@@ -94,9 +88,9 @@ object ShingleIndex {
     * defers to ("an offline compaction decision, exactly like IVF
     * centroid refit"): re-derive document frequencies and the doc
     * count over the FULL appended state and rewrite stop/ from them,
-    * folding the per-append small files back into one partitioned
-    * layout pass. Unlike SubstringIndex.compact nothing is dropped —
-    * hot-shingle membership rows are load-bearing here (the
+    * folding the per-append small files back into one layout pass.
+    * Unlike SubstringIndex.compact nothing is dropped — hot-shingle
+    * membership rows are load-bearing here (the
     * exact-verify hot correction reads them) — so compaction leaves
     * the index bit-equivalent to a FRESH BUILD over the same docs
     * (asserted in DedupSpec): shingles and sizes identical, stop
@@ -115,7 +109,7 @@ object ShingleIndex {
     val nd = sizes(spark, indexDir).select(col("doc_id")).distinct().count()
     IndexLifecycle.republish(indexDir) { tmp =>
       stopOf(sh, nd).coalesce(1).write.parquet(tmp + "/stop")
-      bucketed(sh).write.partitionBy("s_b").parquet(tmp + "/shingles")
+      shinglesOf(sh).write.parquet(tmp + "/shingles")
       sizesOf(sh).coalesce(1).write.parquet(tmp + "/sizes")
     }
     sh.unpersist()

@@ -1434,11 +1434,11 @@ object Snapshots {
     *
     * Steps: staged files fold into one attempt-unique commit dir
     * (task-retry orphans in the staging area are never swept in —
-    * only the files the driver's commit messages name), the dir
-    * claims the next version number by rename (collision with a
-    * concurrent writer = retry with the next number — fan-in
-    * publishes interleave via ordinary version allocation), then
-    * epoch tag → commit marker → hint. An empty epoch writes the hint
+    * only the files the driver's commit messages name), the next
+    * version number is claimed through the atomic claim marker
+    * (claimNext — concurrent fan-in writers get distinct numbers) and
+    * the dir is renamed onto it, then epoch tag → commit marker →
+    * claim release → hint. An empty epoch writes the hint
     * only (no empty version dir to poison schema inference — the
     * lakePipe rule). Returns the version, None when already done. */
   def commitStagedEpoch(root: String, staged: Seq[String], scope: String,

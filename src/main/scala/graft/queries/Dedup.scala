@@ -457,6 +457,35 @@ object Dedup {
     minLabelClusters(pairs).orderBy(col("doc_id"))
   }
 
+  /** Driver-side union-find over a bounded set of label pairs, each
+    * component rooted at its MINIMUM label (the min-label contract of
+    * [[minLabelClusters]]), with path compression. Shared by
+    * dedup_clusters_incremental and the streaming cluster twin, which
+    * fold a micro-batch's label pairs into the persisted labels. */
+  private[graft] final class MinRootUnion(pairs: Iterable[(Long, Long)]) {
+    private val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) {
+        val n = parent(c); parent(c) = r; c = n
+      }
+      r
+    }
+
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+
+    /** (label, root) for every merged-away label that `keep` admits. */
+    def remap(keep: Long => Boolean): Seq[(Long, Long)] =
+      parent.keys.filter(keep).map(k => k -> find(k))
+        .filter { case (k, r) => k != r }.toSeq
+  }
+
   /** Min-label propagation to fixpoint over a (da, db) pair frame —
     * the connected-components engine shared by dedup_clusters and
     * the assignment-state build of dedup_clusters_incremental.
@@ -574,7 +603,7 @@ object Dedup {
     // ensure the shared shingle index exists and read the
     // batch-involved pairs through dedup_incremental's own dataflow
     val batchPairs = shingleIncrementalOf(s, Tables.documents(s, dir),
-        idx, fresh = false, key = sourceKey(dir, "g3-xx64"))
+        idx, fresh = false, key = sourceKey(dir, "g3-xx64-flat"))
       .select(col("doc_a").as("da"), col("doc_b").as("db")).cache()
     // maintained assignment state over the indexed (old) corpus:
     // components of the index's own old-old pairs, built once
@@ -604,22 +633,7 @@ object Dedup {
       .select(col("la"), col("lb"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     // driver union-find with min-roots over the bounded label pairs
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) {
-        val n = parent(c); parent(c) = r; c = n
-      }
-      r
-    }
-    lblPairs.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    val remap = parent.keys.map(k => k -> find(k))
-      .filter { case (k, r) => k != r }.toSeq
+    val remap = new MinRootUnion(lblPairs).remap(_ => true)
     val remapDf = broadcast(remap.toDF("lbl", "root"))
     val oldRows = asg
       .join(remapDf, asg("cluster_id") === remapDf("lbl"), "left")
@@ -795,7 +809,7 @@ object Dedup {
     // never touches the corpus at all
     shingleIncrementalOf(s, Tables.documents(s, dir),
       Vectors.sidecarDir("shidx", dir),
-      fresh = false, key = sourceKey(dir, "g3-xx64"))
+      fresh = false, key = sourceKey(dir, "g3-xx64-flat"))
       .orderBy(col("doc_a"), col("doc_b"))
   }
 

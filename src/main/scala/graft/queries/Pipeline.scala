@@ -577,13 +577,9 @@ object Pipeline {
   /** Docs per training shard. 64 fits the test corpus (500 docs →
     * 8 shards, enough to exercise the layout); a production run sizes
     * shards to the dataloader's unit of work — target shard bytes /
-    * mean doc bytes — via GRAFT_SHARD_DOCS. Read once at class load
-    * and interpolated into BOTH the Spark plan and the oracle SQL, so
-    * the gate stays in lockstep at any setting (the oracle takes the
-    * value as a literal either way). */
-  private val shardDocs: Long =
-    sys.env.get("GRAFT_SHARD_DOCS").map(_.toLong).filter(_ >= 1)
-      .getOrElse(64L)
+    * mean doc bytes. Interpolated into BOTH the Spark plan and the
+    * oracle SQL, so the gate stays in lockstep at any value. */
+  private val shardDocs: Long = 64L
 
   val corpusShuffle: Q = Q(
     "corpus_shuffle",

@@ -29,7 +29,7 @@ import graft.sources.Tables
   * disclosed at its site. */
 object Stats {
 
-  private def cents(c: Column): Column =
+  private[queries] def cents(c: Column): Column =
     floor(c * 100 + 0.5).cast("long")
 
   // ---------------------------------------------------------------
@@ -352,9 +352,7 @@ object Stats {
         (col("cum") - col("first") + 1).as("i"))
     rk.groupBy(col("seg"))
       .agg(count(lit(1)).as("n"), sum(col("x")).as("sum_cents"),
-        sum(col("i").cast("decimal(19,0)")
-          * col("x").cast("decimal(19,0)")).cast("decimal(38,0)")
-          .as("s1"))
+        Experiment.wide(col("i"), col("x")).as("s1"))
       .select(col("seg"), col("n"), col("sum_cents"),
         (round((col("s1").cast("double") * 2.0
           - (col("n").cast("double") + 1) * col("sum_cents"))
@@ -539,8 +537,7 @@ object Stats {
       } ++ segs.zipWithIndex.map { case (sg, i) =>
         sum(when(col("seg") === sg, col("x")).otherwise(0L))
           .as(s"s${i + 1}")
-      } :+ sum(col("x").cast("decimal(19,0)")
-        * col("x").cast("decimal(19,0)")).cast("decimal(38,0)").as("ssq")
+      } :+ Experiment.wide(col("x"), col("x")).as("ssq")
     val g = j.agg(aggs.head, aggs.tail: _*)
     // explicit left-to-right five-term chains — identical IEEE order
     def sq(i: Int): Column =
@@ -1640,17 +1637,14 @@ object Stats {
         grp("N", lit(1L)).as("n2"), grp("N", q).as("sx2"),
         grp("N", q * q).as("sxx2"))
     val d = st.select(col("n1"), col("n2"),
-      (col("sx1").cast("double") / col("n1")).as("m1"),
-      (col("sx2").cast("double") / col("n2")).as("m2"),
-      ((col("sxx1") - col("sx1").cast("double") * col("sx1") / col("n1"))
-        / (col("n1") - 1) / col("n1")).as("q1"),
-      ((col("sxx2") - col("sx2").cast("double") * col("sx2") / col("n2"))
-        / (col("n2") - 1) / col("n2")).as("q2"))
+      Experiment.mean(col("sx1"), col("n1")).as("m1"),
+      Experiment.mean(col("sx2"), col("n2")).as("m2"),
+      Experiment.varOfMean(col("sxx1"), col("sx1"), col("n1")).as("q1"),
+      Experiment.varOfMean(col("sxx2"), col("sx2"), col("n2")).as("q2"))
     d.select(col("n1"), col("n2"),
       (round(col("m1"), 6) + 0).as("mean1"),
       (round(col("m2"), 6) + 0).as("mean2"),
-      (round((col("m1") - col("m2")) / sqrt(col("q1") + col("q2")), 6)
-        + 0).as("t"),
+      Experiment.welchZ(col("m1"), col("m2"), col("q1"), col("q2")).as("t"),
       (round((col("q1") + col("q2")) * (col("q1") + col("q2"))
         / (col("q1") * col("q1") / (col("n1") - 1)
           + col("q2") * col("q2") / (col("n2") - 1)), 6) + 0).as("df"))
@@ -1710,8 +1704,7 @@ object Stats {
       .agg(sum(col("p")).as("v"))
     rev.groupBy(col("region"))
       .agg(count(lit(1)).as("n_suppliers"), sum(col("v")).as("tot_cents"),
-        sum(col("v").cast("decimal(19,0)") * col("v").cast("decimal(19,0)"))
-          .cast("decimal(38,0)").as("s2"))
+        Experiment.wide(col("v"), col("v")).as("s2"))
       .select(col("region"), col("n_suppliers"), col("tot_cents"),
         (round(col("s2").cast("double")
           / (col("tot_cents").cast("double") * col("tot_cents")), 6) + 0)
@@ -1877,24 +1870,10 @@ object Stats {
       val reps = lanes.select(col("b"), col("x"), w.as("w"))
         .groupBy(col("b"))
         .agg(sum(col("w") * col("x")).as("swx"), sum(col("w")).as("sw"))
-        .filter(col("sw") > 0)
-      val m = reps.select(col("b"),
-        (round(col("swx").cast("double") / col("sw"), 6) + 0).as("mb"))
-      // bounded band: exactly B=64 rows rank here, whatever the corpus
-      val r = m.select(col("mb"),
-        row_number().over(Window.orderBy(col("mb"), col("b")))
-          .cast("long").as("rn"),
-        count(lit(1)).over(Window.partitionBy()).as("nb"))
       val fullM = o.agg(count(lit(1)).as("n"),
         (round(sum(col("x")).cast("double") / count(lit(1)), 6) + 0)
           .as("mean_cents"))
-      r.crossJoin(broadcast(fullM))
-        .groupBy(col("n"), col("mean_cents"))
-        .agg(max(col("nb")).as("b_reps"),
-          (max(when(col("rn") === 2, col("mb"))) + 0).as("ci_lo"),
-          (max(when(col("rn") === 63, col("mb"))) + 0).as("ci_hi"))
-        .select(col("n"), col("mean_cents"), col("b_reps"),
-          col("ci_lo"), col("ci_hi"))
+      Experiment.bootInterval(reps, fullM)
     }
   }
 
@@ -2095,24 +2074,7 @@ object Stats {
       |  ROUND((1.0 - cxy * cxy / (vx * vy)) * (vy
       |    / (CAST(n AS DOUBLE) * n)), 6) + 0 AS adj_var
       |FROM d""".stripMargin) { (s, dir) =>
-    val split = to_date(lit("1998-01-01"))
-    val o = Tables.orders(s, dir).select(col("o_custkey"),
-      col("o_orderdate"), cents(col("o_totalprice")).as("p"))
-    val per = Tables.customer(s, dir).select(col("c_custkey"))
-      .join(o, col("c_custkey") === col("o_custkey"), "left")
-      .groupBy(col("c_custkey"))
-      .agg(
-        coalesce(sum(when(col("o_orderdate") < split, col("p"))
-          .otherwise(0L)), lit(0L)).as("x"),
-        coalesce(sum(when(col("o_orderdate") >= split, col("p"))
-          .otherwise(0L)), lit(0L)).as("y"))
-    def wide(a: Column, b: Column): Column =
-      sum(a.cast("decimal(19,0)") * b.cast("decimal(19,0)"))
-        .cast("decimal(38,0)")
-    val st = per.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
-      sum(col("y")).as("sy"), wide(col("x"), col("y")).as("sxy"),
-      wide(col("x"), col("x")).as("sxx"),
-      wide(col("y"), col("y")).as("syy"))
+    val st = Experiment.xySums(Experiment.spendPanel(s, dir))
     val d = st.select(col("n"), col("sx"), col("sy"),
       (col("n").cast("double") * col("sxy").cast("double")
         - col("sx").cast("double") * col("sy")).as("cxy"),
@@ -2153,7 +2115,7 @@ object Stats {
     * customer base (map-side, 2-arm state) — assignment is a pure
     * projection, no join for the arm, no window, no pairs. */
   val abReadout: Q = {
-    val armSql = s"(${graft.functions.Slots.slotSql("ab1", "c_custkey")} % 2)"
+    import Experiment._
     Q(
       "q_ab_readout",
       s"""WITH per AS (
@@ -2217,28 +2179,7 @@ object Stats {
         |  ROUND(ma_t - ma_c, 6) + 0 AS diff_cuped,
         |  ROUND((ma_t - ma_c) / SQRT(qa_t + qa_c), 6) + 0 AS t_cuped
         |FROM w""".stripMargin) { (s, dir) =>
-      val split = to_date(lit("1998-01-01"))
-      val arm = pmod(graft.functions.Slots.slot("ab1", col("c_custkey")),
-        lit(2L))
-      val o = Tables.orders(s, dir).select(col("o_custkey"),
-        col("o_orderdate"), cents(col("o_totalprice")).as("p"))
-      val per = Tables.customer(s, dir)
-        .select(col("c_custkey"), arm.as("arm"))
-        .join(o, col("c_custkey") === col("o_custkey"), "left")
-        .groupBy(col("c_custkey"), col("arm"))
-        .agg(
-          coalesce(sum(when(col("o_orderdate") < split, col("p"))
-            .otherwise(0L)), lit(0L)).as("x"),
-          coalesce(sum(when(col("o_orderdate") >= split, col("p"))
-            .otherwise(0L)), lit(0L)).as("y"))
-      def wide(a: Column, b: Column): Column =
-        sum(a.cast("decimal(19,0)") * b.cast("decimal(19,0)"))
-          .cast("decimal(38,0)")
-      val st = per.groupBy(col("arm"))
-        .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
-          sum(col("y")).as("sy"), wide(col("x"), col("y")).as("sxy"),
-          wide(col("x"), col("x")).as("sxx"),
-          wide(col("y"), col("y")).as("syy"))
+      val st = xySums(spendPanel(s, dir, arm.as("arm")), col("arm"))
         .cache() // feeds the pooled theta AND the per-arm moments
       val p = st.agg(sum(col("n")).as("np"), sum(col("sx")).as("sxp"),
         sum(col("sy")).as("syp"),
@@ -2249,36 +2190,25 @@ object Stats {
           - col("sxp").cast("double") * col("syp"))
           / (col("np").cast("double") * col("sxxp")
             - col("sxp").cast("double") * col("sxp"))).as("theta"))
-      val syD = col("sy").cast("double")
-      val adjSum = syD - col("theta") * col("sx")
+      // CUPED-adjusted sums: Σ(y−θx) and Σ(y−θx)² from the same six
+      val adjSum = col("sy").cast("double") - col("theta") * col("sx")
+      val adjSq = (col("syy").cast("double")
+        - lit(2) * col("theta") * col("sxy").cast("double")
+        + col("theta") * col("theta") * col("sxx").cast("double"))
       val arms = st.crossJoin(broadcast(th)).select(col("arm"), col("n"),
-        (syD / col("n")).as("my"),
-        ((col("syy").cast("double") - syD * col("sy") / col("n"))
-          / (col("n") - 1) / col("n")).as("qy"),
-        (adjSum / col("n")).as("ma"),
-        ((col("syy").cast("double")
-          - lit(2) * col("theta") * col("sxy").cast("double")
-          + col("theta") * col("theta") * col("sxx").cast("double")
-          - adjSum * adjSum / col("n"))
-          / (col("n") - 1) / col("n")).as("qa"),
+        mean(col("sy"), col("n")).as("my"),
+        varOfMean(col("syy"), col("sy"), col("n")).as("qy"),
+        mean(adjSum, col("n")).as("ma"),
+        varOfMean(adjSq, adjSum, col("n")).as("qa"),
         col("theta"))
-      def pick(c: String, a: Int): Column =
-        max(when(col("arm") === a, col(c)))
-      val w = arms.agg(
-        pick("n", 0).as("n_c"), pick("n", 1).as("n_t"),
-        pick("my", 0).as("my_c"), pick("my", 1).as("my_t"),
-        pick("qy", 0).as("qy_c"), pick("qy", 1).as("qy_t"),
-        pick("ma", 0).as("ma_c"), pick("ma", 1).as("ma_t"),
-        pick("qa", 0).as("qa_c"), pick("qa", 1).as("qa_t"),
-        max(col("theta")).as("theta"))
+      val w = arms.select(max(col("theta")).as("theta")
+        +: pivot("n", "my", "qy", "ma", "qa"): _*)
+      def z(m: String, q: String): Column = welchZ(col(s"${m}_t"),
+        col(s"${m}_c"), col(s"${q}_t"), col(s"${q}_c"))
       w.select(col("n_c"), col("n_t"),
-        (round(col("my_t") - col("my_c"), 6) + 0).as("diff_raw"),
-        (round((col("my_t") - col("my_c"))
-          / sqrt(col("qy_t") + col("qy_c")), 6) + 0).as("t_raw"),
+        diff("my").as("diff_raw"), z("my", "qy").as("t_raw"),
         (round(col("theta"), 6) + 0).as("theta"),
-        (round(col("ma_t") - col("ma_c"), 6) + 0).as("diff_cuped"),
-        (round((col("ma_t") - col("ma_c"))
-          / sqrt(col("qa_t") + col("qa_c")), 6) + 0).as("t_cuped"))
+        diff("ma").as("diff_cuped"), z("ma", "qa").as("t_cuped"))
     }
   }
 
@@ -2304,7 +2234,7 @@ object Stats {
     * customer×orders join (assignment is a pure projection);
     * everything after is arithmetic on a 2-row frame. */
   val powerMde: Q = {
-    val armSql = s"(${graft.functions.Slots.slotSql("ab1", "c_custkey")} % 2)"
+    import Experiment._
     Q(
       "q_power_mde",
       s"""WITH per AS (
@@ -2341,32 +2271,11 @@ object Stats {
         |  CAST(CEIL(2.801585 * 2.801585 * (v_c + v_t)
         |    / (0.02 * m_c * 0.02 * m_c)) AS BIGINT) AS n_per_arm_2pct
         |FROM w""".stripMargin) { (s, dir) =>
-      val split = to_date(lit("1998-01-01"))
-      val arm = pmod(graft.functions.Slots.slot("ab1", col("c_custkey")),
-        lit(2L))
-      val o = Tables.orders(s, dir).select(col("o_custkey"),
-        col("o_orderdate"), cents(col("o_totalprice")).as("p"))
-      val per = Tables.customer(s, dir)
-        .select(col("c_custkey"), arm.as("arm"))
-        .join(o, col("c_custkey") === col("o_custkey"), "left")
-        .groupBy(col("c_custkey"), col("arm"))
-        .agg(coalesce(sum(when(col("o_orderdate") >= split, col("p"))
-          .otherwise(0L)), lit(0L)).as("y"))
-      val st = per.groupBy(col("arm"))
-        .agg(count(lit(1)).as("n"), sum(col("y")).as("sy"),
-          sum(col("y").cast("decimal(19,0)")
-            * col("y").cast("decimal(19,0)")).cast("decimal(38,0)")
-            .as("syy"))
+      val st = ySums(spendPanel(s, dir, arm.as("arm")), col("arm"))
       val a = st.select(col("arm"), col("n"),
-        (col("sy").cast("double") / col("n")).as("m"),
-        ((col("syy").cast("double") - col("sy").cast("double")
-          * col("sy") / col("n")) / (col("n") - 1)).as("v"))
-      def pick(c: Column, armv: Int): Column =
-        max(when(col("arm") === armv, c))
-      val w = a.agg(
-        pick(col("n"), 0).as("n_c"), pick(col("n"), 1).as("n_t"),
-        pick(col("m"), 0).as("m_c"), pick(col("m"), 1).as("m_t"),
-        pick(col("v"), 0).as("v_c"), pick(col("v"), 1).as("v_t"))
+        mean(col("sy"), col("n")).as("m"),
+        variance(col("syy"), col("sy"), col("n")).as("v"))
+      val w = a.select(pivot("n", "m", "v"): _*)
       val z = lit(2.801585)
       w.select(col("n_c"), col("n_t"),
         (round(col("m_c"), 6) + 0).as("mean_c"),
@@ -2410,7 +2319,7 @@ object Stats {
     * rows whatever the corpus; the rank window and the k* scan ride
     * the bounded 25-row frame (the O(#nations) broadcast rule). */
   val fdrBh: Q = {
-    val armSql = s"(${graft.functions.Slots.slotSql("ab1", "c_custkey")} % 2)"
+    import Experiment._
     // Φ⁻¹(1 − 0.001·k) for k = 1..25 (α = 0.05, m = 25), 6dp
     val zcrit = Seq(
       3.090232, 2.878162, 2.747781, 2.65207, 2.575829, 2.512144,
@@ -2473,47 +2382,26 @@ object Stats {
         |  CASE WHEN j.k <= ks.k_star THEN 1 ELSE 0 END AS rejected
         |FROM j CROSS JOIN ks ORDER BY j.k""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val split = to_date(lit("1998-01-01"))
-      val arm = pmod(graft.functions.Slots.slot("ab1", col("c_custkey")),
-        lit(2L))
-      val o = Tables.orders(s, dir).select(col("o_custkey"),
-        col("o_orderdate"), cents(col("o_totalprice")).as("p"))
-      val per = Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_nationkey"), arm.as("arm"))
-        .join(o, col("c_custkey") === col("o_custkey"), "left")
-        .groupBy(col("c_custkey"), col("c_nationkey"), col("arm"))
-        .agg(coalesce(sum(when(col("o_orderdate") >= split, col("p"))
-          .otherwise(0L)), lit(0L)).as("y"))
-      val st = per.groupBy(col("c_nationkey"), col("arm"))
-        .agg(count(lit(1)).as("n"), sum(col("y")).as("sy"),
-          sum(col("y").cast("decimal(19,0)") * col("y").cast("decimal(19,0)"))
-            .cast("decimal(38,0)").as("syy"))
+      val st = ySums(
+        spendPanel(s, dir, col("c_nationkey"), arm.as("arm")),
+        col("c_nationkey"), col("arm"))
       val a = st.select(col("c_nationkey"), col("arm"), col("n"),
-        (col("sy").cast("double") / col("n")).as("m"),
-        when(col("n") >= 2,
-          (col("syy").cast("double")
-            - col("sy").cast("double") * col("sy") / col("n"))
-            / (col("n") - 1) / col("n")).otherwise(lit(0d)).as("q"))
+        mean(col("sy"), col("n")).as("m"),
+        when(col("n") >= 2, varOfMean(col("syy"), col("sy"), col("n")))
+          .otherwise(lit(0d)).as("q"))
       // nation is the fixed 25-row dim — the one legitimate hint
       val nat = Tables.load(s, dir, "nation")
         .select(col("n_nationkey"), col("n_name"))
-      def pick(c: String, v: Int): Column =
-        max(when(col("arm") === v, col(c)))
       val w = broadcast(nat)
         .join(a, col("n_nationkey") === col("c_nationkey"), "left")
         .groupBy(col("n_nationkey"), col("n_name").as("nation"))
         .agg(coalesce(pick("n", 0), lit(0L)).as("n_c"),
-          coalesce(pick("n", 1), lit(0L)).as("n_t"),
-          pick("m", 0).as("m_c"), pick("m", 1).as("m_t"),
-          pick("q", 0).as("q_c"), pick("q", 1).as("q_t"))
+          coalesce(pick("n", 1), lit(0L)).as("n_t") +: pivot("m", "q"): _*)
       val powered = col("n_c") >= 2 && col("n_t") >= 2
       val zf = w.select(col("nation"), col("n_c"), col("n_t"),
-        when(powered, round(col("m_t") - col("m_c"), 6) + 0)
-          .otherwise(lit(0d)).as("diff"),
-        when(powered && col("q_c") + col("q_t") > 0,
-          round((col("m_t") - col("m_c"))
-            / sqrt(col("q_c") + col("q_t")), 6) + 0)
-          .otherwise(lit(0d)).as("z"))
+        when(powered, diff("m")).otherwise(lit(0d)).as("diff"),
+        when(powered, guardedZ(col("m_t"), col("m_c"), col("q_t"),
+          col("q_c"))).otherwise(lit(0d)).as("z"))
       // the rank window and everything after ride the bounded
       // 25-row family frame
       val win = org.apache.spark.sql.expressions.Window
@@ -2562,7 +2450,7 @@ object Stats {
     * unavoidable two-pass economics of any exact winsorization);
     * the 2-row v99 frame broadcasts to the stats pass. */
   val winsorMean: Q = {
-    val armSql = s"(${graft.functions.Slots.slotSql("ab1", "c_custkey")} % 2)"
+    import Experiment._
     Q(
       "q_winsor_mean",
       s"""WITH per AS (
@@ -2622,21 +2510,11 @@ object Stats {
         |    ROUND((wm_t - wm_c) / SQRT(wq_c + wq_t), 6) + 0
         |    ELSE 0 END AS z_win
         |FROM p""".stripMargin) { (s, dir) =>
-      val split = to_date(lit("1998-01-01"))
-      val arm = pmod(graft.functions.Slots.slot("ab1", col("c_custkey")),
-        lit(2L))
-      val o = Tables.orders(s, dir).select(col("o_custkey"),
-        col("o_orderdate"), cents(col("o_totalprice")).as("p"))
       // cached: the two-pass economics of exact winsorization
       // (percentile pass, then power-sum pass) — recompute would
       // re-run the customer×orders join
-      val per = Tables.customer(s, dir)
-        .select(col("c_custkey"), arm.as("arm"))
-        .join(o, col("c_custkey") === col("o_custkey"), "left")
-        .groupBy(col("c_custkey"), col("arm"))
-        .agg(coalesce(sum(when(col("o_orderdate") >= split, col("p"))
-          .otherwise(0L)), lit(0L)).as("y"))
-        .cache()
+      val per = spendPanel(s, dir, arm.as("arm"))
+        .select(col("c_custkey"), col("arm"), col("y")).cache()
       val grouped = per.groupBy(col("arm"), col("y"))
         .agg(count(lit(1)).as("cnt"))
       val (cumDf, totals) = graft.operators.GlobalPrefix.withCumSums(
@@ -2656,38 +2534,24 @@ object Stats {
       val st = per.join(broadcast(v99), "arm")
         .groupBy(col("arm"))
         .agg(count(lit(1)).as("n"), max(col("v99")).as("v99x"),
-          sum(yw).as("sw"),
-          sum(yw.cast("decimal(19,0)") * yw.cast("decimal(19,0)"))
-            .cast("decimal(38,0)").as("sww"),
+          sum(yw).as("sw"), wide(yw, yw).as("sww"),
           sum(when(col("y") <= col("v99"), 1L).otherwise(0L)).as("m"),
           sum(when(col("y") <= col("v99"), col("y")).otherwise(0L))
             .as("stt"))
       val a = st.select(col("arm"), col("n"), col("v99x").as("v99"),
-        col("m"),
-        (col("sw").cast("double") / col("n")).as("wm"),
-        when(col("n") >= 2,
-          (col("sww").cast("double")
-            - col("sw").cast("double") * col("sw") / col("n"))
-            / (col("n") - 1) / col("n")).otherwise(lit(0d)).as("wq"),
-        (col("stt").cast("double") / col("m")).as("tm"))
-      def pick(c: String, v: Int): Column =
-        max(when(col("arm") === v, col(c)))
-      val p = a.agg(
-        pick("n", 0).as("n_c"), pick("n", 1).as("n_t"),
-        pick("v99", 0).as("v99_c"), pick("v99", 1).as("v99_t"),
-        pick("wm", 0).as("wm_c"), pick("wm", 1).as("wm_t"),
-        pick("wq", 0).as("wq_c"), pick("wq", 1).as("wq_t"),
-        pick("tm", 0).as("tm_c"), pick("tm", 1).as("tm_t"))
+        col("m"), mean(col("sw"), col("n")).as("wm"),
+        when(col("n") >= 2, varOfMean(col("sww"), col("sw"), col("n")))
+          .otherwise(lit(0d)).as("wq"),
+        mean(col("stt"), col("m")).as("tm"))
+      val p = a.select(pivot("n", "v99", "wm", "wq", "tm"): _*)
       p.select(col("n_c"), col("n_t"), col("v99_c"), col("v99_t"),
         (round(col("wm_c"), 6) + 0).as("win_mean_c"),
         (round(col("wm_t"), 6) + 0).as("win_mean_t"),
         (round(col("tm_c"), 6) + 0).as("trim_mean_c"),
         (round(col("tm_t"), 6) + 0).as("trim_mean_t"),
-        (round(col("wm_t") - col("wm_c"), 6) + 0).as("win_diff"),
-        when(col("wq_c") + col("wq_t") > 0,
-          round((col("wm_t") - col("wm_c"))
-            / sqrt(col("wq_c") + col("wq_t")), 6) + 0)
-          .otherwise(lit(0d)).as("z_win"))
+        diff("wm").as("win_diff"),
+        guardedZ(col("wm_t"), col("wm_c"), col("wq_t"), col("wq_c"))
+          .as("z_win"))
     }
   }
 
@@ -2716,7 +2580,7 @@ object Stats {
     * the customer base (assignment a pure projection); all arithmetic
     * after runs on the 2-row arm frame. */
   val did: Q = {
-    val armSql = s"(${graft.functions.Slots.slotSql("ab1", "c_custkey")} % 2)"
+    import Experiment._
     Q(
       "q_did",
       s"""WITH per AS (
@@ -2782,67 +2646,24 @@ object Stats {
         |    ROUND((md_t - md_c) / SQRT(qd_c + qd_t), 6) + 0
         |    ELSE 0 END AS z_did
         |FROM w""".stripMargin) { (s, dir) =>
-      val split = to_date(lit("1998-01-01"))
-      val arm = pmod(graft.functions.Slots.slot("ab1", col("c_custkey")),
-        lit(2L))
-      val o = Tables.orders(s, dir).select(col("o_custkey"),
-        col("o_orderdate"), cents(col("o_totalprice")).as("p"))
-      val per = Tables.customer(s, dir)
-        .select(col("c_custkey"), arm.as("arm"))
-        .join(o, col("c_custkey") === col("o_custkey"), "left")
-        .groupBy(col("c_custkey"), col("arm"))
-        .agg(
-          coalesce(sum(when(col("o_orderdate") < split, col("p"))
-            .otherwise(0L)), lit(0L)).as("x"),
-          coalesce(sum(when(col("o_orderdate") >= split, col("p"))
-            .otherwise(0L)), lit(0L)).as("y"))
-      def wide(a: Column, b: Column): Column =
-        sum(a.cast("decimal(19,0)") * b.cast("decimal(19,0)"))
-          .cast("decimal(38,0)")
-      val st = per.groupBy(col("arm"))
-        .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
-          sum(col("y")).as("sy"), wide(col("x"), col("x")).as("sxx"),
-          wide(col("y"), col("y")).as("syy"),
-          wide(col("x"), col("y")).as("sxy"))
+      val st = xySums(spendPanel(s, dir, arm.as("arm")), col("arm"))
       def q(ss: Column, sv: Column): Column =
-        when(col("n") >= 2,
-          (ss.cast("double") - sv.cast("double") * sv / col("n"))
-            / (col("n") - 1) / col("n")).otherwise(lit(0d))
+        when(col("n") >= 2, varOfMean(ss, sv, col("n"))).otherwise(lit(0d))
+      // per-customer deltas d = y − x through exact identities:
+      // Σd = Σy − Σx, Σd² = (Σy² − Σxy) + (Σx² − Σxy)
+      val sd = col("sy") - col("sx")
       val a = st.select(col("arm"), col("n"),
-        (col("sx").cast("double") / col("n")).as("mx"),
-        (col("sy").cast("double") / col("n")).as("my"),
-        ((col("sy") - col("sx")).cast("double") / col("n")).as("md"),
-        q(col("sxx"), col("sx")).as("qx"),
-        q(col("syy"), col("sy")).as("qy"),
-        when(col("n") >= 2,
-          (((col("syy") - col("sxy")) + (col("sxx") - col("sxy")))
-            .cast("double")
-            - (col("sy") - col("sx")).cast("double")
-              * (col("sy") - col("sx")) / col("n"))
-            / (col("n") - 1) / col("n")).otherwise(lit(0d)).as("qd"))
-      def pick(c: String, v: Int): Column =
-        max(when(col("arm") === v, col(c)))
-      val w = a.agg(
-        pick("n", 0).as("n_c"), pick("n", 1).as("n_t"),
-        pick("mx", 0).as("mx_c"), pick("mx", 1).as("mx_t"),
-        pick("my", 0).as("my_c"), pick("my", 1).as("my_t"),
-        pick("md", 0).as("md_c"), pick("md", 1).as("md_t"),
-        pick("qx", 0).as("qx_c"), pick("qx", 1).as("qx_t"),
-        pick("qy", 0).as("qy_c"), pick("qy", 1).as("qy_t"),
-        pick("qd", 0).as("qd_c"), pick("qd", 1).as("qd_t"))
-      def zOf(m1: Column, m0: Column, q1: Column, q0: Column): Column =
-        when(q0 + q1 > 0,
-          round((m1 - m0) / sqrt(q0 + q1), 6) + 0).otherwise(lit(0d))
+        mean(col("sx"), col("n")).as("mx"),
+        mean(col("sy"), col("n")).as("my"), mean(sd, col("n")).as("md"),
+        q(col("sxx"), col("sx")).as("qx"), q(col("syy"), col("sy")).as("qy"),
+        q((col("syy") - col("sxy")) + (col("sxx") - col("sxy")), sd).as("qd"))
+      val w = a.select(pivot("n", "mx", "my", "md", "qx", "qy", "qd"): _*)
+      def z(m: String, v: String): Column = guardedZ(col(s"${m}_t"),
+        col(s"${m}_c"), col(s"${v}_t"), col(s"${v}_c"))
       w.select(col("n_c"), col("n_t"),
-        (round(col("mx_t") - col("mx_c"), 6) + 0).as("pre_diff"),
-        zOf(col("mx_t"), col("mx_c"), col("qx_t"), col("qx_c"))
-          .as("z_pre"),
-        (round(col("my_t") - col("my_c"), 6) + 0).as("post_diff"),
-        zOf(col("my_t"), col("my_c"), col("qy_t"), col("qy_c"))
-          .as("z_post"),
-        (round(col("md_t") - col("md_c"), 6) + 0).as("did"),
-        zOf(col("md_t"), col("md_c"), col("qd_t"), col("qd_c"))
-          .as("z_did"))
+        diff("mx").as("pre_diff"), z("mx", "qx").as("z_pre"),
+        diff("my").as("post_diff"), z("my", "qy").as("z_post"),
+        diff("md").as("did"), z("md", "qd").as("z_did"))
     }
   }
 
@@ -2865,7 +2686,7 @@ object Stats {
     * base alone (no orders join — assignment is a projection of the
     * key); all arithmetic after on the bounded 26-row frame. */
   val srm: Q = {
-    val armSql = s"(${graft.functions.Slots.slotSql("ab1", "c_custkey")} % 2)"
+    import Experiment._
     Q(
       "q_srm",
       s"""WITH per AS (
@@ -2891,8 +2712,6 @@ object Stats {
         |SELECT segment, n_c, n_t, chisq,
         |  CASE WHEN chisq > 3.841459 THEN 1 ELSE 0 END AS srm_flag
         |FROM x ORDER BY segment""".stripMargin) { (s, dir) =>
-      val arm = pmod(graft.functions.Slots.slot("ab1", col("c_custkey")),
-        lit(2L))
       val per = Tables.customer(s, dir)
         .select(col("c_nationkey"), arm.as("arm"))
       val st = per.groupBy(col("c_nationkey"))
@@ -2910,15 +2729,10 @@ object Stats {
         coalesce(sum(col("n_c")), lit(0L)).as("n_c"),
         coalesce(sum(col("n_t")), lit(0L)).as("n_t"))
         .select(lit("_global").as("segment"), col("n_c"), col("n_t"))
-      val d = col("n_c") - col("n_t")
       val x = seg.unionByName(glob).select(col("segment"), col("n_c"),
-        col("n_t"),
-        when(col("n_c") + col("n_t") > 0,
-          round((d * d).cast("double") / (col("n_c") + col("n_t")), 6)
-            + 0).otherwise(lit(0d)).as("chisq"))
+        col("n_t"), srmChisq(col("n_c"), col("n_t")).as("chisq"))
       x.select(col("segment"), col("n_c"), col("n_t"), col("chisq"),
-        when(col("chisq") > 3.841459, lit(1)).otherwise(lit(0))
-          .as("srm_flag"))
+        srmFlag(col("chisq")).as("srm_flag"))
         .orderBy(col("segment"))
     }
   }

@@ -774,11 +774,7 @@ object StreamOps {
       : org.apache.spark.sql.streaming.StreamingQuery =
     epochSink(rows, root + "_abckpt") { (b, epoch) =>
       if (!b.isEmpty) {
-        val part = b.groupBy(col("arm"))
-          .agg(count(lit(1)).as("n"), sum(col("y")).as("sy"),
-            sum(col("y").cast("decimal(19,0)")
-              * col("y").cast("decimal(19,0)"))
-              .cast("decimal(38,0)").as("syy"))
+        val part = graft.queries.Experiment.ySums(b, col("arm"))
         graft.operators.IndexLifecycle.epochOnceFor(root, "abmon",
           epoch) {
           graft.operators.Snapshots.publishAppend(part, root)
@@ -792,33 +788,20 @@ object StreamOps {
     * guardrail-first readout row. Shared by the streaming emit and
     * the spec's one-shot reference so the two can never drift. */
   private[graft] def abReadoutOf(log: DataFrame): DataFrame = {
+    import graft.queries.Experiment._
     val merged = log.groupBy(col("arm"))
       .agg(sum(col("n")).as("n"), sum(col("sy")).as("sy"),
         sum(col("syy")).cast("decimal(38,0)").as("syy"))
     val a = merged.select(col("arm"), col("n"),
-      (col("sy").cast("double") / col("n")).as("m"),
-      when(col("n") >= 2,
-        (col("syy").cast("double")
-          - col("sy").cast("double") * col("sy") / col("n"))
-          / (col("n") - 1) / col("n")).otherwise(lit(0d)).as("q"))
-    def pick(c: String, v: Int) = max(when(col("arm") === v, col(c)))
-    val w = a.agg(
-      coalesce(pick("n", 0), lit(0L)).as("n_c"),
-      coalesce(pick("n", 1), lit(0L)).as("n_t"),
-      pick("m", 0).as("m_c"), pick("m", 1).as("m_t"),
-      pick("q", 0).as("q_c"), pick("q", 1).as("q_t"))
-    val d = col("n_c") - col("n_t")
+      mean(col("sy"), col("n")).as("m"),
+      when(col("n") >= 2, varOfMean(col("syy"), col("sy"), col("n")))
+        .otherwise(lit(0d)).as("q"))
+    val w = a.agg(coalesce(pick("n", 0), lit(0L)).as("n_c"),
+      coalesce(pick("n", 1), lit(0L)).as("n_t") +: pivot("m", "q"): _*)
     w.select(col("n_c"), col("n_t"),
-      when(col("n_c") + col("n_t") > 0,
-        round((d * d).cast("double") / (col("n_c") + col("n_t")), 6) + 0)
-        .otherwise(lit(0d)).as("srm_chisq"),
-      (round(col("m_t") - col("m_c"), 6) + 0).as("diff"),
-      when(col("q_c") + col("q_t") > 0,
-        round((col("m_t") - col("m_c"))
-          / sqrt(col("q_c") + col("q_t")), 6) + 0)
-        .otherwise(lit(0d)).as("z"))
-      .withColumn("srm_flag",
-        when(col("srm_chisq") > 3.841459, lit(1)).otherwise(lit(0)))
+      srmChisq(col("n_c"), col("n_t")).as("srm_chisq"), diff("m").as("diff"),
+      guardedZ(col("m_t"), col("m_c"), col("q_t"), col("q_c")).as("z"))
+      .withColumn("srm_flag", srmFlag(col("srm_chisq")))
       .select(col("n_c"), col("n_t"), col("srm_chisq"),
         col("srm_flag"), col("diff"), col("z"))
   }
@@ -861,26 +844,14 @@ object StreamOps {
           .agg(sum(col("swx")).as("swx"), sum(col("sw")).as("sw"),
             sum(col("sv")).as("sv"), sum(col("n")).as("n"))
           .cache()
-        val m = merged.filter(col("sw") > 0).select(col("b"),
-          (round(col("swx").cast("double") / col("sw"), 6) + 0).as("mb"))
-        val r = m.select(col("mb"),
-          row_number().over(org.apache.spark.sql.expressions.Window
-            .orderBy(col("mb"), col("b"))).cast("long").as("rn"),
-          count(lit(1)).over(org.apache.spark.sql.expressions.Window
-            .partitionBy()).as("nb"))
         val fullM = merged.agg(
           (sum(col("n")) / lit(PoissonBoot.B.toLong)).cast("long").as("n"),
           (round((sum(col("sv")) / lit(PoissonBoot.B.toLong))
             .cast("double")
             / (sum(col("n")) / lit(PoissonBoot.B.toLong)), 6) + 0)
             .as("mean_v"))
-        val ci = r.crossJoin(broadcast(fullM))
-          .groupBy(col("n"), col("mean_v"))
-          .agg(max(col("nb")).as("b_reps"),
-            (max(when(col("rn") === 2, col("mb"))) + 0).as("ci_lo"),
-            (max(when(col("rn") === PoissonBoot.B - 1L, col("mb"))) + 0)
-              .as("ci_hi"))
-        emitEpoch(ci, epoch, outDir)
+        emitEpoch(graft.queries.Experiment.bootInterval(merged, fullM),
+          epoch, outDir)
         merged.unpersist()
       }
     }
@@ -1474,20 +1445,7 @@ object StreamOps {
         Seq("db"))
       .select(col("la"), col("lb"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) {
-        val n = parent(c); parent(c) = r; c = n
-      }
-      r
-    }
-    lblPairs.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
+    val uf = new graft.queries.Dedup.MinRootUnion(lblPairs)
     // remap rows exist only for PERSISTED roots merged away — a new
     // doc's self-label needs none (its assignment row is written
     // post-merge below), which is what keeps remap/ sized by
@@ -1495,13 +1453,11 @@ object StreamOps {
     val persistedLbls = asg.join(ends, Seq("doc_id"), "left_semi")
       .select(col("lbl")).distinct()
       .collect().map(r => chain.getOrElse(r.getLong(0), r.getLong(0))).toSet
-    val newRemap = parent.keys.filter(persistedLbls.contains)
-      .map(k => k -> find(k))
-      .filter { case (k, r) => k != r }.toSeq
+    val newRemap = uf.remap(persistedLbls.contains)
     // docs entering the graph this epoch, labeled with their
     // post-merge root (bounded: pair endpoints)
     val newAsg = endLbl.join(asg, Seq("doc_id"), "left_anti")
-      .collect().map(r => (r.getLong(0), find(r.getLong(1))))
+      .collect().map(r => (r.getLong(0), uf.find(r.getLong(1))))
     IndexLifecycle.epochOnce(clusterDir, epoch) {
       if (newRemap.nonEmpty)
         newRemap.toDF("lbl", "root").coalesce(1)

@@ -554,6 +554,52 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("streaming A/B monitor over the ab1 spend panel equals q_ab_readout and q_srm") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import graft.queries.{Experiment, Stats}
+    // the per-customer (arm, y) rows q_ab_readout reads, in two epochs
+    val panel = Experiment.spendPanel(spark, sf, Experiment.arm.as("arm"))
+      .select(col("c_custkey"), col("arm"), col("y"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val root = "/tmp/graft_abparity_spec_idx"
+    val outDir = "/tmp/graft_abparity_spec_out"
+    Seq(root, root + "_abckpt", outDir)
+      .foreach(graft.operators.LakeFs.rmTree)
+    val ms = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, Long)]
+    val q = StreamOps.abMonitorIngest(
+      spark, ms.toDS().toDF("arm", "y"), root, outDir)
+    try {
+      for (half <- 0 to 1) {
+        ms.addData(panel.filter(_._1 % 2 == half).map(t => (t._2, t._3))
+          .toIndexedSeq: _*)
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    val emitted = spark.read.parquet(outDir)
+    val epochs = emitted.select(col("epoch").cast("long")).distinct()
+      .collect().map(_.getLong(0))
+    assert(epochs.length == 2, s"expected 2 epochs, got ${epochs.toSeq}")
+    val live = emitted.filter(col("epoch") === epochs.max)
+      .select(col("n_c"), col("n_t"), col("diff"), col("z"),
+        col("srm_chisq"), col("srm_flag"))
+      .collect().head
+    val ab = Stats.abReadout.run(spark, sf)
+      .select(col("n_c"), col("n_t"), col("diff_raw"), col("t_raw"))
+      .collect().head
+    assert((live.getLong(0), live.getLong(1), live.getDouble(2),
+        live.getDouble(3)) ==
+      (ab.getLong(0), ab.getLong(1), ab.getDouble(2), ab.getDouble(3)),
+      s"stream $live vs q_ab_readout $ab")
+    val srm = Stats.srm.run(spark, sf).filter(col("segment") === "_global")
+      .select(col("chisq"), col("srm_flag")).collect().head
+    assert((live.getDouble(4), live.getInt(5)) ==
+      (srm.getDouble(0), srm.getInt(1)), s"stream $live vs q_srm $srm")
+    Seq(root, root + "_abckpt", outDir)
+      .foreach(graft.operators.LakeFs.rmTree)
+  }
+
   test("streaming bootstrap CI: merged-replicate interval equals the one-shot batch computation") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -3,6 +3,7 @@
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir>
        python3 tools/check.py --lint <sfDir> <oracle_sql.json>
+       python3 tools/check.py --same <verifyOutA> <verifyOutB>
 
 Reads each <verifyOutDir>/<name> parquet (written by graft.Verify),
 runs the matching oracle SQL from oracle_sql.json in DuckDB against
@@ -16,7 +17,15 @@ type-sensitive, so an oracle whose result schema contains HUGEINT
 (DuckDB promotes SUM(BIGINT) to int128) reds the gate even when every
 cell matches bit-for-bit. The lint fails any oracle result column
 whose type is outside the allowlist below.
+
+--same compares two Verify outputs with each other, no oracle: every
+query dir (the rows-only queries too) must hold the same columns,
+types and rows, rows sorted and values compared exactly (floats by
+their shortest round-trip repr), and oracle_sql.json must match byte
+for byte. It lists every name that differs — the check for a refactor
+that must not move a single output value.
 """
+import os
 import json
 import math
 import re
@@ -136,6 +145,41 @@ def main(sf_dir, out_dir):
     return 1 if n_fail else 0
 
 
+def exact_rows(con, path):
+    rel = con.sql(f"SELECT * FROM '{path}/*.parquet'")
+    cols = [(c, str(t)) for c, t in zip(rel.columns, rel.types)]
+    rows = sorted(tuple("NaN" if isinstance(v, float) and math.isnan(v)
+                        else repr(v) for v in r) for r in rel.fetchall())
+    return cols, rows
+
+
+def main_same(dir_a, dir_b):
+    con = duckdb.connect()
+    names = {d: {n for n in os.listdir(d) if os.path.isdir(f"{d}/{n}")}
+             for d in (dir_a, dir_b)}
+    differ = sorted(names[dir_a] ^ names[dir_b])
+    for n in differ:
+        print(f"DIFF {n}: only in {dir_a if n in names[dir_a] else dir_b}")
+    both = sorted(names[dir_a] & names[dir_b])
+    for n in both:
+        try:
+            a = exact_rows(con, f"{dir_a}/{n}")
+            b = exact_rows(con, f"{dir_b}/{n}")
+        except Exception as e:
+            a, b = ("error", str(e)), None
+        if a != b:
+            print(f"DIFF {n}")
+            differ.append(n)
+    with open(f"{dir_a}/oracle_sql.json", "rb") as fa, \
+            open(f"{dir_b}/oracle_sql.json", "rb") as fb:
+        if fa.read() != fb.read():
+            print("DIFF oracle_sql.json")
+            differ.append("oracle_sql.json")
+    print(f"== {len(both) - len(set(differ) & set(both))}/{len(both)} "
+          f"query outputs identical, {len(differ)} names differ ==")
+    return 1 if differ else 0
+
+
 def main_lint(sf_dir, oracle_json):
     con = duckdb.connect()
     for t in TABLES:
@@ -147,4 +191,6 @@ def main_lint(sf_dir, oracle_json):
 if __name__ == "__main__":
     if sys.argv[1] == "--lint":
         sys.exit(main_lint(sys.argv[2], sys.argv[3]))
+    if sys.argv[1] == "--same":
+        sys.exit(main_same(sys.argv[2], sys.argv[3]))
     sys.exit(main(sys.argv[1], sys.argv[2]))
