@@ -155,9 +155,9 @@ object IndexLifecycle {
 
   /** [[epochOnce]] scoped to one named producer: epoch ids are
     * per-query counters, so when SEVERAL streams feed one root (the
-    * multi-writer ingest, Snapshots.publishConcurrent) each stream's
-    * epoch 0 is a different fact — the marker carries the stream id
-    * (`_GRAFT_EPOCH_<streamId>_<epoch>`). Retention reaps these per
+    * multi-writer ingest, StreamOps.snapshotIngestConcurrent) each
+    * stream's epoch 0 is a different fact — the marker carries the
+    * stream id (`_GRAFT_EPOCH_<streamId>_<epoch>`). Retention reaps these per
     * stream (Snapshots' vacuum family parses the id back off the
     * name — everything up to the final underscore). */
   def epochOnceFor(idxDir: String, streamId: String, epoch: Long)(

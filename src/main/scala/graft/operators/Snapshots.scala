@@ -15,12 +15,11 @@ import org.apache.spark.sql.functions.{array, col, concat, count, explode, lit, 
   * highest COMMITTED one (or the highest committed <= an as-of
   * version) — so a writer that crashes mid-write leaves a torn,
   * marker-less directory that is simply invisible: readers never see
-  * a partial table, and the next publish allocates past it. `publish`
-  * assumes a single writer per table (the nightly-job model);
-  * concurrent writers use [[publishConcurrent]] (every caller lands
-  * at a distinct version — claim-marker arbitration) or [[publishIf]]
-  * (compare-and-swap for read-modify-write cycles), no log service
-  * required.
+  * a partial table, and the next publish allocates past it. Every
+  * writer commits through one claimed path ([[commit]]), so any
+  * number of concurrent writers land at distinct versions;
+  * read-modify-write cycles use [[publishIf]] (compare-and-swap), no
+  * log service required.
   *
   * All filesystem access goes through [[LakeFs]], so a root may be a
   * local path, `hdfs://`, or `s3a://` — publish is write-then-marker
@@ -95,25 +94,13 @@ object Snapshots {
     } finally conf.set(key, prev)
   }
 
-  /** Write `df` as the next snapshot of `root` and commit it.
-    * Returns the published version. Allocation skips past torn
-    * (uncommitted) directories, never reusing their numbers. */
-  def publish(df: DataFrame, root: String): Long = {
-    val n = versions(root).lastOption.map(_._1).getOrElse(0L) + 1
-    writeVersion(df, s"$root/v=$n")
-    val ok = LakeFs.createMarker(s"$root/v=$n/$Marker")
-    require(ok, s"snapshot v=$n already committed — concurrent writer?")
-    n
-  }
-
-  // ---- optimistic concurrency: the multi-writer commit protocol ----
+  // ---- the commit protocol: one claimed path for every writer ----
   //
-  // `publish` assumes one writer per table (the nightly-job model).
-  // Concurrent writers coordinate through CLAIM markers at the table
-  // root: `_SNAP_CLAIM_<n>` is created-if-absent BEFORE any data is
-  // written to v=<n>, and `createMarker` is the same atomic primitive
-  // the commit marker uses (LakeFs contract) — so two writers can
-  // never both own a version number. A claimant that crashes leaves a
+  // Writers coordinate through CLAIM markers at the table root:
+  // `_SNAP_CLAIM_<n>` is created-if-absent BEFORE any data is written
+  // to v=<n>, and `createMarker` is the same atomic primitive the
+  // commit marker uses (LakeFs contract) — so two writers can never
+  // both own a version number. A claimant that crashes leaves a
   // claim + torn dir: invisible to readers, its number never reused
   // (allocation takes max over dirs AND claims). Claims at or below
   // the latest committed version are garbage (that number can never
@@ -132,38 +119,61 @@ object Snapshots {
       }
     }
 
-  /** Atomically claim the next free version number: one atomic
-    * create-if-absent per attempt, re-listing on loss. O(1) listings
-    * absent contention; under contention each loser re-lists once. */
+  /** Atomically claim the next free version number — the only
+    * version allocator: one root listing (version dirs and claims
+    * alike) and one atomic create-if-absent per attempt, re-listing
+    * on loss. With no live claim this is the highest `v=<n>` dir
+    * (torn ones included) plus one. */
   private def claimNext(root: String): Long = {
     var attempts = 0
     while (attempts < 1000) {
-      val vmax = versions(root).lastOption.map(_._1).getOrElse(0L)
-      val cmax = claims(root).maxOption.getOrElse(0L)
-      val n = math.max(vmax, cmax) + 1
+      val n = LakeFs.list(root).iterator.map(_.getPath.getName).collect {
+        case VDir(v) => v.toLong
+        case ClaimMarker(c) => c.toLong
+      }.maxOption.getOrElse(0L) + 1
       if (LakeFs.createMarker(s"$root/_SNAP_CLAIM_$n")) return n
       attempts += 1
     }
     sys.error(s"claimNext($root): lost the claim race 1000 times")
   }
 
-  /** Multi-writer publish: claim a version atomically, write, commit,
-    * release the claim. Any number of concurrent callers succeed at
-    * DISTINCT versions — the shape concurrent ingest streams need on
-    * one append log, where union semantics make every interleaving
-    * correct. On the snapshot flavor concurrent publishers serialize
-    * by version number (readers resolve the highest committed — a
-    * slow writer's snapshot can land below an already-visible newer
-    * one and simply never becomes latest); read-modify-write cycles
-    * use [[publishIf]] instead. */
-  def publishConcurrent(df: DataFrame, root: String): Long = {
+  /** The one version commit: claim `n`, run `write` into `v=<n>`,
+    * create the kind `markers` (base, tombstone, …), then the commit
+    * marker, and release the claim. Any number of concurrent callers
+    * commit at DISTINCT versions — union semantics make every
+    * interleaving correct on the append log; on the snapshot flavor a
+    * slow writer's version can land below an already-visible newer
+    * one and simply never becomes latest. With `expected` the commit
+    * is the compare-and-swap of [[publishIf]]. A `write` that throws
+    * releases the claim and leaves its torn dir (invisible, its
+    * number never reused), so a failed publish blocks no later
+    * [[publishIf]]. Returns the committed version. */
+  private def commit(root: String, expected: Option[Long] = None,
+      markers: Seq[String] = Nil)(write: String => Unit): Long = {
     val n = claimNext(root)
-    writeVersion(df, s"$root/v=$n")
-    require(LakeFs.createMarker(s"$root/v=$n/$Marker"),
-      s"snapshot v=$n already committed under our claim — protocol bug")
-    LakeFs.rmFile(s"$root/_SNAP_CLAIM_$n")
+    val dir = s"$root/v=$n"
+    try {
+      expected.foreach { e =>
+        if (n != e + 1) throw new SnapshotConflict(
+          s"publishIf($root): expected to commit v=${e + 1} but " +
+            s"claimed v=$n — a concurrent writer (or a dead claim; run " +
+            "vacuumClaims) got there first; re-read and retry")
+      }
+      write(dir)
+      markers.foreach(m =>
+        require(LakeFs.createMarker(s"$dir/$m"), s"$m marker v=$n"))
+      require(LakeFs.createMarker(s"$dir/$Marker"),
+        s"snapshot v=$n already committed under our claim — protocol bug")
+    } finally LakeFs.rmFile(s"$root/_SNAP_CLAIM_$n")
     n
   }
+
+  /** Write `df` as the next snapshot of `root` and commit it.
+    * Returns the published version. Allocation skips past torn
+    * (uncommitted) directories and live claims, never reusing their
+    * numbers. */
+  def publish(df: DataFrame, root: String): Long =
+    commit(root)(writeVersion(df, _))
 
   /** Thrown when [[publishIf]] loses the optimistic-concurrency race;
     * callers re-read the table, recompute, and retry. */
@@ -182,21 +192,8 @@ object Snapshots {
     * (conservatively: a CRASHED claimant also inflates `n`, making
     * the conflict spurious — after `vacuumClaims` the retry goes
     * through; conflicts can be false-positive, never false-negative). */
-  def publishIf(df: DataFrame, root: String, expected: Long): Long = {
-    val n = claimNext(root)
-    if (n != expected + 1) {
-      LakeFs.rmFile(s"$root/_SNAP_CLAIM_$n")
-      throw new SnapshotConflict(
-        s"publishIf($root): expected to commit v=${expected + 1} but " +
-          s"claimed v=$n — a concurrent writer (or a dead claim; run " +
-          "vacuumClaims) got there first; re-read and retry")
-    }
-    writeVersion(df, s"$root/v=$n")
-    require(LakeFs.createMarker(s"$root/v=$n/$Marker"),
-      s"snapshot v=$n already committed under our claim — protocol bug")
-    LakeFs.rmFile(s"$root/_SNAP_CLAIM_$n")
-    n
-  }
+  def publishIf(df: DataFrame, root: String, expected: Long): Long =
+    commit(root, Some(expected))(writeVersion(df, _))
 
   /** Reap ALL claim markers — the recovery for claims left by crashed
     * writers above the latest committed version, which block
@@ -217,18 +214,8 @@ object Snapshots {
   /** The latest committed snapshot, or (with `asOf`) the newest
     * committed snapshot at or before that version — time travel. */
   def read(s: SparkSession, root: String,
-      asOf: Option[Long] = None): DataFrame = {
-    val live = committed(root)
-    val pick = asOf match {
-      case Some(v) => live.takeWhile(_._1 <= v).lastOption
-      case None => live.lastOption
-    }
-    val (v, dir) = pick.getOrElse(sys.error(
-      s"no committed snapshot in $root" +
-        asOf.map(v => s" at or before v=$v").getOrElse("")))
-    require(v >= 0, "unreachable")
-    s.read.parquet(dataDirs(dir): _*)
-  }
+      asOf: Option[Long] = None): DataFrame =
+    s.read.parquet(readDirs(root, asOf): _*)
 
   /** The shallow-clone marker: a version directory holding this file
     * has NO data files of its own — each line of the marker names a
@@ -265,20 +252,16 @@ object Snapshots {
       dstRoot.replaceAll("[^A-Za-z0-9_.-]", "_") + s"-v$pin"
     if (!tags(srcRoot).contains(tagName)) tag(srcRoot, tagName, pin)
     val dirs = window.flatMap { case (_, d) => dataDirs(d) }
-    val n = versions(dstRoot).lastOption.map(_._1).getOrElse(0L) + 1
-    val dir = s"$dstRoot/v=$n"
-    LakeFs.mkdirs(dir)
-    LakeFs.write(s"$dir/$CloneMarker", dirs.mkString("\n"))
     // a LOG clone is a full-state version: its base marker makes log
     // readers treat it as subsuming everything below (cloning INTO a
     // live log behaves like RESTORE-from-elsewhere). A SNAPSHOT clone
     // must NOT carry one — vacuum() refuses roots with base markers
     // (the append-log guard), so the marker would permanently break
     // the destination's snapshot retention path.
-    if (logFlavor)
-      require(LakeFs.createMarker(s"$dir/$Base"), s"base marker v=$n")
-    require(LakeFs.createMarker(s"$dir/$Marker"), s"commit marker v=$n")
-    n
+    commit(dstRoot, markers = if (logFlavor) Seq(Base) else Nil) { dir =>
+      LakeFs.mkdirs(dir)
+      LakeFs.write(s"$dir/$CloneMarker", dirs.mkString("\n"))
+    }
   }
 
   /** SHALLOW CLONE of a snapshot-flavor table: publish `srcRoot`'s
@@ -555,13 +538,8 @@ object Snapshots {
       if (committed(br).isEmpty) None
       else already.orElse {
         requireNoTombstones(br, "mergeBranch", "a MoR branch merge", None)
-        val n = versions(root).lastOption.map(_._1).getOrElse(0L) + 1
-        writeVersion(readLog(s, br), s"$root/v=$n")
-        require(LakeFs.createMarker(s"$root/v=$n/$FromBranchPrefix$name"),
-          s"from-branch marker v=$n")
-        require(LakeFs.createMarker(s"$root/v=$n/$Marker"),
-          s"merge v=$n already committed — concurrent writer?")
-        Some(n)
+        Some(commit(root, markers = Seq(FromBranchPrefix + name))(
+          writeVersion(readLog(s, br), _)))
       }
     dropBranch(root, name)
     v
@@ -624,14 +602,11 @@ object Snapshots {
     * frame on the stat column first (repartitionByRange / ZOrder) —
     * tight per-file ranges are what make the manifest prune. */
   def publishWithStats(df: DataFrame, root: String,
-      statCols: Seq[String]): Long = {
-    val n = versions(root).lastOption.map(_._1).getOrElse(0L) + 1
-    writeVersion(df, s"$root/v=$n")
-    SnapStats.writeManifest(s"$root/v=$n", statCols)
-    val ok = LakeFs.createMarker(s"$root/v=$n/$Marker")
-    require(ok, s"snapshot v=$n already committed — concurrent writer?")
-    n
-  }
+      statCols: Seq[String]): Long =
+    commit(root) { dir =>
+      writeVersion(df, dir)
+      SnapStats.writeManifest(dir, statCols)
+    }
 
   /** Publish with a Hive-style partition layout INSIDE the version
     * dir (`v=<n>/<col>=<val>/...`): Spark's partition discovery
@@ -645,11 +620,7 @@ object Snapshots {
   def publishPartitioned(df: DataFrame, root: String,
       partCols: Seq[String]): Long = {
     require(partCols.nonEmpty, "publishPartitioned: no partition columns")
-    val n = versions(root).lastOption.map(_._1).getOrElse(0L) + 1
-    writeVersion(df, s"$root/v=$n", partCols)
-    val ok = LakeFs.createMarker(s"$root/v=$n/$Marker")
-    require(ok, s"snapshot v=$n already committed — concurrent writer?")
-    n
+    commit(root)(writeVersion(df, _, partCols))
   }
 
   /** Build the per-file Bloom index over `c` for the LATEST committed
@@ -835,16 +806,6 @@ object Snapshots {
         "has_tombstones", "n_clone_versions")
   }
 
-  /** The streaming reader's batch window (sources.SnapshotStreamSource,
-    * `format("graftsnap")`): committed versions in (after, until],
-    * skipping tombstone key-batches (delete markers, not data rows)
-    * and — once a stream is past its first batch — compaction bases,
-    * which are rewrites of rows the stream already delivered (the
-    * skip IS the exactly-once guarantee across OPTIMIZE, the same
-    * contract Delta's streaming source keeps over compacted files).
-    * A FIRST batch (after == 0) on an already-compacted log starts AT
-    * the newest base inside the window — the initial-snapshot batch,
-    * exactly the prefix [[readLog]] resolves. */
   /** Highest committed version ever reaped by retention — the
     * stream-loss fence: a checkpointed stream whose offset is BELOW
     * this may have unread raw appends already deleted (and their fold
@@ -864,6 +825,16 @@ object Snapshots {
         LakeFs.write(s"$root/$StreamHorizon", hi.toString)
     }
 
+  /** The streaming reader's batch window (sources.SnapshotStreamSource,
+    * `format("graftsnap")`): committed versions in (after, until],
+    * skipping tombstone key-batches (delete markers, not data rows)
+    * and — once a stream is past its first batch — compaction bases,
+    * which are rewrites of rows the stream already delivered (the
+    * skip IS the exactly-once guarantee across OPTIMIZE, the same
+    * contract Delta's streaming source keeps over compacted files).
+    * A FIRST batch (after == 0) on an already-compacted log starts AT
+    * the newest base inside the window — the initial-snapshot batch,
+    * exactly the prefix [[readLog]] resolves. */
   def streamWindow(root: String, after: Long,
       until: Long): Seq[(Long, String)] = {
     val horizon = streamHorizon(root)
@@ -894,15 +865,8 @@ object Snapshots {
     * tombstones only act through [[readLogMerged]], which is the
     * reader a keyed log uses. O(batch) like any append; the deletes
     * are folded away by [[compactLogMerged]]. */
-  def publishDeletes(keys: DataFrame, root: String): Long = {
-    val n = versions(root).lastOption.map(_._1).getOrElse(0L) + 1
-    writeVersion(keys, s"$root/v=$n")
-    require(LakeFs.createMarker(s"$root/v=$n/$Tombstone"),
-      s"tombstone marker v=$n")
-    require(LakeFs.createMarker(s"$root/v=$n/$Marker"),
-      s"snapshot v=$n already committed — concurrent writer?")
-    n
-  }
+  def publishDeletes(keys: DataFrame, root: String): Long =
+    commit(root, markers = Seq(Tombstone))(writeVersion(keys, _))
 
   // ---- position deletes (deletion vectors) -----------------------
   //
@@ -959,14 +923,8 @@ object Snapshots {
     require(deletes.columns.toSeq.sorted == Seq("_file", "_pos"),
       "publishPositionDeletes takes exactly (_file, _pos) — select " +
         "them from a readLogPos frame")
-    val n = versions(root).lastOption.map(_._1).getOrElse(0L) + 1
-    writeVersion(deletes.select(col("_file"),
-      col("_pos").cast("long")), s"$root/v=$n")
-    require(LakeFs.createMarker(s"$root/v=$n/$PosDelete"),
-      s"pos-delete marker v=$n")
-    require(LakeFs.createMarker(s"$root/v=$n/$Marker"),
-      s"snapshot v=$n already committed — concurrent writer?")
-    n
+    commit(root, markers = Seq(PosDelete))(
+      writeVersion(deletes.select(col("_file"), col("_pos").cast("long")), _))
   }
 
   /** MERGE-ON-READ with deletion vectors: the raw union minus every
@@ -1063,14 +1021,6 @@ object Snapshots {
     out
   }
 
-  /** One frame per window version with SCHEMA EVOLUTION resolved
-    * driver-side: all schemas equal → a single multi-path FileScan
-    * (O(versions) paths in one scan); otherwise fold `unionByName`
-    * with null-fill, so a version that ADDED a column reads back with
-    * the old versions null-filled — column order is the oldest
-    * version's columns followed by each later addition in version
-    * order (deterministic). Footer reads are O(versions) and
-    * compactLog folds the count back down. */
   /** Hive-partitioned version dirs (publishPartitioned) must read
     * per-dir: Spark's partition discovery refuses multiple roots
     * (CONFLICTING_DIRECTORY_STRUCTURES), while a per-root read
@@ -1079,6 +1029,14 @@ object Snapshots {
     dirs.exists(d => LakeFs.list(d).exists(st =>
       st.isDirectory && st.getPath.getName.contains("=")))
 
+  /** One frame per window version with SCHEMA EVOLUTION resolved
+    * driver-side: all schemas equal → a single multi-path FileScan
+    * (O(versions) paths in one scan); otherwise fold `unionByName`
+    * with null-fill, so a version that ADDED a column reads back with
+    * the old versions null-filled — column order is the oldest
+    * version's columns followed by each later addition in version
+    * order (deterministic). Footer reads are O(versions) and
+    * compactLog folds the count back down. */
   private def unionWindow(s: SparkSession,
       window: Seq[(Long, String)]): DataFrame = {
     val dirs = window.flatMap(w => dataDirs(w._2))
@@ -1260,13 +1218,8 @@ object Snapshots {
         "(merge-on-read log) — a raw fold would turn deletes into " +
         "rows; use compactLogMerged")
     val folded = unionWindow(s, tail)
-    val n = versions(root).lastOption.map(_._1).getOrElse(0L) + 1
-    writeVersion(folded, s"$root/v=$n")
-    require(LakeFs.createMarker(s"$root/v=$n/_SNAP_BASE_FROM_$fromV"),
-      s"base-from marker v=$n")
-    require(LakeFs.createMarker(s"$root/v=$n/$Marker"),
-      s"commit marker v=$n")
-    n
+    commit(root, markers = Seq(s"_SNAP_BASE_FROM_$fromV"))(
+      writeVersion(folded, _))
   }
 
   /** OPTIMIZE ZORDER for the append log — the nightly layout job a
@@ -1300,12 +1253,10 @@ object Snapshots {
   private def commitOptimized(s: SparkSession, folded: DataFrame,
       root: String, cx: String, cy: String, files: Int): Long = {
     val clustered = ZOrder.clustered(folded, cx, cy, files)
-    val n = versions(root).lastOption.map(_._1).getOrElse(0L) + 1
-    writeVersion(clustered, s"$root/v=$n")
-    SnapStats.writeManifest(s"$root/v=$n", Seq(cx, cy))
-    require(LakeFs.createMarker(s"$root/v=$n/$Base"), s"base marker v=$n")
-    require(LakeFs.createMarker(s"$root/v=$n/$Marker"), s"commit marker v=$n")
-    n
+    commit(root, markers = Seq(Base)) { dir =>
+      writeVersion(clustered, dir)
+      SnapStats.writeManifest(dir, Seq(cx, cy))
+    }
   }
 
   /** REPLACE the table's readable content with `df` in one committed
@@ -1320,24 +1271,9 @@ object Snapshots {
     commitCompacted(df, root, partCols)
 
   private def commitCompacted(folded: DataFrame, root: String,
-      partCols: Seq[String] = Nil): Long = {
-    val n = versions(root).lastOption.map(_._1).getOrElse(0L) + 1
-    writeVersion(folded, s"$root/v=$n", partCols)
-    require(LakeFs.createMarker(s"$root/v=$n/$Base"), s"base marker v=$n")
-    require(LakeFs.createMarker(s"$root/v=$n/$Marker"), s"commit marker v=$n")
-    n
-  }
+      partCols: Seq[String] = Nil): Long =
+    commit(root, markers = Seq(Base))(writeVersion(folded, _, partCols))
 
-  /** Log retention: delete committed versions strictly below the
-    * newest compacted version (they are subsumed and no longer read),
-    * torn dirs below the latest commit (reaped whether or not a
-    * compaction exists), and epoch markers below the newest
-    * `keepEpochs` (foreachBatch only ever replays the LATEST epoch,
-    * so older markers gate nothing and would otherwise grow the root
-    * listing — walked by every read/publish — without bound under a
-    * long-lived stream). Time travel below the compaction boundary is
-    * given up — the same trade every log-structured table's retention
-    * makes. */
   /** The versions a log-flavor VACUUM would reap RIGHT NOW — the
     * DRY RUN view, and vacuumLog's own reap set (one computation, so
     * the plan and the action can never drift): keep exactly the
@@ -1362,6 +1298,16 @@ object Snapshots {
     }
   }
 
+  /** Log retention: delete committed versions strictly below the
+    * newest compacted version (they are subsumed and no longer read),
+    * torn dirs below the latest commit (reaped whether or not a
+    * compaction exists), and epoch markers below the newest
+    * `keepEpochs` (foreachBatch only ever replays the LATEST epoch,
+    * so older markers gate nothing and would otherwise grow the root
+    * listing — walked by every read/publish — without bound under a
+    * long-lived stream). Time travel below the compaction boundary is
+    * given up — the same trade every log-structured table's retention
+    * makes. */
   def vacuumLog(root: String, keepEpochs: Int = 8): Unit = {
     val live = committed(root)
     if (live.nonEmpty) {
@@ -1435,9 +1381,9 @@ object Snapshots {
     * Steps: staged files fold into one attempt-unique commit dir
     * (task-retry orphans in the staging area are never swept in —
     * only the files the driver's commit messages name), the next
-    * version number is claimed through the atomic claim marker
-    * (claimNext — concurrent fan-in writers get distinct numbers) and
-    * the dir is renamed onto it, then epoch tag → commit marker →
+    * version number is claimed through [[commit]] (concurrent fan-in
+    * writers get distinct numbers) and the dir is renamed onto it,
+    * then epoch tag → commit marker →
     * claim release → hint. An empty epoch writes the hint
     * only (no empty version dir to poison schema inference — the
     * lakePipe rule). Returns the version, None when already done. */
@@ -1487,45 +1433,22 @@ object Snapshots {
         s"staged file vanished or collided: $f")
     }
     LakeFs.mkdirs(root)
-    // claim the version number through the OCC claim marker (the
-    // publishConcurrent primitive — create-if-absent is atomic, and
-    // claims are visible to every other allocator), NOT by probing
-    // rename: LakeFs.rename's exists-check is check-then-act, and
-    // Hadoop rename moves a directory INTO an existing destination —
-    // two fan-in writers probing the same n would nest the loser's
-    // commit dir inside the winner's version and silently lose it
-    val n = claimNext(root)
-    require(LakeFs.rename(commitDir, s"$root/v=$n"),
-      s"claimed v=$n under $root but the rename failed — torn state?")
-    LakeFs.write(s"$root/v=$n/$epochTag", "")
-    require(LakeFs.createMarker(s"$root/v=$n/$Marker"),
-      s"snapshot v=$n already committed — concurrent writer?")
-    LakeFs.rmFile(s"$root/_SNAP_CLAIM_$n")
+    // the version number comes from the claim marker (create-if-absent
+    // is atomic, and claims are visible to every other allocator), NOT
+    // from probing rename: LakeFs.rename's exists-check is
+    // check-then-act, and Hadoop rename moves a directory INTO an
+    // existing destination — two fan-in writers probing the same n
+    // would nest the loser's commit dir inside the winner's version
+    // and silently lose it
+    val n = commit(root, markers = Seq(epochTag)) { dir =>
+      require(LakeFs.rename(commitDir, dir),
+        s"claimed $dir but the rename failed — torn state?")
+    }
     LakeFs.write(hint, "")
     LakeFs.rmTree(stageDir)
     Some(n)
   }
 
-  /** MERGE-publish: the next snapshot is the previous one with
-    * `upserts` applied by `key` (matched rows replaced, new keys
-    * appended) and `deleteKeys` dropped (tombstones) — the MERGE INTO
-    * shape on top of the snapshot protocol, so every merge is itself
-    * an immutable, time-travelable version and a crashed merge leaves
-    * the table on its previous snapshot (torn-dir rule). Cost is one
-    * anti-join plus the snapshot rewrite — the copy-on-write flavor;
-    * a change-heavy table amortizes through the append log +
-    * [[readLogMerged]]/[[compactLogMerged]] instead.
-    *
-    * Standard MERGE INTO ambiguity rule enforced: a target key may be
-    * matched by at most ONE source row, so duplicate keys within
-    * `upserts` and any upserts∩deleteKeys overlap are rejected up
-    * front. The grouped source-key frame is CACHED and shared between
-    * the eager check and the anti-join (sources compute once, never a
-    * second validation pass over derived inputs); the check itself is
-    * a separate eager action on purpose — an in-plan raise_error on
-    * the join's build side can be optimized AWAY with the join (e.g.
-    * empty-relation propagation when the target snapshot is empty),
-    * silently publishing the duplicates it was guarding against. */
   /** Per-expectation violation counts of a committed publishExpect
     * version (empty for versions published without expectations). */
   def expectReport(root: String, version: Long): Map[String, Long] =
@@ -1601,16 +1524,12 @@ object Snapshots {
       val good = cached.filter(allPass)
       val version =
         if (good.isEmpty) None
-        else {
-          val n = versions(root).lastOption.map(_._1).getOrElse(0L) + 1
-          writeVersion(good, s"$root/v=$n")
-          LakeFs.write(s"$root/v=$n/$ExpectMarker",
+        else Some(commit(root) { dir =>
+          writeVersion(good, dir)
+          LakeFs.write(s"$dir/$ExpectMarker",
             expectations.map { case (en, _) =>
               s"$en\t${counts(en)}" }.mkString("\n"))
-          require(LakeFs.createMarker(s"$root/v=$n/$Marker"),
-            s"snapshot v=$n already committed — concurrent writer?")
-          Some(n)
-        }
+        })
       val qv =
         if (mode == "quarantine" && totalBad > 0L) {
           val bad = cached.filter(not(allPass))
@@ -1623,6 +1542,26 @@ object Snapshots {
     } finally { cached.unpersist(); () }
   }
 
+  /** MERGE-publish: the next snapshot is the previous one with
+    * `upserts` applied by `key` (matched rows replaced, new keys
+    * appended) and `deleteKeys` dropped (tombstones) — the MERGE INTO
+    * shape on top of the snapshot protocol, so every merge is itself
+    * an immutable, time-travelable version and a crashed merge leaves
+    * the table on its previous snapshot (torn-dir rule). Cost is one
+    * anti-join plus the snapshot rewrite — the copy-on-write flavor;
+    * a change-heavy table amortizes through the append log +
+    * [[readLogMerged]]/[[compactLogMerged]] instead.
+    *
+    * Standard MERGE INTO ambiguity rule enforced: a target key may be
+    * matched by at most ONE source row, so duplicate keys within
+    * `upserts` and any upserts∩deleteKeys overlap are rejected up
+    * front. The grouped source-key frame is CACHED and shared between
+    * the eager check and the anti-join (sources compute once, never a
+    * second validation pass over derived inputs); the check itself is
+    * a separate eager action on purpose — an in-plan raise_error on
+    * the join's build side can be optimized AWAY with the join (e.g.
+    * empty-relation propagation when the target snapshot is empty),
+    * silently publishing the duplicates it was guarding against. */
   def publishMerge(s: SparkSession, root: String, key: String,
       upserts: DataFrame, deleteKeys: DataFrame): Long = {
     val k = col(key)
@@ -1696,19 +1635,6 @@ object Snapshots {
     }
   }
 
-  /** Retention for the SNAPSHOT flavor: keep the newest `keep`
-    * committed snapshots, delete every older committed one AND every
-    * torn directory below the newest committed version (torn dirs are
-    * invisible to readers and safe to reap once a newer commit
-    * exists). Epoch markers are retained for the newest `keep` epochs
-    * and reaped below that — foreachBatch only ever replays the
-    * LATEST epoch, so a marker older than the retention horizon can
-    * no longer gate anything.
-    *
-    * REFUSES on an append-log root that has been compacted (any
-    * version carrying a base marker): log readers union a window, so
-    * snapshot-retention semantics here would silently delete versions
-    * `readLog` still reads — use [[vacuumLog]] for log roots. */
   /** The snapshot-flavor reap set — the DRY RUN view and vacuum's
     * own plan (shared, so they cannot drift). Same guards as the
     * action: compacted append-log roots refuse. */
@@ -1732,6 +1658,19 @@ object Snapshots {
     }
   }
 
+  /** Retention for the SNAPSHOT flavor: keep the newest `keep`
+    * committed snapshots, delete every older committed one AND every
+    * torn directory below the newest committed version (torn dirs are
+    * invisible to readers and safe to reap once a newer commit
+    * exists). Epoch markers are retained for the newest `keep` epochs
+    * and reaped below that — foreachBatch only ever replays the
+    * LATEST epoch, so a marker older than the retention horizon can
+    * no longer gate anything.
+    *
+    * REFUSES on an append-log root that has been compacted (any
+    * version carrying a base marker): log readers union a window, so
+    * snapshot-retention semantics here would silently delete versions
+    * `readLog` still reads — use [[vacuumLog]] for log roots. */
   def vacuum(root: String, keep: Int): Unit = {
     val toReap = vacuumPlan(root, keep)
     if (committed(root).nonEmpty) {

@@ -1170,10 +1170,11 @@ object StreamOps {
   /** MULTI-WRITER streaming ingest: any number of independent
     * streaming queries append to ONE log root concurrently — the
     * fan-in shape a large ingest actually has (one table, many
-    * producers, no coordinator). Version numbers are allocated by the
-    * claim-marker OCC protocol (Snapshots.publishConcurrent — two
-    * writers can never own one version, and union semantics make
-    * every commit interleaving correct), and exactly-once is tracked
+    * producers, no coordinator). Every Snapshots writer allocates its
+    * version through the claim-marker commit (two writers can never
+    * own one version, and union semantics make every commit
+    * interleaving correct), so each stream's plain `publish` lands at
+    * a distinct version; exactly-once is tracked
     * PER STREAM: epoch ids are per-query counters, so the replay
     * marker is scoped by `streamId` (IndexLifecycle.epochOnceFor —
     * two streams' epoch 0 are different facts; the single-writer
@@ -1189,7 +1190,7 @@ object StreamOps {
   private[graft] def snapshotIngestConcurrentBatch(batch: DataFrame,
       epoch: Long, root: String, streamId: String): Unit =
     graft.operators.IndexLifecycle.epochOnceFor(root, streamId, epoch) {
-      graft.operators.Snapshots.publishConcurrent(batch, root)
+      graft.operators.Snapshots.publish(batch, root)
       ()
     }
 

@@ -432,7 +432,7 @@ class SnapshotSpec extends AnyFunSuite {
         pool.submit(new java.util.concurrent.Callable[Long] {
           def call(): Long = {
             gate.await()
-            Snapshots.publishConcurrent(Seq(w.toLong).toDF("k"), root)
+            Snapshots.publish(Seq(w.toLong).toDF("k"), root)
           }
         })
       }
@@ -452,7 +452,7 @@ class SnapshotSpec extends AnyFunSuite {
   test("publishIf: CAS succeeds at expected+1, stale writers conflict, no lost update") {
     import spark.implicits._
     val root = freshRoot("occ_cas")
-    val v1 = Snapshots.publishConcurrent(Seq(0L).toDF("n"), root)
+    val v1 = Snapshots.publish(Seq(0L).toDF("n"), root)
     // two read-modify-write writers both read latest=v1; first wins
     def bump(expected: Long): Long = {
       val cur = Snapshots.read(spark, root, asOf = Some(expected))
@@ -475,6 +475,82 @@ class SnapshotSpec extends AnyFunSuite {
     Snapshots.vacuumClaims(root)
     bump(latest)
     assert(Snapshots.read(spark, root).head().getLong(0) == 3L)
+  }
+
+  test("every writer commits above a live claim and leaves it in place") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    def df(ks: Long*) = ks.map(k => (k, k * 10L)).toDF("k", "y")
+    // plant a live claim on the number the writer would otherwise take
+    // (the highest v=<n> dir + 1): the writer must go past it, and the
+    // claim — another writer's — must survive the commit; every
+    // writer runs, and the offenders are reported together
+    val bad = scala.collection.mutable.ArrayBuffer[String]()
+    def aboveClaim(root: String, what: String)(writer: => Long): Unit = {
+      val planted = Snapshots.latestVersion(root).getOrElse(0L) + 1
+      val claim = s"$root/_SNAP_CLAIM_$planted"
+      assert(LakeFs.createMarker(claim))
+      val v = writer
+      assert(Snapshots.latestVersion(root).contains(v), s"$what: v=$v")
+      if (v <= planted) bad += s"$what committed v=$v over claim $planted"
+      if (!LakeFs.isFile(claim)) bad += s"$what removed claim $planted"
+    }
+    val log = freshRoot("claim_log")
+    Snapshots.publishAppend(df(1L, 2L), log)
+    aboveClaim(log, "publishAppend")(Snapshots.publishAppend(df(3L), log))
+    aboveClaim(log, "publishWithStats")(
+      Snapshots.publishWithStats(df(4L), log, Seq("k")))
+    aboveClaim(log, "maintainLog/compactLogTail")(
+      Snapshots.maintainLog(spark, log, maxTail = 1).get)
+    aboveClaim(log, "compactLog")(Snapshots.compactLog(spark, log))
+    aboveClaim(log, "optimize")(Snapshots.optimize(spark, log, "k", "y", 2))
+    aboveClaim(log, "restore")(Snapshots.restore(spark, log, 2L))
+    Snapshots.createBranch(log, "b")
+    Snapshots.publishBranch(df(5L), log, "b")
+    aboveClaim(log, "mergeBranch")(Snapshots.mergeBranch(spark, log, "b").get)
+    aboveClaim(log, "publishExpect")(Snapshots.publishExpect(
+      df(6L), log, Seq("pos" -> (col("k") > 0L))).version.get)
+    val dst = freshRoot("claim_clone")
+    Snapshots.publish(df(7L), dst)
+    aboveClaim(dst, "cloneTable")(Snapshots.cloneTable(spark, log, dst))
+    val part = freshRoot("claim_part")
+    aboveClaim(part, "publishPartitioned")(
+      Snapshots.publishPartitioned(df(1L), part, Seq("y")))
+    val mor = freshRoot("claim_mor")
+    Snapshots.publishAppend(df(1L, 2L), mor)
+    aboveClaim(mor, "publishDeletes")(
+      Snapshots.publishDeletes(Seq(1L).toDF("k"), mor))
+    val dv = freshRoot("claim_dv")
+    Snapshots.publishAppend(df(1L, 2L), dv)
+    aboveClaim(dv, "publishPositionDeletes")(Snapshots.publishPositionDeletes(
+      Snapshots.readLogPos(spark, dv).filter(col("k") === 1L)
+        .select("_file", "_pos"), dv))
+    assert(Snapshots.readLogDv(spark, dv).select("k").as[Long].collect()
+      .toSeq == Seq(2L))
+    assert(bad.isEmpty, bad.mkString("; "))
+  }
+
+  test("a publish whose write throws releases its claim") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    val root = freshRoot("claim_release")
+    val v1 = Snapshots.publish(Seq(1L).toDF("k"), root)
+    val boom = spark.range(0, 8).select(
+      when(col("id") > 3L, raise_error(lit("boom"))).otherwise(col("id"))
+        .as("k"))
+    def claimsLeft = LakeFs.list(root)
+      .exists(_.getPath.getName.startsWith("_SNAP_CLAIM_"))
+    // the CAS publish first: it claims v1 + 1 and its write throws
+    intercept[Exception](Snapshots.publishIf(boom, root, v1))
+    assert(!claimsLeft, "a failed publishIf left its claim behind")
+    intercept[Exception](Snapshots.publish(boom, root))
+    assert(!claimsLeft, "a failed publish left its claim behind")
+    val v = Snapshots.publish(Seq(2L).toDF("k"), root)
+    assert(Snapshots.latestVersion(root).contains(v))
+    assert(Snapshots.read(spark, root).as[Long].collect().toSeq == Seq(2L))
+    // the torn dirs stay invisible; CAS from the fresh latest commits
+    assert(Snapshots.publishIf(Seq(3L).toDF("k"), root, v) == v + 1)
+    assert(!claimsLeft)
   }
 
   test("change data feed: net diff between versions with Delta-CDF change types") {
@@ -1012,9 +1088,9 @@ class SnapshotSpec extends AnyFunSuite {
       q.processAllAvailable()
       assert(seen.sorted == (0 to 19).map(i => (i.toLong, s"r$i")),
         "initial batch must deliver both committed versions once")
-      // publish mid-stream through BOTH publish flavors
+      // publish mid-stream through both publish entry points
       Snapshots.publishAppend(batch(20, 29), root)
-      Snapshots.publishConcurrent(batch(30, 39), root)
+      Snapshots.publish(batch(30, 39), root)
       q.processAllAvailable()
       assert(seen.sorted == (0 to 39).map(i => (i.toLong, s"r$i")),
         "mid-stream versions must arrive exactly once")
