@@ -32,6 +32,22 @@ object Binary {
     z
   }
 
+  /** `use` on this thread's reader bound to `payload`; None when the
+    * reader rejects the bytes. A rejected (wrong-format, corrupt)
+    * payload leaves the reader reusable — setInput resets it — so only
+    * a fatal error disposes the handle and drops it from the thread. */
+  private def threadRead[T](tl: ThreadLocal[javax.imageio.ImageReader],
+      payload: Array[Byte])(use: javax.imageio.ImageReader => T): Option[T] = {
+    val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
+      new java.io.ByteArrayInputStream(payload))
+    val r = tl.get()
+    try { r.setInput(iis); Some(use(r)) }
+    catch {
+      case scala.util.control.NonFatal(_) => None
+      case t: Throwable => r.dispose(); tl.remove(); throw t
+    } finally iis.close()
+  }
+
   /** One decoded image: dimensions, channel count, and exact per-band
     * pixel sums (integers, so the feature row is bit-deterministic —
     * PNG is lossless and getRGB is exact sRGB). */
@@ -49,8 +65,8 @@ object Binary {
       * crawl WILL contain corrupt images). */
     // Per-thread codec handles (guide §4.5): service lookup + codec
     // construction once per executor thread, reused across every
-    // payload the thread touches; a handle that throws is dropped so
-    // a poisoned instance can't leak into the next row. The corpus
+    // payload the thread touches; a writer that throws is dropped so
+    // a poisoned instance can't leak (readers: see threadRead). The corpus
     // format is PNG; anything else falls back to full ImageIO
     // discovery, preserving the multi-format + corrupt-drop contract.
     private val pngWriterTL =
@@ -85,17 +101,9 @@ object Binary {
     private def readImage(
         payload: Array[Byte]): Option[java.awt.image.BufferedImage] =
       try {
-        val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
-          new java.io.ByteArrayInputStream(payload))
-        val fast =
-          try {
-            val r = pngReaderTL.get()
-            try { r.setInput(iis); Option(r.read(0)) }
-            catch { case scala.util.control.NonFatal(_) =>
-              pngReaderTL.remove(); None }
-          } finally iis.close()
-        fast.orElse(Option(javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(payload))))
+        threadRead(pngReaderTL, payload)(r => Option(r.read(0))).flatten
+          .orElse(Option(javax.imageio.ImageIO.read(
+            new java.io.ByteArrayInputStream(payload))))
       } catch { case scala.util.control.NonFatal(_) => None }
 
     /** Exact integer per-band sums over a raster — the one stats
@@ -571,8 +579,8 @@ object Binary {
     // clips' cost dominated by per-call ImageIO service lookups and
     // writer/reader construction, not pixels. Executor task threads
     // are reused, so a ThreadLocal amortizes the handle across every
-    // clip the thread ever touches; a handle that throws is dropped
-    // (remove) so a poisoned instance can't leak into the next row.
+    // clip the thread ever touches; a writer that throws is dropped
+    // so a poisoned instance can't leak (readers: see threadRead).
     private val GifGrays = Array.tabulate(256)(_.toByte)
     private val GifCm = new java.awt.image.IndexColorModel(
       8, 256, GifGrays, GifGrays, GifGrays)
@@ -589,20 +597,12 @@ object Binary {
       * other JDK-readable container, `empty` on corrupt/unclaimed
       * payloads — the same drop-per-row contract as before (a 100 TB
       * crawl WILL contain corrupt clips; they must never kill the
-      * partition). */
+      * partition). An `empty` fast result falls back too: the GIF
+      * reader counts zero frames in a non-GIF container. */
     private def withReader[T](payload: Array[Byte], empty: T)(
         use: javax.imageio.ImageReader => T): T =
       try {
-        val iis1 = new javax.imageio.stream.MemoryCacheImageInputStream(
-          new java.io.ByteArrayInputStream(payload))
-        val fast =
-          try {
-            val r = gifReaderTL.get()
-            try { r.setInput(iis1); Some(use(r)) }
-            catch { case scala.util.control.NonFatal(_) =>
-              gifReaderTL.remove(); None }
-          } finally iis1.close()
-        fast.getOrElse {
+        threadRead(gifReaderTL, payload)(use).filter(_ != empty).getOrElse {
           val iis2 = new javax.imageio.stream.MemoryCacheImageInputStream(
             new java.io.ByteArrayInputStream(payload))
           try {

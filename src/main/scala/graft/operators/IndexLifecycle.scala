@@ -149,14 +149,16 @@ object IndexLifecycle {
     * corpus-scale state on every query, is the mechanism. Markers are
     * one empty file per epoch at the index root (underscore-prefixed:
     * invisible to Spark's file listing) and survive compact/refit
-    * (republish carries them over). */
+    * (republish carries them over). Serves index dirs and the twins
+    * committing TWO lake versions per epoch (cdcIngestBatch,
+    * expectIngest); one-version twins use Snapshots.publishEpoch. */
   def epochOnce(idxDir: String, epoch: Long)(append: => Unit): Unit =
     markerOnce(idxDir, s"_GRAFT_EPOCH_$epoch")(append)
 
   /** [[epochOnce]] scoped to one named producer: epoch ids are
     * per-query counters, so when SEVERAL streams feed one root (the
-    * multi-writer ingest, StreamOps.snapshotIngestConcurrent) each
-    * stream's epoch 0 is a different fact — the marker carries the
+    * fan-in StreamOps.expectIngest) each stream's epoch 0 is a
+    * different fact — the marker carries the
     * stream id (`_GRAFT_EPOCH_<streamId>_<epoch>`). Retention reaps these per
     * stream (Snapshots' vacuum family parses the id back off the
     * name — everything up to the final underscore). */

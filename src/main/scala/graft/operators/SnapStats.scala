@@ -42,19 +42,31 @@ object SnapStats {
     case _ => None // binary/bool: no manifest entry — file stays kept
   }
 
+  /** The parquet data files directly under `dir`. */
+  private def dataFiles(dir: String) =
+    LakeFs.list(dir).filter { st =>
+      val n = st.getPath.getName
+      st.isFile && n.endsWith(".parquet") &&
+        !n.startsWith("_") && !n.startsWith(".")
+    }
+
+  /** True iff a parquet file directly under `dir` holds a row, read
+    * off the footers: a written version's emptiness costs no job. */
+  private[operators] def holdsRows(dir: String): Boolean =
+    dataFiles(dir).exists { st =>
+      val r = ParquetFileReader.open(
+        HadoopInputFile.fromStatus(st, LakeFs.hadoopConf))
+      try r.getRecordCount > 0 finally r.close()
+    }
+
   /** Build the `_SNAP_STATS` manifest for the parquet files directly
     * under `dir`, covering `cols`. An entry is written only when
     * EVERY row group of the file carries usable numeric stats for the
     * column — a partial bound is not a bound. */
   def writeManifest(dir: String, cols: Seq[String]): Unit = {
     val conf = LakeFs.hadoopConf
-    val files = LakeFs.list(dir).filter { st =>
-      val n = st.getPath.getName
-      st.isFile && n.endsWith(".parquet") &&
-        !n.startsWith("_") && !n.startsWith(".")
-    }
     val sb = new StringBuilder
-    files.foreach { st =>
+    dataFiles(dir).foreach { st =>
       val reader = ParquetFileReader.open(
         HadoopInputFile.fromStatus(st, conf))
       try {
@@ -100,11 +112,7 @@ object SnapStats {
     * graftsnap pushdown shape — a bare `k > 5` has no upper bound). */
   def prunedPaths(dir: String, col: String,
       lo: Option[BigDecimal], hi: Option[BigDecimal]): Seq[String] = {
-    val files = LakeFs.list(dir).filter { st =>
-      val n = st.getPath.getName
-      st.isFile && n.endsWith(".parquet") &&
-        !n.startsWith("_") && !n.startsWith(".")
-    }.map(_.getPath)
+    val files = dataFiles(dir).map(_.getPath)
     LakeFs.readString(s"$dir/$ManifestName") match {
       case None => files.map(_.toString)
       case Some(manifest) =>
@@ -177,11 +185,7 @@ object SnapStats {
     * files), every parquet file when it does not; files missing from
     * the index are kept. */
   def pointPaths(dir: String, c: String, value: Long): Seq[String] = {
-    val files = LakeFs.list(dir).filter { st =>
-      val n = st.getPath.getName
-      st.isFile && n.endsWith(".parquet") &&
-        !n.startsWith("_") && !n.startsWith(".")
-    }.map(_.getPath)
+    val files = dataFiles(dir).map(_.getPath)
     LakeFs.readString(s"$dir/${bloomName(c)}") match {
       case None => files.map(_.toString)
       case Some(idx) =>

@@ -144,20 +144,30 @@ object Snapshots {
     * interleaving correct on the append log; on the snapshot flavor a
     * slow writer's version can land below an already-visible newer
     * one and simply never becomes latest. With `expected` the commit
-    * is the compare-and-swap of [[publishIf]]. A `write` that throws
-    * releases the claim and leaves its torn dir (invisible, its
-    * number never reused), so a failed publish blocks no later
-    * [[publishIf]]. Returns the committed version. */
+    * is the compare-and-swap of [[publishIf]]: `n` must be
+    * `expected + 1`, or every number between them a dead dir. A
+    * `write` that throws releases the claim and leaves its torn dir
+    * (invisible, its number never reused); since every writer holds
+    * its claim until it commits or fails, a `v=<k>` dir with neither
+    * commit marker nor claim is dead, so a failed publish blocks no
+    * later [[publishIf]]. Returns the committed version. */
   private def commit(root: String, expected: Option[Long] = None,
       markers: Seq[String] = Nil)(write: String => Unit): Long = {
     val n = claimNext(root)
     val dir = s"$root/v=$n"
     try {
       expected.foreach { e =>
-        if (n != e + 1) throw new SnapshotConflict(
-          s"publishIf($root): expected to commit v=${e + 1} but " +
-            s"claimed v=$n — a concurrent writer (or a dead claim; run " +
-            "vacuumClaims) got there first; re-read and retry")
+        // claims are listed BEFORE any commit marker is probed: a
+        // writer drops its claim only after its commit marker, so a
+        // number unclaimed then and uncommitted after is dead for good
+        lazy val held = claims(root).toSet
+        def dead(k: Long) = !held(k) && LakeFs.isDir(s"$root/v=$k") &&
+          !isCommitted(s"$root/v=$k")
+        if (n <= e || !(e + 1 until n).forall(dead))
+          throw new SnapshotConflict(
+            s"publishIf($root): expected to commit v=${e + 1} but " +
+              s"claimed v=$n — a concurrent writer (or a dead claim; " +
+              "run vacuumClaims) got there first; re-read and retry")
       }
       write(dir)
       markers.foreach(m =>
@@ -181,17 +191,19 @@ object Snapshots {
     extends java.util.ConcurrentModificationException(msg)
 
   /** Compare-and-swap publish — the read-modify-write commit (MERGE,
-    * compaction): succeeds only as version `expected + 1`, where
-    * `expected` is the latest committed version the caller's read
+    * compaction): succeeds only as the first live version after
+    * `expected`, the latest committed version the caller's read
     * started from. Soundness is the Delta-style contiguity rule
     * carried by claims: we atomically claim `n`; if `n == expected+1`
     * then NO other writer holds or can take any number in between, so
     * no commit can ever appear between our read state and our new
     * version — lost updates are impossible. If `n > expected + 1`
-    * someone else claimed first and we throw [[SnapshotConflict]]
-    * (conservatively: a CRASHED claimant also inflates `n`, making
-    * the conflict spurious — after `vacuumClaims` the retry goes
-    * through; conflicts can be false-positive, never false-negative). */
+    * someone else claimed first and we throw [[SnapshotConflict]] —
+    * unless every number in between is a dead dir (torn, unclaimed:
+    * its writer failed), which no commit can ever fill. A CRASHED
+    * claimant still holds its claim and inflates `n`, making the
+    * conflict spurious — after `vacuumClaims` the retry goes through;
+    * conflicts can be false-positive, never false-negative. */
   def publishIf(df: DataFrame, root: String, expected: Long): Long =
     commit(root, Some(expected))(writeVersion(df, _))
 
@@ -1318,8 +1330,8 @@ object Snapshots {
       // silently skips rows whose dirs are already gone
       raiseStreamHorizon(root,
         toReap.collect { case (v, d) if isCommitted(d) => v })
-      // promote in-version sink epoch tags (_SNAP_EPOCH_<scope>_<e>,
-      // commitStagedEpoch's crash-recovery witness) to root hints
+      // promote in-version epoch tags (_SNAP_EPOCH_<scope>_<e>,
+      // epochGuard's crash-recovery witness) to root hints
       // BEFORE the dir is deleted — otherwise reaping a committed
       // version whose root hint was never written (crash between
       // commit marker and hint) would erase the only record that the
@@ -1341,112 +1353,103 @@ object Snapshots {
     }
   }
 
-  /** True iff `epochOnce` already published this epoch for `root` —
-    * see StreamOps.snapshotIngest. Marker protocol and naming are
-    * IndexLifecycle.epochOnce's, not a parallel implementation. */
-  def epochPublished(root: String, epoch: Long): Boolean =
-    LakeFs.isFile(s"$root/_GRAFT_EPOCH_$epoch")
-
-  /** Exactly-once per-epoch publish: a replayed micro-batch (same
-    * epoch id) skips the publish instead of appending a duplicate
-    * version — the foreachBatch retry contract, delegated to
-    * IndexLifecycle.epochOnce (ONE marker-gated protocol in the
-    * codebase: checked first, written last, with the same documented
-    * residual window — crash after commit, before marker — that log
-    * readers deduping on a batch key absorb). Returns the published
-    * version, None when the epoch had already run. */
-  def epochOnce(root: String, epoch: Long)(publishFn: => Long): Option[Long] = {
-    var v: Option[Long] = None
-    IndexLifecycle.epochOnce(root, epoch) { v = Some(publishFn) }
+  /** The exactly-once guard both epoch commits share: an epoch of
+    * `scope` is done when its root hint `_GRAFT_EPOCH_<scope>_<epoch>`
+    * exists (the fast path) or a committed version carries its tag
+    * `_SNAP_EPOCH_<scope>_<epoch>`, which the commit creates BEFORE
+    * its commit marker — so no crash point lets a replay double the
+    * epoch, and correctness never depends on the hint. The scan walks
+    * committed versions newest first and stops at this scope's first
+    * tag at or below `epoch` (a scope's epochs are monotone). Else
+    * `publish` runs; the hint is written last either way. */
+  private def epochGuard(root: String, scope: String, epoch: Long)(
+      publish: => Option[Long]): Option[Long] = {
+    require(scope.matches("[A-Za-z0-9_-]+"),
+      s"scope must be [A-Za-z0-9_-]+: '$scope'")
+    val hint = s"$root/_GRAFT_EPOCH_${scope}_$epoch"
+    if (LakeFs.isFile(hint)) return None
+    val TagRe = s"^_SNAP_EPOCH_${scope}_(\\d+)$$".r
+    val committedBefore = versions(root).reverseIterator
+      .filter { case (_, d) => isCommitted(d) }
+      .flatMap { case (_, d) =>
+        LakeFs.list(d).iterator.map(_.getPath.getName).collectFirst {
+          case TagRe(e) if e.toLong <= epoch => e.toLong
+        }
+      }
+      .nextOption().contains(epoch)
+    val v = if (committedBefore) None else publish
+    LakeFs.mkdirs(root)
+    LakeFs.write(hint, "")
     v
   }
+
+  private def epochTag(scope: String, epoch: Long): String =
+    s"_SNAP_EPOCH_${scope}_$epoch"
+
+  private object NoRows extends scala.util.control.ControlThrowable
+
+  /** Exactly-once per-epoch append, the streaming twins' lake
+    * publish: `df` commits as ONE version tagged with `scope`'s
+    * `epoch` under [[epochGuard]]. Epoch ids are per-query counters,
+    * so each producer on a root needs its own scope. A frame with no
+    * rows commits no version (an empty version dir would poison the
+    * log's schema inference), read off the written footers rather
+    * than a probe job. Returns the version; None when already done
+    * or empty. */
+  def publishEpoch(df: DataFrame, root: String, scope: String,
+      epoch: Long): Option[Long] =
+    epochGuard(root, scope, epoch) {
+      try Some(commit(root, markers = Seq(epochTag(scope, epoch))) { dir =>
+        writeVersion(df, dir)
+        if (!SnapStats.holdsRows(dir)) { LakeFs.rmTree(dir); throw NoRows }
+      })
+      catch { case NoRows => None }
+    }
 
   /** Commit task-staged parquet files as ONE new committed log
     * version — the DSv2 streaming sink's commit half (the executors
     * already wrote `staged`; this is pure control-plane: renames and
-    * markers, no data I/O).
+    * markers, no data I/O), exactly once under [[epochGuard]].
     *
-    * Exactly-once with NO residual window, tightening [[epochOnce]]'s
-    * documented crash gap via the _SNAP_BASE discipline ("a committed
-    * version always knows what it is"): the version dir carries
-    * `_SNAP_EPOCH_<scope>_<epoch>` BEFORE its commit marker, so a
-    * replay that finds no root-level epoch hint still detects the
-    * already-committed epoch by scanning committed versions — a crash
-    * at ANY point either left the version uncommitted (torn dir,
-    * invisible, numbers never reused) or left it committed and
-    * self-describing. The root-level `_GRAFT_EPOCH_<scope>_<epoch>`
-    * hint is only the O(1) fast path (and what the vacuum family's
-    * marker retention already reaps); correctness never depends on it.
-    *
-    * Steps: staged files fold into one attempt-unique commit dir
-    * (task-retry orphans in the staging area are never swept in —
-    * only the files the driver's commit messages name), the next
-    * version number is claimed through [[commit]] (concurrent fan-in
-    * writers get distinct numbers) and the dir is renamed onto it,
-    * then epoch tag → commit marker →
-    * claim release → hint. An empty epoch writes the hint
-    * only (no empty version dir to poison schema inference — the
-    * lakePipe rule). Returns the version, None when already done. */
+    * Staged files fold into one attempt-unique commit dir (task-retry
+    * orphans in the staging area are never swept in — only the files
+    * the driver's commit messages name), the next version number is
+    * claimed through [[commit]] (concurrent fan-in writers get
+    * distinct numbers) and the dir is renamed onto it, then epoch tag
+    * → commit marker → claim release → hint. An empty epoch writes
+    * the hint only (no empty version dir — the [[publishEpoch]] rule).
+    * Returns the version, None when already done or empty. */
   def commitStagedEpoch(root: String, staged: Seq[String], scope: String,
       epoch: Long, stageDir: String): Option[Long] = {
-    require(scope.matches("[A-Za-z0-9_-]+"),
-      s"scope must be [A-Za-z0-9_-]+: '$scope'")
-    val hint = s"$root/_GRAFT_EPOCH_${scope}_$epoch"
-    val epochTag = s"_SNAP_EPOCH_${scope}_$epoch"
-    if (LakeFs.isFile(hint)) { LakeFs.rmTree(stageDir); return None }
-    // crash-recovery scan, bounded: walk committed versions NEWEST
-    // first; per-scope epochs are monotone, so the first version
-    // carrying one of this scope's tags decides — tag == epoch means
-    // the crashed commit already happened, tag < epoch means it never
-    // did and nothing older can carry it. The normal path (this
-    // scope's previous version is recent) stops after a handful of
-    // listings, independent of the log's depth.
-    val TagRe = s"^_SNAP_EPOCH_${java.util.regex.Pattern.quote(scope)}_(\\d+)$$".r
-    val crashedCommit = committed(root).reverseIterator
-      .map { case (_, d) =>
-        LakeFs.list(d).iterator.map(_.getPath.getName).collectFirst {
-          case TagRe(e) => e.toLong
+    val v = epochGuard(root, scope, epoch) {
+      if (staged.isEmpty) None
+      else {
+        // fold the committed task files into an attempt-unique dir (a
+        // crashed prior attempt's partially-filled commit dir must
+        // never be reused — its leftovers would double rows)
+        val commitDir = s"$stageDir/commit-${java.util.UUID.randomUUID}"
+        LakeFs.mkdirs(commitDir)
+        staged.foreach { f =>
+          val name = new org.apache.hadoop.fs.Path(f).getName
+          require(LakeFs.rename(f, s"$commitDir/$name"),
+            s"staged file vanished or collided: $f")
         }
+        LakeFs.mkdirs(root)
+        // the version number comes from the claim marker
+        // (create-if-absent is atomic, and claims are visible to every
+        // other allocator), NOT from probing rename: LakeFs.rename's
+        // exists-check is check-then-act, and Hadoop rename moves a
+        // directory INTO an existing destination — two fan-in writers
+        // probing the same n would nest the loser's commit dir inside
+        // the winner's version and silently lose it
+        Some(commit(root, markers = Seq(epochTag(scope, epoch))) { dir =>
+          require(LakeFs.rename(commitDir, dir),
+            s"claimed $dir but the rename failed — torn state?")
+        })
       }
-      .collectFirst { case Some(e) => e == epoch }
-      .getOrElse(false)
-    if (crashedCommit) {
-      LakeFs.mkdirs(root)
-      LakeFs.write(hint, "")
-      LakeFs.rmTree(stageDir)
-      return None
     }
-    if (staged.isEmpty) {
-      LakeFs.mkdirs(root)
-      LakeFs.write(hint, "")
-      LakeFs.rmTree(stageDir)
-      return None
-    }
-    // fold the committed task files into an attempt-unique dir (a
-    // crashed prior attempt's partially-filled commit dir must never
-    // be reused — its leftovers would double rows)
-    val commitDir = s"$stageDir/commit-${java.util.UUID.randomUUID}"
-    LakeFs.mkdirs(commitDir)
-    staged.foreach { f =>
-      val name = new org.apache.hadoop.fs.Path(f).getName
-      require(LakeFs.rename(f, s"$commitDir/$name"),
-        s"staged file vanished or collided: $f")
-    }
-    LakeFs.mkdirs(root)
-    // the version number comes from the claim marker (create-if-absent
-    // is atomic, and claims are visible to every other allocator), NOT
-    // from probing rename: LakeFs.rename's exists-check is
-    // check-then-act, and Hadoop rename moves a directory INTO an
-    // existing destination — two fan-in writers probing the same n
-    // would nest the loser's commit dir inside the winner's version
-    // and silently lose it
-    val n = commit(root, markers = Seq(epochTag)) { dir =>
-      require(LakeFs.rename(commitDir, dir),
-        s"claimed $dir but the rename failed — torn state?")
-    }
-    LakeFs.write(hint, "")
     LakeFs.rmTree(stageDir)
-    Some(n)
+    v
   }
 
   /** Per-expectation violation counts of a committed publishExpect
@@ -1609,7 +1612,7 @@ object Snapshots {
   }
 
   private val EpochMarker = "^_GRAFT_EPOCH_(\\d+)$".r
-  // scoped form (multi-writer ingest, epochOnceFor): stream id is
+  // scoped form (epochGuard's hints, epochOnceFor): scope is
   // everything up to the FINAL underscore — epochs are plain digits,
   // so the greedy split is unambiguous
   private val ScopedEpochMarker = "^_GRAFT_EPOCH_(.+)_(\\d+)$".r

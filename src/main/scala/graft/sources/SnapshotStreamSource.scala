@@ -191,10 +191,11 @@ class SnapshotStreamTable(root: String, schema0: StructType)
             }
           /** STREAMING WRITE — `df.writeStream.format("graftsnap")
             * .start(root)`: each epoch lands as one committed log
-            * version through Snapshots.commitStagedEpoch, whose
-            * in-version epoch tag closes even the crash window
-            * between version marker and epoch hint (exactly-once
-            * with no residual gap). Tasks write parquet straight
+            * version through Snapshots.commitStagedEpoch, under the
+            * epoch guard it shares with Snapshots.publishEpoch: the
+            * in-version epoch tag closes even the crash window between
+            * version marker and epoch hint (exactly-once with no
+            * residual gap). Tasks write parquet straight
             * into the root's staging area; the driver commit is
             * pure renames + markers. Append mode only — Complete/
             * Update would have to rewrite the readable window per

@@ -667,8 +667,9 @@ object StreamOps {
 
   /** Streaming ingest into the mergeable grid-histogram index
     * (operators.HistIndex): each micro-batch's bucket counts append
-    * as ONE committed version under IndexLifecycle.epochOnce (a
-    * replayed epoch skips the publish — exactly-once), and
+    * as ONE committed version through Snapshots.publishEpoch (scope
+    * "hist"; a replayed epoch skips the publish — exactly-once, and
+    * an empty batch publishes nothing), and
     * HistIndex.quantiles over the merged log answers exact grid
     * quantiles at any moment — the maintained-sketch member of the
     * ingest-twin family (shingle/substring/vector/NB-score/KS).
@@ -677,20 +678,19 @@ object StreamOps {
   def histIngest(s: SparkSession, values: DataFrame, width: Long,
       root: String): org.apache.spark.sql.streaming.StreamingQuery =
     epochSink(values, root + "_ckpt") { (batch, epoch) =>
-      val counts = graft.operators.HistIndex.bucketCounts(batch, width)
-      if (!counts.isEmpty)
-        graft.operators.IndexLifecycle.epochOnce(root, epoch) {
-          graft.operators.Snapshots.publishAppend(counts, root)
-        }
+      graft.operators.Snapshots.publishEpoch(
+        graft.operators.HistIndex.bucketCounts(batch, width), root, "hist",
+        epoch)
+      ()
     }
 
   /** Streaming QUANTILE monitor over the maintained grid-histogram
     * index — the READ-path twin [[histIngest]] lacked (r14 #8): each
-    * micro-batch (1) appends its bucket counts under a STREAM-SCOPED
-    * epoch marker (epochOnceFor "histq" — epoch ids are per-query
-    * counters, so sharing a root with histIngest's unscoped markers
-    * must not let one stream's epoch-N marker absorb the other's
-    * epoch-N append), then (2) answers HistIndex.quantiles over the
+    * micro-batch (1) appends its bucket counts through
+    * Snapshots.publishEpoch under its own scope ("histq" — epoch ids
+    * are per-query counters, so sharing a root with histIngest's
+    * "hist" epochs must not let one stream's epoch N absorb the
+    * other's), then (2) answers HistIndex.quantiles over the
     * WHOLE merged log
     * as of this epoch and emits one row per requested percentile
     * through the epoch-partitioned dynamic-overwrite emit (replayed
@@ -708,10 +708,7 @@ object StreamOps {
     epochSink(values, root + "_qckpt") { (batch, epoch) =>
       val counts = graft.operators.HistIndex.bucketCounts(batch, width)
       if (!counts.isEmpty) {
-        graft.operators.IndexLifecycle.epochOnceFor(root, "histq",
-          epoch) {
-          graft.operators.Snapshots.publishAppend(counts, root)
-        }
+        graft.operators.Snapshots.publishEpoch(counts, root, "histq", epoch)
         emitEpoch(
           graft.operators.HistIndex.quantiles(s, root, width, ps),
           epoch, outDir)
@@ -722,8 +719,8 @@ object StreamOps {
     * mean maintained over an unbounded stream at HistIndex grid
     * precision: per-(arm, bucket) state carries counts AND exact
     * in-bucket value sums (both mergeable), so each micro-batch (1)
-    * appends its (arm, bucket, c, sy) stats under a stream-scoped
-    * epoch marker (epochOnceFor "winsor" — the histQuantileIngest
+    * appends its (arm, bucket, c, sy) stats through
+    * Snapshots.publishEpoch (scope "winsor" — the histQuantileIngest
     * shared-root rule) and (2) emits HistIndex.winsorMeans over the
     * WHOLE merged log as of this epoch through the epoch-partitioned
     * dynamic-overwrite emit — exactly-once on both surfaces. The
@@ -742,10 +739,7 @@ object StreamOps {
     epochSink(rows, root + "_wckpt") { (batch, epoch) =>
       val stats = graft.operators.HistIndex.armBucketStats(batch, width)
       if (!stats.isEmpty) {
-        graft.operators.IndexLifecycle.epochOnceFor(root, "winsor",
-          epoch) {
-          graft.operators.Snapshots.publishAppend(stats, root)
-        }
+        graft.operators.Snapshots.publishEpoch(stats, root, "winsor", epoch)
         emitEpoch(
           graft.operators.HistIndex.winsorMeans(s, root, width, pct),
           epoch, outDir)
@@ -755,14 +749,15 @@ object StreamOps {
   /** Streaming A/B experiment monitor — the LIVE dashboard twin of
     * the q_srm + q_welch_ttest readout pair: per-arm power sums
     * (n, Σy, Σy² — count/int64/DECIMAL(38,0)) are MERGEABLE, so each
-    * micro-batch (1) appends its 2-row partial-sum frame under a
-    * stream-scoped epoch marker and (2) emits, over the WHOLE merged
+    * micro-batch (1) appends its 2-row partial-sum frame through
+    * Snapshots.publishEpoch (scope "abmon") and (2) emits, over the
+    * WHOLE merged
     * log as of this epoch, the guardrail-first readout an experiment
     * dashboard shows: n_c/n_t, the SRM χ² against the declared 95%
     * critical value (metrics are INVALID while the flag is up —
     * Fabijan et al. 2019), the raw mean diff and its Welch z — every
     * float the same fixed IEEE expression as the batch queries,
-    * ROUND(6). Exactly-once on both surfaces (epochOnceFor +
+    * ROUND(6). Exactly-once on both surfaces (publishEpoch +
     * dynamic-overwrite emit); per-epoch work is O(batch) + a 2-row
     * read, and the emitted row after ANY prefix of batches equals the
     * one-shot batch computation over the same rows EXACTLY
@@ -774,11 +769,9 @@ object StreamOps {
       : org.apache.spark.sql.streaming.StreamingQuery =
     epochSink(rows, root + "_abckpt") { (b, epoch) =>
       if (!b.isEmpty) {
-        val part = graft.queries.Experiment.ySums(b, col("arm"))
-        graft.operators.IndexLifecycle.epochOnceFor(root, "abmon",
-          epoch) {
-          graft.operators.Snapshots.publishAppend(part, root)
-        }
+        graft.operators.Snapshots.publishEpoch(
+          graft.queries.Experiment.ySums(b, col("arm")), root, "abmon",
+          epoch)
         emitEpoch(abReadoutOf(
           graft.operators.Snapshots.readLog(s, root)), epoch, outDir)
       }
@@ -811,7 +804,8 @@ object StreamOps {
     * per-replicate partial sums (Σwx, Σw) are MERGEABLE (weights
     * depend only on (row key, replicate), never on batch boundaries),
     * so each micro-batch (1) appends its 64-row partial-sum frame
-    * under epochOnce and (2) emits the CI over the MERGED sums as of
+    * through Snapshots.publishEpoch (scope "bootci") and (2) emits
+    * the CI over the MERGED sums as of
     * this epoch through the dynamic-overwrite emit — exactly-once
     * both surfaces, and the emitted interval after any prefix of
     * batches equals the one-shot batch computation over the same
@@ -834,9 +828,7 @@ object StreamOps {
           .groupBy(col("b"))
           .agg(sum(col("w") * col("v")).as("swx"), sum(col("w")).as("sw"),
             sum(col("v")).as("sv"), count(lit(1)).as("n"))
-        graft.operators.IndexLifecycle.epochOnce(root, epoch) {
-          graft.operators.Snapshots.publishAppend(part, root)
-        }
+        graft.operators.Snapshots.publishEpoch(part, root, "bootci", epoch)
         // merged replicate sums (64 rows whatever the history) →
         // the exact q_bootstrap_ci rank arithmetic
         val merged = graft.operators.Snapshots.readLog(s, root)
@@ -1075,9 +1067,10 @@ object StreamOps {
     * commit marker written last, torn writes invisible), so a reader
     * at any moment sees a consistent prefix of the stream and can
     * time-travel to any earlier version boundary. Exactly-once via
-    * Snapshots.epochOnce: a replayed micro-batch (same epoch id)
-    * skips the publish instead of appending a duplicate version —
-    * the versioned-table member of the ingest-twin family
+    * Snapshots.publishEpoch (scope "ingest"): a replayed micro-batch
+    * (same epoch id) skips the publish instead of appending a
+    * duplicate version, and an empty batch publishes none — the
+    * versioned-table member of the ingest-twin family
     * (shingle/substring/vector/NB-score). O(batch) per publish,
     * never an O(table) rewrite. */
   def snapshotIngest(s: SparkSession, rows: DataFrame,
@@ -1090,8 +1083,9 @@ object StreamOps {
     * version of a downstream log root. Exactly-once composes end to
     * end from the two halves it already has: upstream, the source's
     * offset WAL over immutable versions (a replayed batch re-plans
-    * the same files); downstream, the epoch-marker publish (a
-    * replayed epoch skips). Restart either side and no row is lost or
+    * the same files); downstream, Snapshots.publishEpoch (a
+    * replayed epoch skips; an all-filtered batch publishes no
+    * version). Restart either side and no row is lost or
     * doubled — and the downstream root is itself a first-class lake
     * table (time travel, compaction, further pipes), so pipelines
     * chain. `transform` runs per micro-batch on a plain DataFrame:
@@ -1099,12 +1093,11 @@ object StreamOps {
     * aggregation belongs to a downstream readLog query or a
     * compaction, exactly as in Delta's medallion layering.
     *
-    * `pipeId` scopes BOTH the exactly-once marker and the checkpoint:
+    * `pipeId` scopes BOTH the exactly-once epoch and the checkpoint:
     * several pipes may fan into one downstream root (the multi-writer
-    * ingest shape), and epoch ids are per-query counters — with an
-    * unscoped marker pipe B's epoch 0 would see pipe A's epoch-0
-    * marker and silently swallow its own first batch (the #160
-    * lesson, IndexLifecycle.epochOnceFor). Defaults to a sanitized
+    * ingest shape), and epoch ids are per-query counters — with a
+    * shared scope pipe B's epoch 0 would see pipe A's epoch 0 and
+    * silently swallow its own first batch. Defaults to a sanitized
     * form of the source root: unique per upstream, stable across
     * restarts. Fan-in publishes interleave via ordinary version
     * allocation — union semantics make every interleaving correct. */
@@ -1114,20 +1107,9 @@ object StreamOps {
     val pid = pipeId.getOrElse(srcRoot.replaceAll("[^A-Za-z0-9_-]", "-"))
     epochSink(s.readStream.format("graftsnap").load(srcRoot),
         s"${dstRoot}_ckpt_$pid") { (batch, epoch) =>
-      graft.operators.IndexLifecycle.epochOnceFor(dstRoot, pid, epoch) {
-        // cache: the emptiness probe and the publish share ONE
-        // evaluation of the transform (an enrichment join must not
-        // run twice per batch)
-        val out = transform(batch).cache()
-        try {
-          // an all-filtered batch publishes NOTHING (an empty
-          // version dir would poison the log's schema inference);
-          // the epoch marker still records the batch as done
-          if (!out.isEmpty)
-            graft.operators.Snapshots.publishAppend(out, dstRoot)
-          ()
-        } finally out.unpersist()
-      }
+      graft.operators.Snapshots.publishEpoch(transform(batch), dstRoot,
+        pid, epoch)
+      ()
     }
   }
 
@@ -1135,9 +1117,7 @@ object StreamOps {
     * can replay an epoch directly. */
   private[graft] def snapshotIngestBatch(batch: DataFrame, epoch: Long,
       root: String): Unit = {
-    graft.operators.Snapshots.epochOnce(root, epoch) {
-      graft.operators.Snapshots.publishAppend(batch, root)
-    }
+    graft.operators.Snapshots.publishEpoch(batch, root, "ingest", epoch)
     ()
   }
 
@@ -1149,9 +1129,9 @@ object StreamOps {
     * "fail" is deliberately unsupported here — killing a continuous
     * ingest on one bad row is an operational anti-pattern, batch
     * admission is where fail belongs). Exactly-once is the
-    * epochOnceFor discipline scoped by `streamId` (the fan-in
-    * lesson); the epoch guard wraps BOTH the main and quarantine
-    * publishes, with epochOnce's documented residual window. */
+    * IndexLifecycle.epochOnceFor marker scoped by `streamId`, not
+    * Snapshots.publishEpoch: it wraps BOTH the main and quarantine
+    * versions, with epochOnce's documented residual window. */
   def expectIngest(s: SparkSession, rows: DataFrame, root: String,
       expectations: Seq[(String, org.apache.spark.sql.Column)],
       streamId: String, mode: String = "quarantine")
@@ -1173,12 +1153,11 @@ object StreamOps {
     * producers, no coordinator). Every Snapshots writer allocates its
     * version through the claim-marker commit (two writers can never
     * own one version, and union semantics make every commit
-    * interleaving correct), so each stream's plain `publish` lands at
-    * a distinct version; exactly-once is tracked
-    * PER STREAM: epoch ids are per-query counters, so the replay
-    * marker is scoped by `streamId` (IndexLifecycle.epochOnceFor —
-    * two streams' epoch 0 are different facts; the single-writer
-    * marker would wrongly swallow the second stream's first batch).
+    * interleaving correct), so each stream's publish lands at a
+    * distinct version; exactly-once is tracked PER STREAM: epoch ids
+    * are per-query counters, so Snapshots.publishEpoch is scoped by
+    * `streamId` (two streams' epoch 0 are different facts; one shared
+    * scope would wrongly swallow the second stream's first batch).
     * Each stream keeps its own checkpoint dir for the same reason. */
   def snapshotIngestConcurrent(s: SparkSession, rows: DataFrame,
       root: String, streamId: String)
@@ -1188,11 +1167,10 @@ object StreamOps {
 
   /** One multi-writer micro-batch — factored out for the retry spec. */
   private[graft] def snapshotIngestConcurrentBatch(batch: DataFrame,
-      epoch: Long, root: String, streamId: String): Unit =
-    graft.operators.IndexLifecycle.epochOnceFor(root, streamId, epoch) {
-      graft.operators.Snapshots.publish(batch, root)
-      ()
-    }
+      epoch: Long, root: String, streamId: String): Unit = {
+    graft.operators.Snapshots.publishEpoch(batch, root, streamId, epoch)
+    ()
+  }
 
   /** Streaming CDC ingest into the MERGE-ON-READ log: rows carry an
     * `_op` column ('u' upsert / 'd' delete) plus the merge key and
@@ -1205,7 +1183,8 @@ object StreamOps {
     * AFTER upserts, so a key both upserted and deleted within one
     * batch resolves to deleted.
     *
-    * Exactly-once via epochOnce, with the usual residual window
+    * Exactly-once via IndexLifecycle.epochOnce wrapping BOTH versions
+    * (not publishEpoch), with the usual residual window
     * (crash between the publishes and the marker) absorbed BY
     * CONSTRUCTION here: replaying the epoch re-appends the same keys
     * at higher versions, and latest-wins over equal rows yields the
@@ -1668,11 +1647,12 @@ object StreamOps {
     * new edges + a per-epoch delta row to the lake.
     *
     * Exactly-once without recount: the delta is a deterministic
-    * function of (index state, batch); the stats append runs under
-    * epochOnce FIRST, the edge append last — a replay after the
-    * stats marker skips the stats and re-derives the edge append
-    * from the anti-join (edges already in → empty batch → no-op),
-    * so every crash point lands on the same totals. */
+    * function of (index state, batch); the stats append commits
+    * FIRST through Snapshots.publishEpoch (scope "tri", no crash
+    * window), the edge append last — a replay after the stats commit
+    * skips the stats and re-derives the edge append from the
+    * anti-join (edges already in → empty batch → no-op), so every
+    * crash point lands on the same totals. */
   def triangleIngest(s: SparkSession, edges: DataFrame,
       indexDir: String): org.apache.spark.sql.streaming.StreamingQuery =
     epochSink(edges, indexDir + "_ckpt")(
@@ -1701,10 +1681,8 @@ object StreamOps {
         .cache()
     if (nw.isEmpty) { nw.unpersist(); return }
     val delta = graft.queries.Graph.triangleDelta(old, nw)
-    graft.operators.IndexLifecycle.epochOnce(statsRoot, epoch) {
-      graft.operators.Snapshots.publishAppend(
-        Seq((epoch, delta)).toDF("epoch", "delta"), statsRoot)
-    }
+    graft.operators.Snapshots.publishEpoch(
+      Seq((epoch, delta)).toDF("epoch", "delta"), statsRoot, "tri", epoch)
     graft.operators.Snapshots.publishAppend(nw, edgesRoot)
     nw.unpersist()
     ()

@@ -68,6 +68,13 @@ class CatalogSpec extends AnyFunSuite {
     assert(rows("SELECT * FROM lake.t2") == Set(1L -> "a", 2L -> "b"),
       "snapshot INSERT INTO = current ∪ new, published whole")
     assert(rows("SELECT * FROM lake.t2 VERSION AS OF 1") == Set(1L -> "a"))
+    // an INSERT INTO failing inside its write job leaves a torn v=3 and
+    // blocks no later INSERT INTO
+    intercept[Exception](spark.sql("INSERT INTO lake.t2 SELECT " +
+      "IF(id > 1, CAST(raise_error('boom') AS BIGINT), id), 'x' FROM range(4)"))
+    assert(LakeFs.isDir(s"$Root/t2/v=3"))
+    spark.sql("INSERT INTO lake.t2 VALUES (3, 'c')")
+    assert(rows("SELECT * FROM lake.t2") == Set(1L -> "a", 2L -> "b", 3L -> "c"))
     // a programmatic publish is immediately visible through SQL
     import spark.implicits._
     Snapshots.publish(Seq((7L, "p")).toDF("k", "v"), s"$Root/t2")

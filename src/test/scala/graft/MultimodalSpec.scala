@@ -133,6 +133,68 @@ class MultimodalSpec extends AnyFunSuite {
     }
   }
 
+  test("per-thread readers decode a mixed partition exactly as ImageIO does, dropping garbage") {
+    import graft.multimodal.Binary.{ImageCodec, VideoCodec}
+    import spark.implicits._
+    val rgb = new java.awt.image.BufferedImage(
+      5, 4, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    (0 until 20).foreach(i => rgb.setRGB(i % 5, i / 5, i * 0x0A0B0C))
+    val jpg = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(rgb, "jpg", jpg)
+    val png = ImageCodec.plantedPng(3L, 6, 5)
+    // PNG and GIF payloads around payloads their fast readers reject:
+    // each rejection must leave the thread's reader decoding the next
+    // payload exactly
+    val payloads = Seq(ImageCodec.plantedPng(1L, 4, 3),
+      "garbage".getBytes("UTF-8"), png.take(40), ImageCodec.plantedPng(2L, 3, 7),
+      jpg.toByteArray, VideoCodec.plantedGif(4L, 3, 2, 2), Array.empty[Byte],
+      png, VideoCodec.plantedGif(5L, 2, 3, 3), jpg.toByteArray.take(50), png)
+    val df = payloads.zipWithIndex.map { case (b, i) => (i.toLong, b) }
+      .toDF("doc_id", "data").coalesce(1)
+    // the reference: a fresh discovered ImageIO reader per payload
+    def frames(b: Array[Byte]): Seq[java.awt.image.BufferedImage] =
+      try {
+        val iis = javax.imageio.ImageIO.createImageInputStream(
+          new java.io.ByteArrayInputStream(b))
+        val it = javax.imageio.ImageIO.getImageReaders(iis)
+        if (!it.hasNext) Nil
+        else {
+          val r = it.next(); r.setInput(iis)
+          (0 until r.getNumImages(true)).map(r.read(_))
+        }
+      } catch { case scala.util.control.NonFatal(_) => Nil }
+    def pixels(img: java.awt.image.BufferedImage) =
+      for (y <- 0 until img.getHeight; x <- 0 until img.getWidth)
+        yield img.getRGB(x, y)
+    val wantImages = payloads.zipWithIndex.flatMap { case (b, i) =>
+      frames(b).headOption.map { img =>
+        val px = pixels(img)
+        (i.toLong, img.getWidth, img.getHeight,
+          img.getColorModel.getNumComponents,
+          px.map(p => ((p >> 16) & 0xFF).toLong).sum,
+          px.map(p => ((p >> 8) & 0xFF).toLong).sum,
+          px.map(p => (p & 0xFF).toLong).sum)
+      }
+    }.toSet
+    val gotImages = ImageCodec.decodeImages(spark, df).collect()
+      .map(d => (d.doc_id, d.width, d.height, d.n_channels, d.sum_r,
+        d.sum_g, d.sum_b)).toSet
+    assert(gotImages == wantImages)
+    val decodable = wantImages.map(_._1)
+    assert(Set(0L, 3L, 4L, 5L, 7L, 8L, 10L).subsetOf(decodable) &&
+      !decodable(1L) && !decodable(6L),
+      s"the fixture must mix decodable and garbage payloads: $decodable")
+    val wantFrames = payloads.zipWithIndex.flatMap { case (b, i) =>
+      frames(b).zipWithIndex.map { case (img, f) =>
+        (i.toLong, f, img.getWidth, img.getHeight,
+          pixels(img).map(p => (p & 0xFF).toLong).sum)
+      }
+    }.toSet
+    val gotFrames = VideoCodec.decodeVideos(spark, df).collect()
+      .map(f => (f.doc_id, f.frame_id, f.width, f.height, f.sum_gray)).toSet
+    assert(gotFrames == wantFrames)
+  }
+
   test("video decode: animated-GIF frames round-trip the indexed palette exactly") {
     import graft.multimodal.Binary.VideoCodec
     // 3-frame 2x2 fixture through the planted writer, decoded back:

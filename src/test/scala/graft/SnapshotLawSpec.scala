@@ -6,9 +6,10 @@ import graft.operators.{LakeFs, Snapshots}
 
 /** THE protocol law of the append log, checked over seeded-random op
   * interleavings (the example-based SnapshotSpec pins each operation;
-  * this pins their COMPOSITION): whatever order appends, tiered
-  * folds, full compactions, auto-maintenance, and vacuums interleave
-  * in, `readLog` returns exactly the multiset of rows ever appended —
+  * this pins their COMPOSITION): whatever order appends, exactly-once
+  * epoch appends and their replays, tiered folds, full compactions,
+  * auto-maintenance, and vacuums interleave in, `readLog` returns
+  * exactly the multiset of rows ever appended —
   * no loss, no duplication — and operations that refuse (nothing to
   * fold) refuse cleanly without corrupting the table. This is the
   * invariant a 100 TB ingest relies on when compaction jobs, retention
@@ -33,8 +34,11 @@ class SnapshotLawSpec extends AnyFunSuite {
       // main folds/vacuums run; merge moves the appends onto main
       var branch: Option[(String, List[Long], List[Long])] = None
       var nextBranchId = 1000000L
+      // the last publishEpoch: (epoch, its rows), replayable
+      var epoch = 0L
+      var lastEpoch: Option[(Long, List[Long])] = None
       (0 until 12).foreach { step =>
-        rnd.nextInt(8) match {
+        rnd.nextInt(9) match {
           case 0 | 1 | 2 => // appends dominate, as in a real ingest
             val rows = (0 until 1 + rnd.nextInt(3)).map { _ =>
               nextId += 1; nextId
@@ -85,6 +89,27 @@ class SnapshotLawSpec extends AnyFunSuite {
                   Snapshots.dropBranch(root, name)
                   branch = None
               }
+            }
+          case 8 =>
+            // an exactly-once epoch append whose root hint is lost (a
+            // crash between commit marker and hint), sometimes
+            // replayed: the committed version's own epoch tag — or the
+            // hint vacuumLog promoted from it before reaping the
+            // version — must make the replay publish nothing
+            lastEpoch match {
+              case Some((e, rows)) if rnd.nextBoolean() =>
+                assert(Snapshots.publishEpoch(rows.toDF("k"), root, "law",
+                  e).isEmpty, s"epoch $e replayed at seed=$seed step=$step")
+              case _ =>
+                epoch += 1
+                val rows = (0 until 1 + rnd.nextInt(3)).map { _ =>
+                  nextId += 1; nextId
+                }.toList
+                appended = appended ++ rows
+                assert(Snapshots.publishEpoch(rows.toDF("k"), root, "law",
+                  epoch).nonEmpty)
+                LakeFs.rmFile(s"$root/_GRAFT_EPOCH_law_$epoch")
+                lastEpoch = Some(epoch -> rows)
             }
           case _ => () // fold/vacuum before the first append: no-op
         }

@@ -253,14 +253,12 @@ class SnapshotSpec extends AnyFunSuite {
       "refused vacuum must not have deleted anything")
     // a long-lived stream's epoch markers are reaped past the horizon
     (1L to 12L).foreach(e =>
-      Snapshots.epochOnce(root, e) {
-        Snapshots.publishAppend(Seq(100L + e).toDF("k"), root)
-      })
+      Snapshots.publishEpoch(Seq(100L + e).toDF("k"), root, "ret", e))
     Snapshots.vacuumLog(root, keepEpochs = 8)
     val markers = Option(new java.io.File(root).listFiles())
       .getOrElse(Array.empty).map(_.getName)
       .filter(_.startsWith("_GRAFT_EPOCH_")).toSet
-    assert(markers == (5L to 12L).map(e => s"_GRAFT_EPOCH_$e").toSet,
+    assert(markers == (5L to 12L).map(e => s"_GRAFT_EPOCH_ret_$e").toSet,
       s"newest 8 epoch markers retained: $markers")
     assert(Snapshots.readLog(spark, root).count() == 14L)
   }
@@ -419,6 +417,20 @@ class SnapshotSpec extends AnyFunSuite {
     assert(Snapshots.latestVersion(root).contains(2L),
       "epoch replay appended a duplicate version")
     assert(ks(Snapshots.readLog(spark, root)) == Set(1L, 2L, 3L))
+    // the crash between the version's commit marker and its root hint:
+    // with every hint gone the committed version witnesses the epoch
+    LakeFs.list(root).map(_.getPath.getName)
+      .filter(_.startsWith("_GRAFT_EPOCH_"))
+      .foreach(h => LakeFs.rmFile(s"$root/$h"))
+    graft.streaming.StreamOps.snapshotIngestBatch(
+      Seq(3L).toDF("k"), 1L, root)
+    assert(Snapshots.latestVersion(root).contains(2L),
+      "a replay without its hint published a duplicate version")
+    assert(ks(Snapshots.readLog(spark, root)) == Set(1L, 2L, 3L))
+    // an empty micro-batch publishes no version
+    graft.streaming.StreamOps.snapshotIngestBatch(
+      Seq.empty[Long].toDF("k"), 2L, root)
+    assert(Snapshots.latestVersion(root).contains(2L))
   }
 
   test("concurrent publishers land at distinct versions and lose no rows") {
@@ -545,8 +557,10 @@ class SnapshotSpec extends AnyFunSuite {
     assert(!claimsLeft, "a failed publishIf left its claim behind")
     intercept[Exception](Snapshots.publish(boom, root))
     assert(!claimsLeft, "a failed publish left its claim behind")
-    val v = Snapshots.publish(Seq(2L).toDF("k"), root)
-    assert(Snapshots.latestVersion(root).contains(v))
+    // both torn dirs hold no claim and no commit marker: dead, so a
+    // CAS from v1 commits past them instead of conflicting for good
+    val v = Snapshots.publishIf(Seq(2L).toDF("k"), root, expected = v1)
+    assert(v == v1 + 3 && Snapshots.latestVersion(root).contains(v))
     assert(Snapshots.read(spark, root).as[Long].collect().toSeq == Seq(2L))
     // the torn dirs stay invisible; CAS from the fresh latest commits
     assert(Snapshots.publishIf(Seq(3L).toDF("k"), root, v) == v + 1)

@@ -16,6 +16,18 @@ class StreamingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf
 
+  /** Replaying `epoch` through the twin's own `scope` publishes
+    * nothing: publishEpoch answers None and the log keeps its latest
+    * version. */
+  private def assertReplayNoOp(root: String, scope: String,
+      epoch: Long): Unit = {
+    import graft.operators.Snapshots
+    val before = Snapshots.latestVersion(root)
+    assert(Snapshots.publishEpoch(Snapshots.readLog(spark, root), root,
+      scope, epoch).isEmpty, "replayed epoch must not re-append")
+    assert(Snapshots.latestVersion(root) == before)
+  }
+
   /** events re-staged as micros-timestamp parquet for readStream. */
   private lazy val stagedDir: String = {
     val dir = Files.createTempDirectory("graft-stream").toString
@@ -377,10 +389,8 @@ class StreamingSpec extends AnyFunSuite {
     }
     Seq(50, 90, 99).foreach(p =>
       assert(qs(p) == refQ(p), s"p$p diverged: ${qs(p)} vs ${refQ(p)}"))
-    // a torn replay of epoch 1 is a no-op (epochOnce marker)
-    graft.operators.IndexLifecycle.epochOnce(root, 1L) {
-      sys.error("replayed epoch must not re-append")
-    }
+    // a torn replay of epoch 1 is a no-op
+    assertReplayNoOp(root, "hist", 1L)
     assert(graft.operators.Snapshots.latestVersion(root).contains(2L))
   }
 
@@ -488,10 +498,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(math.abs(got._4 - wm) < 1e-6, s"arm $arm: ${got._4} vs $wm")
     }
     // torn replay of the last epoch is a no-op
-    graft.operators.IndexLifecycle.epochOnceFor(root, "winsor",
-      epochs.max) {
-      sys.error("replayed epoch must not re-append")
-    }
+    assertReplayNoOp(root, "winsor", epochs.max)
   }
 
   test("streaming A/B monitor: merged power sums equal the one-shot batch readout") {
@@ -548,10 +555,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(last._1 == all.count(_._1 == 0L)
       && last._2 == all.count(_._1 == 1L))
     // torn replay no-op
-    graft.operators.IndexLifecycle.epochOnceFor(root, "abmon",
-      epochs.max) {
-      sys.error("replayed epoch must not re-append")
-    }
+    assertReplayNoOp(root, "abmon", epochs.max)
   }
 
   test("streaming A/B monitor over the ab1 spend panel equals q_ab_readout and q_srm") {
@@ -649,10 +653,8 @@ class StreamingSpec extends AnyFunSuite {
       s"ci_lo ${got.getDouble(3)} != ${mbs(1)._1}")
     assert(got.getDouble(4) == mbs(PoissonBoot.B - 2)._1,
       s"ci_hi ${got.getDouble(4)} != ${mbs(PoissonBoot.B - 2)._1}")
-    // replaying epoch 0 appends nothing (epochOnce)
-    graft.operators.IndexLifecycle.epochOnce(root, 0L) {
-      sys.error("replayed epoch must not re-append")
-    }
+    // replaying epoch 0 appends nothing
+    assertReplayNoOp(root, "bootci", 0L)
   }
 
   test("streaming KS drift scoring: per-epoch score equals the exact grid reference") {

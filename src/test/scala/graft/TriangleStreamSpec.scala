@@ -9,7 +9,7 @@ import graft.streaming.StreamOps
   * per-epoch deltas must sum to EXACTLY the one-shot triangle count
   * of the full edge set, whatever the batch split, with duplicate
   * edges (within a batch, across batches) as no-ops and replayed
-  * epochs idempotent. */
+  * epochs idempotent, even after a crash that lost the stats hint. */
 class TriangleStreamSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -70,5 +70,19 @@ class TriangleStreamSpec extends AnyFunSuite {
     StreamOps.triangleIngestBatch(spark,
       Seq((4L, 5L)).toDF("x", "y"), epoch = 8L, Idx)
     assert(StreamOps.triangleTotal(spark, Idx) == t8)
+    // crash point after the stats commit: neither the stats hint nor
+    // the edge version's commit marker landed; (3,5) closes (3,4,5)
+    val b9 = Seq((3L, 5L)).toDF("x", "y")
+    StreamOps.triangleIngestBatch(spark, b9, epoch = 9L, Idx)
+    assert(StreamOps.triangleTotal(spark, Idx) == t8 + 1)
+    LakeFs.list(s"$Idx/stats").map(_.getPath.getName)
+      .filter(_.startsWith("_GRAFT_EPOCH_"))
+      .foreach(h => LakeFs.rmFile(s"$Idx/stats/$h"))
+    val edgesV = Snapshots.latestVersion(s"$Idx/edges").get
+    LakeFs.rmFile(s"$Idx/edges/v=$edgesV/_SNAP_COMMITTED")
+    StreamOps.triangleIngestBatch(spark, b9, epoch = 9L, Idx)
+    assert(StreamOps.triangleTotal(spark, Idx) == t8 + 1,
+      "the replayed epoch's delta was counted twice")
+    assert(Snapshots.readLog(spark, s"$Idx/edges").count() == edgeRows + 2)
   }
 }
