@@ -4,8 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
-/** Build-once lifecycle for maintained lake indexes (ShingleIndex,
-  * SubstringIndex, IvfIndex, PqIndex, IvfPq, the PCA sidecar).
+/** Build-once lifecycle for maintained lake indexes (SubstringIndex,
+  * IvfIndex, PqIndex, IvfPq, the PCA, BM25, tokenizer and NB-model
+  * sidecars, the dedup cluster state).
   *
   * A real ingest builds its index ONCE and appends per batch;
   * re-deriving the whole index on every query would bill every read
@@ -19,21 +20,23 @@ import org.apache.spark.sql.types.StructType
   * under /tmp (the r8 ADVICE growth finding).
   *
   * All filesystem access goes through [[LakeFs]], so index dirs may
-  * live on local disk, HDFS, or an object store. Publish is by
-  * rename of a process-private build dir: atomic on HDFS/local; on
-  * object stores rename degrades to copy+delete (see LakeFs's
-  * contract), which widens the swap's not-atomic window — readers
-  * holding open objects are unaffected (immutable objects), but a
-  * LISTING mid-swap can see a partial tree, so on S3-class stores
-  * prefer republishing indexes as snapshot versions (write-then-
-  * marker) when multi-reader listings matter. Two processes racing
-  * build equivalent indexes and one rename wins — never a
-  * half-overwritten hybrid under a marker. The stale previous dir is
-  * renamed ASIDE before deletion and the marker is re-checked
-  * immediately before that move (the r8 ADVICE TOCTOU finding: a
-  * racer may have published a complete index between our freshness
-  * check and our publish — deleting it would orphan the racer's
-  * lazily-evaluated readers mid-scan).
+  * live on local disk, HDFS, or an object store. Publish is one swap
+  * shared by [[buildOnce]] and [[republish]]: the current tree is
+  * renamed ASIDE, the process-private build dir renames in, and the
+  * aside copy is reaped only after — a failed swap-in restores it.
+  * Atomic per rename on HDFS/local; on object stores rename degrades
+  * to copy+delete (see LakeFs's contract), which widens the swap's
+  * not-atomic window — readers holding open objects are unaffected
+  * (immutable objects), but a LISTING mid-swap can see a partial
+  * tree, so on S3-class stores prefer indexes kept as graftsnap logs
+  * (write-then-marker, no rename swap: ShingleIndex and the clean
+  * twin's exact index already are). Two processes racing build
+  * equivalent indexes and one rename wins — never a half-overwritten
+  * hybrid under a marker. The marker is re-checked immediately before
+  * the swap (the r8 ADVICE TOCTOU finding: a racer may have published
+  * a complete index between our freshness check and our publish —
+  * deleting it would orphan the racer's lazily-evaluated readers
+  * mid-scan).
   */
 object IndexLifecycle {
 
@@ -79,14 +82,16 @@ object IndexLifecycle {
       case _ => s"absent-$fmt" // build runs and fails with the real error
     }
 
-  /** In-place maintenance publish (compaction): run `rewrite` into a
-    * process-private dir, carry the freshness marker over unchanged
+  /** In-place maintenance publish (compaction, refit): run `rewrite`
+    * into a process-private dir, carry the freshness marker and the
+    * `_GRAFT_EPOCH_*` applied-epoch markers over unchanged
     * (compaction changes the LAYOUT, not the logical content a key
-    * describes), and swap by rename — the old tree goes ASIDE first,
-    * then the rewritten tree renames in. The published path is absent
-    * only for the instant between those two renames (a truly atomic
-    * directory SWAP exists on no filesystem Spark targets); open
-    * readers keep their handles on the aside copy until it is reaped.
+    * describes, nor the ingest history the epoch markers record),
+    * and publish it through the shared swap. The published path is
+    * absent only for the instant between the two renames (a truly
+    * atomic directory SWAP exists on no filesystem Spark targets);
+    * open readers keep their handles on the aside copy until it is
+    * reaped.
     *
     * Race guard: the marker is captured BEFORE the rewrite reads any
     * state and compared again at swap time — if a concurrent
@@ -95,17 +100,16 @@ object IndexLifecycle {
     * superseded state, so it ABORTS and leaves the racer's fresh
     * index in place rather than stamping old content with a new key. */
   def republish(idxDir: String)(rewrite: String => Unit): Unit = {
-    val pid = ProcessHandle.current.pid
     val keyAtStart = publishedKey(idxDir)
-    val tmp = s"$idxDir.compact-$pid"
+    val tmp = s"$idxDir.compact-${ProcessHandle.current.pid}"
     LakeFs.rmTree(tmp)
     rewrite(tmp)
     keyAtStart.foreach(k => LakeFs.write(s"$tmp/$Marker", k))
-    // applied-epoch markers describe ingest HISTORY, not layout —
-    // losing them across a compact/refit would re-open the
-    // at-least-once window for any in-flight epoch retry. A marker
-    // vanishing mid-copy means a racer republished under us; the
-    // superseded check below aborts then, so skipping it is safe.
+    // losing the applied-epoch markers across a compact/refit would
+    // re-open the at-least-once window for any in-flight epoch
+    // retry. A marker vanishing mid-copy means a racer republished
+    // under us; the superseded check below aborts then, so skipping
+    // it is safe.
     LakeFs.list(idxDir)
       .filter(_.getPath.getName.startsWith("_GRAFT_EPOCH_"))
       .foreach { st =>
@@ -116,18 +120,27 @@ object IndexLifecycle {
     if (publishedKey(idxDir) != keyAtStart) {
       LakeFs.rmTree(tmp); return // superseded
     }
-    val aside = s"$idxDir.old-$pid"
+    swap(idxDir, tmp)
+  }
+
+  /** The one publish swap: move the tree at `idxDir` (if any) ASIDE,
+    * rename `tmp` in, then reap the aside copy. A failed swap-in puts
+    * the aside copy back, so the published path never stays absent;
+    * either failure deletes `tmp` (never leak an index-sized build
+    * dir) and throws. */
+  private def swap(idxDir: String, tmp: String): Unit = {
+    val aside = s"$idxDir.old-${ProcessHandle.current.pid}"
     LakeFs.rmTree(aside)
-    if (!LakeFs.rename(idxDir, aside)) {
-      LakeFs.rmTree(tmp) // never leak an index-sized build dir
-      sys.error(s"compaction publish failed (aside rename) for $idxDir")
+    val hadTree = LakeFs.exists(idxDir)
+    if (hadTree && !LakeFs.rename(idxDir, aside)) {
+      LakeFs.rmTree(tmp)
+      sys.error(s"index publish failed (aside rename) for $idxDir")
     }
     if (!LakeFs.rename(tmp, idxDir)) {
-      // restore the original tree before failing — the published path
-      // must not stay absent
-      LakeFs.rename(aside, idxDir)
+      // a tree that cannot go back (a racer's landed) is reaped
+      if (hadTree && !LakeFs.rename(aside, idxDir)) LakeFs.rmTree(aside)
       LakeFs.rmTree(tmp)
-      sys.error(s"compaction publish failed (swap rename) for $idxDir")
+      sys.error(s"index publish failed (swap rename) for $idxDir")
     }
     LakeFs.rmTree(aside)
   }
@@ -142,16 +155,21 @@ object IndexLifecycle {
     * re-append; crash after the marker → append skipped, the
     * epoch-keyed emit re-runs idempotently. The residual window —
     * a crash BETWEEN job commit and marker write — can duplicate one
-    * epoch's appended rows; the substring and vector families absorb
-    * even that (their reads are countDistinct/min/distinct-based),
-    * the shingle family's intersection counts would not — which is
-    * why the guard, not read-side distincts that would re-shuffle
-    * corpus-scale state on every query, is the mechanism. Markers are
-    * one empty file per epoch at the index root (underscore-prefixed:
-    * invisible to Spark's file listing) and survive compact/refit
-    * (republish carries them over). Serves index dirs and the twins
-    * committing TWO lake versions per epoch (cdcIngestBatch,
-    * expectIngest); one-version twins use Snapshots.publishEpoch. */
+    * epoch's appended rows; the index users absorb that at read (the
+    * substring and vector families' countDistinct/min/distinct reads,
+    * the fingerprint family's candidate distinct, the names index's
+    * anti-join, the cluster state's self-healing union-find), and the
+    * two-version twins state it in their scaladocs. A family whose
+    * reads would double-count duplicates must not use this guard: the
+    * shingle family's raw intersection counts would, so ShingleIndex
+    * and the clean twin's exact index are graftsnap logs appended
+    * through Snapshots.publishEpoch, whose epoch tag sits inside the
+    * committed version. Markers are one empty file
+    * per epoch at the index root (underscore-prefixed: invisible to
+    * Spark's file listing) and survive compact/refit (republish
+    * carries them over). Serves index dirs and the twins committing
+    * TWO lake versions per epoch (cdcIngestBatch, expectIngest);
+    * one-version twins use Snapshots.publishEpoch. */
   def epochOnce(idxDir: String, epoch: Long)(append: => Unit): Unit =
     markerOnce(idxDir, s"_GRAFT_EPOCH_$epoch")(append)
 
@@ -205,23 +223,12 @@ object IndexLifecycle {
     LakeFs.write(s"$tmp/$Marker", key)
     // Re-check at publish time: a racer finishing first published an
     // equivalent index — keep theirs, never delete a complete
-    // matching index out from under its readers (TOCTOU guard).
+    // matching index out from under its readers (TOCTOU guard); a
+    // swap lost to such a racer is fine for the same reason.
     if (publishedKey(idxDir).contains(key)) { LakeFs.rmTree(tmp); return }
-    if (LakeFs.exists(idxDir)) {
-      // stale key or crashed partial build: move it ASIDE first so
-      // the published path never holds a half-deleted tree, then
-      // delete the aside copy
-      val aside = idxDir + ".old-" + ProcessHandle.current.pid
-      LakeFs.rmTree(aside)
-      if (LakeFs.rename(idxDir, aside)) LakeFs.rmTree(aside)
-      else if (publishedKey(idxDir).contains(key)) {
-        LakeFs.rmTree(tmp); return
-      }
-    }
-    if (!LakeFs.rename(tmp, idxDir)) {
-      LakeFs.rmTree(tmp) // lost the race; the winner's index must be equivalent
-      require(publishedKey(idxDir).contains(key),
-        s"index publish failed and no matching winner exists: $idxDir")
+    try swap(idxDir, tmp)
+    catch {
+      case _: RuntimeException if publishedKey(idxDir).contains(key) => ()
     }
   }
 }

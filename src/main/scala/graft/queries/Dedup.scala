@@ -603,7 +603,7 @@ object Dedup {
     // ensure the shared shingle index exists and read the
     // batch-involved pairs through dedup_incremental's own dataflow
     val batchPairs = shingleIncrementalOf(s, Tables.documents(s, dir),
-        idx, fresh = false, key = sourceKey(dir, "g3-xx64-flat"))
+        idx, fresh = false, key = sourceKey(dir, ShingleIndexFormat))
       .select(col("doc_a").as("da"), col("doc_b").as("db")).cache()
     // maintained assignment state over the indexed (old) corpus:
     // components of the index's own old-old pairs, built once
@@ -809,7 +809,7 @@ object Dedup {
     // never touches the corpus at all
     shingleIncrementalOf(s, Tables.documents(s, dir),
       Vectors.sidecarDir("shidx", dir),
-      fresh = false, key = sourceKey(dir, "g3-xx64-flat"))
+      fresh = false, key = sourceKey(dir, ShingleIndexFormat))
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
@@ -825,7 +825,7 @@ object Dedup {
     val doBuild = { (target: String) =>
       val shAll = hashedShinglesOf(docs).cache() // build + append inputs
       graft.operators.ShingleIndex.build(s, shAll.filter(!isNew), target)
-      graft.operators.ShingleIndex.append(shAll.filter(isNew), target)
+      graft.operators.ShingleIndex.append(s, shAll.filter(isNew), target, 0L)
       shAll.unpersist()
       ()
     }
@@ -922,6 +922,11 @@ object Dedup {
     * files; both r8 ADVICE findings). */
   private def sourceKey(dir: String, fmt: String): String =
     graft.operators.IndexLifecycle.sourceKey(s"$dir/documents.parquet", fmt)
+
+  /** Format tag of the shared shingle index sidecar (xxHash64 3-gram
+    * shingles, graftsnap-log layout) — bump it on any derivation or
+    * layout change, or a stale index is served. */
+  private final val ShingleIndexFormat = "g3-xx64-log"
 
   /** Materialize the (pair-table-sized) result, then drop the
     * corpus-scale caches behind it: repeated invocations (a bench

@@ -552,7 +552,8 @@ object StreamOps {
     * foreachBatch query checkpointed at `ckpt`, handing `fn` each
     * micro-batch as a plain DataFrame with its epoch id. foreachBatch
     * re-runs a failed batch with the SAME epoch id, which is what
-    * epochOnce and emitEpoch key on; the checkpoint is what makes a
+    * the epoch guards (Snapshots.publishEpoch, IndexLifecycle's
+    * epochOnce) and emitEpoch key on; the checkpoint is what makes a
     * restarted twin resume at its next epoch, so every twin keeps its
     * own, stable location. */
   private def epochSink(src: DataFrame, ckpt: String)(
@@ -601,13 +602,16 @@ object StreamOps {
     * equality with shingleIncrementalOf on the same docs, split
     * across micro-batches).
     *
+    * An index dir no batch has built yet is built by the first
+    * non-empty batch (ShingleIndex.append derives its stop list).
+    *
     * Exactly-once: the r8 "keyed on (epoch, pair)" caveat is now the
-    * implementation. The index append runs under
-    * IndexLifecycle.epochOnce (a replayed micro-batch skips it) and
-    * the pair emit is epoch-partitioned dynamic overwrite (a replayed
-    * micro-batch overwrites its own partition instead of appending
-    * duplicates) — see emitEpoch/epochOnce for the full retry
-    * matrix. */
+    * implementation. ShingleIndex.append commits each epoch's
+    * shingles and sizes once (the epoch tag sits inside each
+    * committed version, so a replay at any crash point appends
+    * nothing twice) and the pair emit is epoch-partitioned dynamic
+    * overwrite (a replayed micro-batch overwrites its own partition
+    * instead of appending duplicates). */
   def shingleIngest(s: SparkSession, docs: DataFrame, indexDir: String,
       outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
     epochSink(docs, outDir + "_ckpt")(
@@ -618,8 +622,8 @@ object StreamOps {
   private[graft] def shingleIngestBatch(s: SparkSession, batch: DataFrame,
       epoch: Long, indexDir: String, outDir: String): Unit = {
     val bsh = graft.queries.Dedup.hashedShinglesOf(batch).cache()
-    graft.operators.IndexLifecycle.epochOnce(indexDir, epoch) {
-      graft.operators.ShingleIndex.append(bsh, indexDir)
+    if (!graft.operators.ShingleIndex.append(s, bsh, indexDir, epoch)) {
+      bsh.unpersist(); return
     }
     val pairs = shingleBatchPairsOf(s, bsh, batchIds(s, bsh), indexDir)
     emitEpoch(pairs, epoch, outDir)
@@ -646,24 +650,6 @@ object StreamOps {
       ids: Seq[Long], indexDir: String): DataFrame =
     graft.queries.Dedup.shingleBatchPairs(s, indexDir, bsh,
       !col("doc_id").isInCollection(ids))
-
-  /** Append the shingled micro-batch `bsh` to the index at `indexDir`
-    * under epochOnce — or, while no index exists yet, BUILD it from
-    * the first non-empty batch (freezing the stop list there, the
-    * dedup_incremental contract; refreshing it is
-    * ShingleIndex.compact). Returns whether the index exists now: a
-    * stream whose batches have all been empty has none to read. */
-  private def appendOrBuildShingles(s: SparkSession, bsh: DataFrame,
-      epoch: Long, indexDir: String): Boolean = {
-    import graft.operators.{IndexLifecycle, LakeFs, ShingleIndex}
-    val built = LakeFs.exists(s"$indexDir/shingles")
-    if (built || !bsh.isEmpty)
-      IndexLifecycle.epochOnce(indexDir, epoch) {
-        if (built) ShingleIndex.append(bsh, indexDir)
-        else ShingleIndex.build(s, bsh, indexDir)
-      }
-    LakeFs.exists(s"$indexDir/shingles")
-  }
 
   /** Streaming ingest into the mergeable grid-histogram index
     * (operators.HistIndex): each micro-batch's bucket counts append
@@ -1232,28 +1218,28 @@ object StreamOps {
     * the batch corpus_clean query's exact schema, so a downstream
     * consumer cannot tell which path produced a row.
     *
-    * Index bootstrap: the shingle index is BUILT from the first
-    * non-empty gated batch — freezing the stop list there, the
-    * dedup_incremental contract (refreshing it is
-    * ShingleIndex.compact, an offline decision) — and appended
-    * thereafter. With micro-batches arriving in doc_id order, a
-    * one-shot ingest of the same docs emits identical rows, and a
+    * Index bootstrap: the shingle index is BUILT by the first
+    * non-empty gated batch's append — which derives the stop list
+    * there, the dedup_incremental contract (refreshing it is
+    * ShingleIndex.compact) — and appended thereafter. With
+    * micro-batches arriving in doc_id order, a one-shot ingest of the
+    * same docs emits identical rows, and a
     * single-batch ingest over a whole corpus is row-equal to the
     * registered corpus_clean query itself (both asserted in
     * StreamingSpec).
     *
-    * Exactly-once: both index appends run under
-    * IndexLifecycle.epochOnce, the emit is epoch-partitioned dynamic
+    * Exactly-once: both indexes are graftsnap logs whose appends
+    * commit through Snapshots.publishEpoch (ShingleIndex's tables
+    * under scope "shidx", the exact `(h, keeper)` log at
+    * `<exactIdx>/hashes` under scope "exact"): the epoch tag sits
+    * inside each committed version, so a replay at any crash point
+    * appends nothing twice. The emit is epoch-partitioned dynamic
     * overwrite, and the exact index stores (h, keeper) rather than a
     * bare membership set precisely so a REPLAYED epoch — whose first
     * attempt already appended this batch's new hashes — recomputes
     * identical flags: first-wins keeper resolution reads its own
-    * append as "this batch's keeper" and lands on the same verdicts.
-    * The SHINGLE append inherits epochOnce's documented residual
-    * window (append committed, marker crashed → retry re-appends;
-    * intersection counts would double) — ShingleIndex.compact
-    * repairs exactly that, so the standing compaction job is also
-    * the window's bound. */
+    * append as "this batch's keeper" and lands on the same
+    * verdicts. */
   def cleanIngest(s: SparkSession, docs: DataFrame, exactIdx: String,
       shingleIdx: String, nbModelIdx: String,
       outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
@@ -1272,7 +1258,7 @@ object StreamOps {
       epoch: Long, exactIdx: String, shingleIdx: String, nbModelIdx: String,
       outDir: String): Unit = {
     import graft.queries.{Dedup, Pipeline}
-    import graft.operators.{IndexLifecycle, LakeFs}
+    import graft.operators.{IndexLifecycle, ShingleIndex, Snapshots}
     import s.implicits._
     val b = batch.cache()
     // stateless and learned gates — corpus_clean's own projection
@@ -1280,30 +1266,25 @@ object StreamOps {
     // exact dedup against the maintained keeper index
     val hashDir = s"$exactIdx/hashes"
     val seen =
-      if (LakeFs.exists(hashDir)) s.read.schema(ExactIndexSchema).parquet(hashDir)
+      if (Snapshots.latestVersion(hashDir).isDefined)
+        s.read.schema(ExactIndexSchema)
+          .parquet(Snapshots.logDataDirs(hashDir, None): _*)
       else s.createDataFrame(s.sparkContext.emptyRDD[Row], ExactIndexSchema)
     val hashed = b.select(col("doc_id"),
       md5(lower(trim(col("text")))).as("h"))
     val batchKeeper = hashed.groupBy(col("h"))
       .agg(min(col("doc_id")).as("batch_keeper"))
-    // epochOnce's residual window (append committed, marker crashed)
-    // self-heals here: the retry's anti-join sees the first attempt's
-    // rows and appends only still-absent hashes — nothing. The
-    // batch-sized min-agg after the index join is belt-and-braces on
-    // top: even if duplicate (h, keeper) rows ever landed, the join
-    // cannot fan out into duplicate flag rows.
+    // the index holds each h once (an epoch appends only absent
+    // hashes, exactly once), so the join keeps one row per doc
     val withIdx = hashed
       .join(batchKeeper, Seq("h"))
       .join(seen.withColumnRenamed("keeper", "idx_keeper"), Seq("h"), "left")
-      .groupBy(col("doc_id"), col("h"), col("batch_keeper"))
-      .agg(min(col("idx_keeper")).as("idx_keeper"))
       .cache()
-    IndexLifecycle.epochOnce(exactIdx, epoch) {
+    Snapshots.publishEpoch(
       IndexLifecycle.laidOut(withIdx.filter(col("idx_keeper").isNull)
           .select(col("h"), col("batch_keeper").as("keeper")).distinct(),
-          ExactIndexSchema)
-        .write.mode("append").parquet(hashDir)
-    }
+        ExactIndexSchema),
+      hashDir, "exact", epoch)
     // FIRST-WINS keeper semantics (arrival order): a doc is an exact
     // dup iff its hash was already indexed by an earlier epoch (any
     // keeper) or a lower-id doc holds it within this batch — so a
@@ -1325,7 +1306,7 @@ object StreamOps {
     val bsh = Dedup.hashedShinglesOf(
       b.filter(col("doc_id").isInCollection(gated))).cache()
     val pairs =
-      if (appendOrBuildShingles(s, bsh, epoch, shingleIdx))
+      if (ShingleIndex.append(s, bsh, shingleIdx, epoch))
         shingleBatchPairsOf(s, bsh, gated, shingleIdx)
       else {
         // nothing gated yet anywhere — no index, no candidates
@@ -1378,14 +1359,14 @@ object StreamOps {
     * union-find the bounded label-pair set, and append the new remap
     * and assignment rows.
     *
-    * Exactly-once: index appends and state appends run under
-    * IndexLifecycle.epochOnce, and the state append is additionally
-    * SELF-HEALING across a torn marker: a replay resolves endpoints
-    * through the state its first attempt already appended, the
-    * union-find finds every pair already merged, and both append
-    * sets come back empty. The shingle append inherits epochOnce's
-    * residual window like every member of the family —
-    * ShingleIndex.compact repairs re-appended duplicates. */
+    * Exactly-once: ShingleIndex.append commits each epoch's shingles
+    * and sizes once (the epoch tag sits inside each committed
+    * version — the shingleIngest discipline). The state appends run
+    * under IndexLifecycle.epochOnce and are additionally SELF-HEALING
+    * across a torn marker: a replay resolves endpoints through the
+    * state its first attempt already appended, the union-find finds
+    * every pair already merged, and both append sets come back
+    * empty. */
   def clusterIngest(s: SparkSession, docs: DataFrame, indexDir: String,
       clusterDir: String): org.apache.spark.sql.streaming.StreamingQuery =
     epochSink(docs, clusterDir + "_ckpt")(
@@ -1398,7 +1379,7 @@ object StreamOps {
     import graft.operators.{IndexLifecycle, LakeFs}
     import s.implicits._
     val bsh = graft.queries.Dedup.hashedShinglesOf(batch).cache()
-    if (!appendOrBuildShingles(s, bsh, epoch, indexDir)) {
+    if (!graft.operators.ShingleIndex.append(s, bsh, indexDir, epoch)) {
       bsh.unpersist(); return
     }
     val batchPairs = shingleBatchPairsOf(s, bsh, batchIds(s, bsh), indexDir)
@@ -1554,13 +1535,13 @@ object StreamOps {
   }
 
   /** Offline compaction for the cluster state — the O(state) job the
-    * per-epoch O(batch) appends defer (ShingleIndex.compact's shape):
-    * fold the remap chain INTO the assignment rows (every doc
-    * re-labeled with its fully-resolved root) and drop remap/ — after
-    * the fold, reads resolve through an empty chain and later ingests
-    * start new, shallow chains. Published via the IndexLifecycle
-    * aside-and-rename swap so readers never see a half-folded state;
-    * clusterState before == clusterState after (spec-pinned). */
+    * per-epoch O(batch) appends defer: fold the remap chain INTO the
+    * assignment rows (every doc re-labeled with its fully-resolved
+    * root) and drop remap/ — after the fold, reads resolve through an
+    * empty chain and later ingests start new, shallow chains.
+    * Published via the IndexLifecycle aside-and-rename swap so readers
+    * never see a half-folded state; clusterState before ==
+    * clusterState after (spec-pinned). */
   def compactClusterState(s: SparkSession, clusterDir: String): Unit = {
     import graft.operators.{IndexLifecycle, LakeFs}
     if (!LakeFs.exists(s"$clusterDir/assignments")) return
@@ -1568,8 +1549,7 @@ object StreamOps {
       .select(col("doc_id"), col("cluster_id").as("lbl"))
       .cache()
     folded.count()
-    // carry the applied-epoch markers through the swap exactly like
-    // ShingleIndex compaction does (republish preserves them)
+    // republish carries the applied-epoch markers through the swap
     IndexLifecycle.republish(clusterDir) { tmp =>
       folded.coalesce(1).write.parquet(s"$tmp/assignments")
     }

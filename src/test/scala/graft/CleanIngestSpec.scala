@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.LakeFs
+import graft.operators.{LakeFs, ShingleIndex, Snapshots}
 import graft.queries.Pipeline
 import graft.streaming.StreamOps
 
@@ -29,6 +29,14 @@ class CleanIngestSpec extends AnyFunSuite {
       .collect()
       .map(r => r.getLong(0) -> r.toSeq.drop(1))
       .toMap
+
+  /** Row counts of the clean twin's index logs: exact (h, keeper),
+    * shingles, sizes — read through the logs' live versions. */
+  private def indexRows(exact: String, shingle: String): Seq[Long] = Seq(
+    spark.read.schema(StreamOps.ExactIndexSchema)
+      .parquet(Snapshots.logDataDirs(s"$exact/hashes", None): _*).count(),
+    ShingleIndex.shingles(spark, shingle).count(),
+    ShingleIndex.sizes(spark, shingle).count())
 
   test("one-shot cleaning ingest == the registered corpus_clean query") {
     val exact = "/tmp/graft_clean_oneshot_exact"
@@ -151,29 +159,26 @@ class CleanIngestSpec extends AnyFunSuite {
     }, "keep must be the gate conjunction")
 
     // exactly-once: replaying the last epoch changes nothing
-    val hashRows = spark.read.parquet(s"$exact/hashes").count()
-    val shRows = spark.read.parquet(s"$shingle/shingles").count()
+    val rows = indexRows(exact, shingle)
     StreamOps.cleanIngestBatch(spark, b2.toDF("doc_id", "text"), 1L,
       exact, shingle, mdlDir, out)
-    assert(spark.read.parquet(s"$exact/hashes").count() == hashRows,
-      "epoch replay re-appended exact hashes")
-    assert(spark.read.parquet(s"$shingle/shingles").count() == shRows,
-      "epoch replay re-appended shingles")
+    assert(indexRows(exact, shingle) == rows,
+      "epoch replay re-appended index rows (exact, shingles, sizes)")
     assert(flagRows(out) == got, "epoch replay changed the emitted flags")
 
-    // epochOnce's residual window (append committed, marker write
-    // crashed): the exact index SELF-HEALS — the retry's anti-join
-    // reads the first attempt's rows and appends nothing, so the
-    // torn-marker replay leaves both the index and the flags exactly
-    // as they were (the post-join min-agg additionally guards the
-    // flags even if duplicate (h, keeper) rows ever did land)
-    LakeFs.rmFile(s"$exact/_GRAFT_EPOCH_1")
+    // a crash between an index commit and its root hint: with every
+    // `_GRAFT_EPOCH_*` hint under both index roots deleted, the replay
+    // finds the epoch tag inside each committed version and appends
+    // nothing — no row count moves, and no read-side repair runs
+    Seq(exact, shingle).flatMap(LakeFs.leaves)
+      .filter(_.getPath.getName.startsWith("_GRAFT_EPOCH_"))
+      .foreach(st => LakeFs.rmFile(st.getPath.toString))
     StreamOps.cleanIngestBatch(spark, b2.toDF("doc_id", "text"), 1L,
       exact, shingle, mdlDir, out)
-    assert(spark.read.parquet(s"$exact/hashes").count() == hashRows,
-      "the torn-marker replay must append only still-absent hashes (none)")
+    assert(indexRows(exact, shingle) == rows,
+      "a hint-less replay re-appended index rows (exact, shingles, sizes)")
     assert(flagRows(out) == got,
-      "a torn-marker replay changed the emitted flags")
+      "a hint-less replay changed the emitted flags")
 
     // OUT-OF-ORDER arrivals: first-wins dedup, not min-id — doc 0
     // duplicates doc 4's text (kept in batch 1), doc 16 near-dups
@@ -216,7 +221,6 @@ class CleanIngestSpec extends AnyFunSuite {
   test("ingest-side index layouts read back as the schema their writer declares") {
     // a declaring reader sees a drifted writer's columns as nulls, so
     // pin what each writer lays out == what its reader declares
-    import graft.operators.ShingleIndex
     val root = "/tmp/graft_clean_layouts"
     LakeFs.rmTree(root)
     val mdl = Pipeline.nbModelOf(spark, sf)
@@ -226,14 +230,18 @@ class CleanIngestSpec extends AnyFunSuite {
     for (e <- 0L until 2L)
       StreamOps.cleanIngestBatch(spark, docs.filter(col("doc_id") % 2 === e), e,
         s"$root/exact", s"$root/shingle", mdl, s"$root/out")
-    def check(stage: String): Unit = for ((path, declared) <- Seq(
-        s"$root/shingle/shingles" -> ShingleIndex.ShinglesSchema,
-        s"$root/shingle/sizes" -> ShingleIndex.SizesSchema,
-        s"$root/shingle/stop" -> ShingleIndex.StopSchema,
-        s"$root/exact/hashes" -> StreamOps.ExactIndexSchema,
-        s"$mdl/model" -> Pipeline.NbModelSchema,
-        s"$mdl/priors" -> Pipeline.NbPriorsSchema))
-      assert(spark.read.parquet(path).schema == declared, s"$stage: $path")
+    // the index logs are read over their live version dirs (a plain
+    // read of a log root would add the `v` partition column)
+    def live(root: String) = Snapshots.logDataDirs(root, None)
+    def check(stage: String): Unit = for ((paths, declared) <- Seq(
+        live(s"$root/shingle/shingles") -> ShingleIndex.ShinglesSchema,
+        live(s"$root/shingle/sizes") -> ShingleIndex.SizesSchema,
+        live(s"$root/shingle/stop") -> ShingleIndex.StopSchema,
+        live(s"$root/exact/hashes") -> StreamOps.ExactIndexSchema,
+        Seq(s"$mdl/model") -> Pipeline.NbModelSchema,
+        Seq(s"$mdl/priors") -> Pipeline.NbPriorsSchema))
+      assert(spark.read.parquet(paths: _*).schema == declared,
+        s"$stage: $paths")
     check("appended")
     ShingleIndex.compact(spark, s"$root/shingle")
     check("compacted")

@@ -934,17 +934,98 @@ class StreamingSpec extends AnyFunSuite {
     assert(got.contains((24L, 29L)), "cross-micro-batch pair must surface")
     assert(got((1L, 24L)) == 1.0 && got((24L, 29L)) == 1.0, got)
     // foreachBatch retry: replaying the last epoch is a no-op — the
-    // epochOnce marker skips the shingle append (whose raw
-    // intersection counts would NOT absorb duplicate rows) and the
-    // epoch-partition overwrite replaces, not appends, the output
-    val shRows = spark.read.parquet(s"$idxDir/shingles").count()
+    // epoch tag inside the committed versions skips the shingle
+    // append (whose raw intersection counts would NOT absorb
+    // duplicate rows) and the epoch-partition overwrite replaces, not
+    // appends, the output
+    val shRows = graft.operators.ShingleIndex.shingles(spark, idxDir).count()
     StreamOps.shingleIngestBatch(spark, b2.toDF("doc_id", "text"), 1L,
       idxDir, outDir)
-    assert(spark.read.parquet(s"$idxDir/shingles").count() == shRows,
+    assert(graft.operators.ShingleIndex.shingles(spark, idxDir).count() == shRows,
       "epoch replay re-appended shingles")
     assert(spark.read.parquet(outDir).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap == got,
       "epoch replay changed the emitted pairs")
+  }
+
+  /** The planted shingle corpus of the tests below: near-identical
+    * A=1/B=2 (Jaccard 37/39) plus ten unrelated docs keeping their
+    * shared shingles under the hot cap. */
+  private def shingleIndexDocs: Seq[(Long, String)] = {
+    val base = (0 until 40).map(i => s"t$i")
+    Seq(1L -> base.mkString(" "),
+      2L -> (base.dropRight(1) :+ "zz").mkString(" ")) ++
+      Seq(3L, 5L, 6L, 7L, 8L, 10L, 11L, 12L, 13L, 15L).map(id =>
+        id -> (0 until 40).map(i => s"u${id}x$i").mkString(" "))
+  }
+
+  /** Every row of the shingle index at `dir`, duplicates kept. */
+  private def shingleState(dir: String) = {
+    import graft.operators.ShingleIndex
+    def rows(df: DataFrame) =
+      df.collect().map(_.toSeq.map(_.asInstanceOf[Long])).toSeq
+        .sortBy(_.mkString(","))
+    (rows(ShingleIndex.shingles(spark, dir)), rows(ShingleIndex.sizes(spark, dir)),
+      rows(ShingleIndex.stop(spark, dir)))
+  }
+
+  test("streaming shingle ingest over an unbuilt index dir builds from its first non-empty batch") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val idxDir = "/tmp/graft_shidx_boot_stream"
+    val outDir = "/tmp/graft_shidx_boot_stream_out"
+    val built = "/tmp/graft_shidx_boot_built"
+    Seq(idxDir, outDir, outDir + "_ckpt", built)
+      .foreach(graft.operators.LakeFs.rmTree)
+    // an empty batch builds nothing and emits nothing
+    StreamOps.shingleIngestBatch(spark,
+      Seq.empty[(Long, String)].toDF("doc_id", "text"), 0L, idxDir, outDir)
+    assert(graft.operators.Snapshots.latestVersion(s"$idxDir/shingles").isEmpty)
+    graft.operators.LakeFs.rmTree(idxDir)
+    val ms = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String)]
+    val q = StreamOps.shingleIngest(spark,
+      ms.toDF().toDF("doc_id", "text"), idxDir, outDir)
+    val copyOfA = Seq(24L -> shingleIndexDocs.head._2)
+    try {
+      ms.addData(shingleIndexDocs: _*); q.processAllAvailable()
+      ms.addData(copyOfA: _*); q.processAllAvailable()
+    } finally q.stop()
+    // the first batch built the index (its within-batch pair (1,2)
+    // surfaced), the second probed it
+    val got = spark.read.parquet(outDir).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(got == Set((1L, 2L), (1L, 24L), (2L, 24L)), got)
+    // the stop list is the one derived from the first batch alone
+    graft.operators.ShingleIndex.build(spark,
+      graft.queries.Dedup.hashedShinglesOf(shingleIndexDocs.toDF("doc_id", "text")),
+      built)
+    assert(shingleState(idxDir)._3 == shingleState(built)._3)
+  }
+
+  test("shingle ingest bootstrap interrupted between index tables replays to the uninterrupted state") {
+    import spark.implicits._
+    val want = "/tmp/graft_shidx_torn_want"
+    val got = "/tmp/graft_shidx_torn_got"
+    Seq(want, got, want + "_out", got + "_out").foreach(graft.operators.LakeFs.rmTree)
+    val docs = shingleIndexDocs.toDF("doc_id", "text")
+    def pairs(out: String) = spark.read.parquet(out).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    StreamOps.shingleIngestBatch(spark, docs, 0L, want, want + "_out")
+    // a plain file where one table's log goes makes that table's
+    // commit throw after the tables before it committed: sizes after
+    // shingles, stop after both
+    for (table <- Seq("sizes", "stop")) {
+      Seq(got, got + "_out").foreach(graft.operators.LakeFs.rmTree)
+      graft.operators.LakeFs.write(s"$got/$table", "")
+      intercept[Exception](
+        StreamOps.shingleIngestBatch(spark, docs, 0L, got, got + "_out"))
+      graft.operators.LakeFs.rmFile(s"$got/$table")
+      StreamOps.shingleIngestBatch(spark, docs, 0L, got, got + "_out")
+      assert(shingleState(got) == shingleState(want),
+        s"replay after a throw before $table differs from an uninterrupted run")
+      assert(pairs(got + "_out") == pairs(want + "_out"), table)
+    }
   }
 
   test("streaming substring ingest: doc store + index appends + pairs == batch incremental") {
