@@ -1003,28 +1003,42 @@ class StreamingSpec extends AnyFunSuite {
     assert(shingleState(idxDir)._3 == shingleState(built)._3)
   }
 
-  test("shingle ingest bootstrap interrupted between index tables replays to the uninterrupted state") {
+  test("shingle index bootstrap interrupted between its tables or before its hints replays to the uninterrupted state") {
     import spark.implicits._
+    import graft.operators.LakeFs
     val want = "/tmp/graft_shidx_torn_want"
     val got = "/tmp/graft_shidx_torn_got"
-    Seq(want, got, want + "_out", got + "_out").foreach(graft.operators.LakeFs.rmTree)
+    Seq(want, got, want + "_cl", got + "_cl").foreach(LakeFs.rmTree)
     val docs = shingleIndexDocs.toDF("doc_id", "text")
-    def pairs(out: String) = spark.read.parquet(out).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    StreamOps.shingleIngestBatch(spark, docs, 0L, want, want + "_out")
+    // the cluster twin bootstraps the index from its first batch
+    def ingest(dir: String): Unit =
+      StreamOps.clusterIngestBatch(spark, docs, 0L, dir, dir + "_cl")
+    def clusters(dir: String) = StreamOps.clusterState(spark, dir + "_cl")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def same(what: String): Unit = {
+      assert(shingleState(got) == shingleState(want),
+        s"replay $what differs from an uninterrupted run")
+      assert(clusters(got) == clusters(want), what)
+    }
+    ingest(want)
+    // a crash after every commit but before the root hints: the
+    // replay must find the epoch inside the committed versions
+    Seq(got, got + "_cl").foreach(LakeFs.rmTree)
+    ingest(got)
+    LakeFs.leaves(got).filter(_.getPath.getName.startsWith("_GRAFT_EPOCH_"))
+      .foreach(st => LakeFs.rmFile(st.getPath.toString))
+    ingest(got)
+    same("after a crash before the hints")
     // a plain file where one table's log goes makes that table's
     // commit throw after the tables before it committed: sizes after
     // shingles, stop after both
     for (table <- Seq("sizes", "stop")) {
-      Seq(got, got + "_out").foreach(graft.operators.LakeFs.rmTree)
-      graft.operators.LakeFs.write(s"$got/$table", "")
-      intercept[Exception](
-        StreamOps.shingleIngestBatch(spark, docs, 0L, got, got + "_out"))
-      graft.operators.LakeFs.rmFile(s"$got/$table")
-      StreamOps.shingleIngestBatch(spark, docs, 0L, got, got + "_out")
-      assert(shingleState(got) == shingleState(want),
-        s"replay after a throw before $table differs from an uninterrupted run")
-      assert(pairs(got + "_out") == pairs(want + "_out"), table)
+      Seq(got, got + "_cl").foreach(LakeFs.rmTree)
+      LakeFs.write(s"$got/$table", "")
+      intercept[Exception](ingest(got))
+      LakeFs.rmFile(s"$got/$table")
+      ingest(got)
+      same(s"after a throw before $table")
     }
   }
 
